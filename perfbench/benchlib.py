@@ -112,7 +112,6 @@ def end_to_end(raw, launch_epoch_s):
     prepares = [s["s"] for s in raw["setups_s"] if s["kind"] == "prepare"]
     warm = sum(s["s"] for s in raw["setups_s"] if s["kind"] == "warm")
     setup = raw["ready_ms"] / 1000.0 - launch_epoch_s + median(prepares) + warm
-    items = sum(o["items"] for o in ops)
     wl = raw["workload"]
     named = {}
     if wl == "crawl-rounds":
@@ -128,11 +127,17 @@ def end_to_end(raw, launch_epoch_s):
         # passes fit its window
         q_medians = [median(v) for v in per_q.values()]
         rate = len(q_medians) / sum(q_medians)
-        p50 = median(q_medians)
+        # the gated latency is the median pass over the board: the median
+        # query alone is one or two sub-second queries, too few to be steady
+        n = len(per_q)
+        p50 = median([sum(_dur(o) for o in ops[i:i + n]) for i in range(0, len(ops), n)])
         named["board_s"] = (sum(q_medians), "s", None)
-        named["board_query_s_p50"] = (p50, "s", q_medians)
+        named["board_query_s_p50"] = (median(q_medians), "s", q_medians)
     else:
-        rate = items / sum(durs)
+        # the median op's rate, not items over summed time: one slow op (a
+        # neighbour's burst on a shared host, a late JIT pass) moves a mean
+        # but not a median
+        rate = median([o["items"] / _dur(o) for o in ops])
         p50 = median(durs)
         if wl == "frontier-burst":
             named["frontier_urls_per_s"] = (rate, "urls/s", None)

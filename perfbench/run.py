@@ -26,7 +26,7 @@ import build  # noqa: E402
 WORKLOADS = ["frontier-burst", "warc-roundtrip", "webtext-board", "crawl-rounds"]
 END_TO_END = [("items_per_s", "items/s"), ("op_s_p50", "s"), ("setup_s", "s"),
               ("peak_rss_mb", "MB")]
-BOARD_QUERIES = ["q01", "f03", "f12", "d01", "s01", "t01", "m01", "x01"]
+BOARD_QUERIES = ["q01", "q04", "f03", "d01", "s01", "t01", "m01", "x01"]
 # every traced run reports all of these; one whose layer the workload does
 # not call reads 0
 PER_LAYER = (

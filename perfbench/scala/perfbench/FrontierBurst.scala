@@ -17,7 +17,7 @@ object FrontierBurst {
   val SeenModulus = 10L
   val SeenBelow = 3L
   val Cfg = Frontier.Config(defaultBudget = 64, saltBuckets = 1)
-  val WarmBatches = 5
+  val WarmBatches = 8
 
   private def canonical(urls: DataFrame): DataFrame =
     Frontier.canonicalize(urls)

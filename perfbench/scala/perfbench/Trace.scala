@@ -49,7 +49,7 @@ final class Recorder(val trace: Boolean, val runId: String) {
   def lastSpanId: Int = spans.length - 1
 
   /** Times one set-up step: "prepare" (inputs and caches, repeated so the
-    * median is stable) or "warm" (the untimed first pass). */
+    * median is stable) or "warm" (the untimed first passes). */
   def setup[T](kind: String)(body: => T): T = {
     val t0 = nowMs
     val r = body

@@ -14,7 +14,7 @@ object WarcRoundtrip {
   val Pages = 3000L
   val Hosts = 100
   val RecordsPerFile = 250
-  val WarmSets = 4
+  val WarmSets = 8
 
   def run(ctx: Main.Ctx): Map[String, Any] = {
     import ctx._

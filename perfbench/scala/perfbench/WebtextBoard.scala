@@ -4,21 +4,26 @@ import graft.SparkEntry
 
 /** webtext-board: declared queries of `SparkEntry.queries`, each fully
   * evaluated, over the fixed sf0.1-size tier that `perfbench.Tier` writes.
-  * The only workload that runs Dedup, Similarity, TextAnalysis, Multimodal
-  * and streaming; at a few cores it is dominated by per-query fixed cost.
+  * The only workload that runs Dedup, Similarity, TextAnalysis and
+  * Multimodal; at a few cores it is dominated by per-query fixed cost.
   * Row counts are checked against `SparkEntry.oracleSql` in DuckDB by
   * `run.py`, after this JVM has exited. */
 object WebtextBoard {
-  /** The board: one or more queries from every family, chosen so a warm
-    * pass fits the benchmark's per-run time (the full 62-query board takes
-    * about a minute per pass at four cores). */
+  /** The board: one or more queries from every family, chosen so several
+    * passes fit the benchmark's per-run time (the full 62-query board takes
+    * about a minute per pass at four cores). The streaming query
+    * (f12_stream_schedule) is left out: at 3.5-6 s it was half a pass and
+    * the least steady query of the board. */
   val Board: Seq[String] = Seq(
-    "q01_pricing_summary", "f03_digest_dedup", "f12_stream_schedule", "d01_exact_dedup",
+    "q01_pricing_summary", "q04_topk_orders", "f03_digest_dedup", "d01_exact_dedup",
     "s01_ann_brute", "t01_quality", "m01_media_meta", "x01_extract_conformance")
   /** Run and reported on every pass, but not counted as board ops: its
     * input is a WARC file outside the repository, so it fails wherever
     * that file is absent, whatever the program does. */
   val KnownFailing: Seq[String] = Seq("w01_warc_fixture")
+  /** Untimed passes before the timed ones: the first is cold, and the
+    * next two still run up to a fifth slower than later ones. */
+  val WarmPasses = 3
 
   def run(ctx: Main.Ctx): Map[String, Any] = {
     import ctx._
@@ -30,7 +35,7 @@ object WebtextBoard {
     def runQuery(q: String): Either[String, Long] =
       try Right(Main.evaluate(queries(q)(spark, tier)))
       catch { case e: Exception => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300)) }
-    rec.setup("warm")((Board ++ KnownFailing).foreach(runQuery))
+    rec.setup("warm")((0 until WarmPasses).foreach(_ => (Board ++ KnownFailing).foreach(runQuery)))
 
     val rows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val known = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -84,6 +84,34 @@ class Attribution(unittest.TestCase):
         self.assertAlmostEqual(sum(parts.values()), 1.0)
 
 
+class EndToEnd(unittest.TestCase):
+    def test_rate_is_the_median_ops_rate(self):
+        ops = [{"name": "batch", "start_ms": 1000.0 * i, "end_ms": 1000.0 * i + d, "items": 100}
+               for i, d in enumerate([500.0, 500.0, 400.0, 5000.0])]
+        raw = {"workload": "frontier-burst", "ops": ops, "facts": {}, "ready_ms": 2000.0,
+               "setups_s": [{"kind": "prepare", "s": 1.0}, {"kind": "warm", "s": 0.5}],
+               "peak_rss_kb": 2048}
+        gated, named = benchlib.end_to_end(raw, 1.0)
+        self.assertAlmostEqual(gated["items_per_s"][0], 200.0)  # the slow op does not count
+        self.assertAlmostEqual(gated["op_s_p50"][0], 0.5)
+        self.assertAlmostEqual(gated["setup_s"][0], 2.5)
+        self.assertEqual(named["frontier_urls_per_s"][0], gated["items_per_s"][0])
+
+    def test_board_latency_is_the_median_pass(self):
+        times = {"a": [100.0, 300.0, 200.0], "b": [1000.0, 1400.0, 1200.0]}
+        ops, t = [], 0.0
+        for i in range(3):
+            for q in ("a", "b"):
+                ops.append({"name": q, "start_ms": t, "end_ms": t + times[q][i], "items": 1})
+                t += times[q][i]
+        raw = {"workload": "webtext-board", "ops": ops, "facts": {}, "ready_ms": 0.0,
+               "setups_s": [{"kind": "prepare", "s": 1.0}], "peak_rss_kb": 1024}
+        gated, named = benchlib.end_to_end(raw, 0.0)
+        self.assertAlmostEqual(gated["op_s_p50"][0], 1.4)      # passes of 1.1, 1.7, 1.4 s
+        self.assertAlmostEqual(gated["items_per_s"][0], 2 / 1.4)
+        self.assertAlmostEqual(named["board_query_s_p50"][0], 0.7)  # between 0.2 and 1.2
+
+
 class MetricNames(unittest.TestCase):
     def test_accepts_declared_shape(self):
         for n in ("setup_s", "codec.url_normalize_ns", "board.family_q_s", "a-b.c_d", "9x"):
