@@ -154,10 +154,18 @@ object UrlNormalizer {
 
   /** RFC 3986 §3.1: schemes are case-INSENSITIVE — `HTTPS://…` is valid
     * (normalize already lowercases it; this must agree on raw input). */
-  def isValid(url: String): Boolean =
-    url != null && split(url.trim).exists { case (s, _, h, _, _, _) =>
-      val sl = s.toLowerCase
-      (sl == "http" || sl == "https") && h.nonEmpty
+  def isValid(url: String): Boolean = validHost(url) != null
+
+  /** `host(url)` when `isValid(url)`, else null — both answers from one
+    * `split` (the canonicalize kernel's per-row check). */
+  def validHost(url: String): String =
+    if (url == null) null
+    else split(url.trim) match {
+      case Some((s, _, h, _, _, _)) if h.nonEmpty && {
+            val sl = s.toLowerCase
+            sl == "http" || sl == "https"
+          } => stripTrailingDots(h.toLowerCase)
+      case _ => null
     }
 
   /** Lowercased host of a url, or "" when unparseable. */

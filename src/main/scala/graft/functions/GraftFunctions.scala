@@ -226,6 +226,16 @@ object Kernels {
   def urlHost(s: UTF8String): UTF8String =
     UTF8String.fromString(UrlNormalizer.host(s.toString))
   def urlIsValid(s: UTF8String): Boolean = UrlNormalizer.isValid(s.toString)
+  private val noUrl = new GenericArrayData(Array.empty[Any])
+  /** `url_is_valid(n) ? [(n, url_host(n))] : []` for `n = url_normalize(s)`,
+    * parsing `s` once and `n` once. */
+  def urlCanon(s: UTF8String): ArrayData = {
+    val norm = UrlNormalizer.normalize(s.toString)
+    val host = UrlNormalizer.validHost(norm)
+    if (host == null) noUrl
+    else new GenericArrayData(Array[Any](
+      InternalRow(UTF8String.fromString(norm), UTF8String.fromString(host))))
+  }
   def sha1Base32(b: Array[Byte]): UTF8String = UTF8String.fromString(Digests.sha1Base32(b))
   def sha256Base32(b: Array[Byte]): UTF8String = UTF8String.fromString(Digests.sha256Base32(b))
   def gunzip(b: Array[Byte]): Array[Byte] = HttpCodec.gunzip(b)
@@ -364,6 +374,21 @@ case class UrlIsValid(child: Expression) extends KernelUnary {
   override def nullSafeEval(v: Any): Any = Kernels.urlIsValid(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): UrlIsValid = copy(child = c)
   override def prettyName: String = "url_is_valid"
+}
+
+/** The canonicalize kernel: zero or one `struct(url_norm, host)` per url —
+  * one normalize, one validity+host parse. An array, not a nullable
+  * struct, so `inline` expands it in a `Generate` that filter pushdown
+  * cannot copy (see `Frontier.canonicalize`). Field nullability follows
+  * the input, as `url_normalize`/`url_host` do. */
+case class UrlCanon(child: Expression) extends KernelUnary {
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("url_norm", StringType, child.nullable),
+    StructField("host", StringType, child.nullable))), containsNull = false)
+  override protected def kernelCall = "graft.functions.Kernels.urlCanon(%s)"
+  override def nullSafeEval(v: Any): Any = Kernels.urlCanon(v.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): UrlCanon = copy(child = c)
+  override def prettyName: String = "url_canon"
 }
 
 /** `sha1:`-less base32 SHA-1 — the reference's digest encoding
@@ -748,6 +773,7 @@ object GraftFunctions {
   def url_normalize(c: Column): Column = col(UrlNormalize(expr(c)))
   def url_host(c: Column): Column = col(UrlHost(expr(c)))
   def url_is_valid(c: Column): Column = col(UrlIsValid(expr(c)))
+  def url_canon(c: Column): Column = col(UrlCanon(expr(c)))
 
   /** SURT (Sort-friendly URI Reordering Transform) key — the canonical key
     * real web-archive CDX indexes sort by: host labels reversed and

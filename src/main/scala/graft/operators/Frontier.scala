@@ -52,13 +52,20 @@ object Frontier {
       maxBudgetHint: Int = 0)
 
   /** Stage 1 — canonicalize: dirty url → RFC-3986 normal form, host,
-    * xxhash64 identity. Runs inside one whole-stage-codegen span (all
-    * expressions are native, incl. the custom url_* ones). */
+    * xxhash64 identity; rows whose normal form is not a valid http(s) url
+    * are dropped. Same rows and schema as
+    * `withColumn(url_norm = url_normalize(url)).filter(url_is_valid(url_norm))
+    * .withColumn(host = url_host(url_norm)).withColumn(url_hash = …)`, but
+    * that form normalizes every url TWICE: PushPredicateThroughNonJoin
+    * inlines `url_normalize` into the pushed-down Filter and the Project
+    * computes it again, then validity and host each re-parse the result.
+    * Here one `url_canon` kernel does one normalize and one parse, and
+    * `inline` expands its zero-or-one-element array in a `Generate`, which
+    * pushdown cannot duplicate and which still runs in whole-stage codegen.
+    * Validity is that of the NORMAL form, not of the raw url (they differ,
+    * e.g. on `http://./`). */
   def canonicalize(pages: DataFrame): DataFrame =
-    pages
-      .withColumn("url_norm", url_normalize(col("url")))
-      .filter(url_is_valid(col("url_norm")))
-      .withColumn("host", url_host(col("url_norm")))
+    pages.select(col("*"), inline(url_canon(col("url"))))
       .withColumn("url_hash", xxhash64(col("url_norm")))
 
   /** First-occurrence-wins within a batch: one row per key, ordered by

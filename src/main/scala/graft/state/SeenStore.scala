@@ -295,10 +295,11 @@ object SeenStore {
       *
       * Routing is SIZE-ADAPTIVE (the broadcast-join decision applied to
       * seen state): when the probe-visible banks' on-disk footprint fits
-      * `spark.graft.seenstore.directProbeMaxBytes` (default 1 GiB), the
-      * probe runs DIRECTLY over the candidates' existing partitioning —
-      * zero exchange — and each executor lazily loads the whole bank set
-      * once (a JVM-wide resolver cache de-duplicates loads across tasks).
+      * `spark.graft.seenstore.directProbeMaxBytes` (a byte string, default
+      * `1g`), the probe runs DIRECTLY over the candidates' existing
+      * partitioning — zero exchange — and each executor lazily loads the
+      * whole bank set once (a JVM-wide resolver cache de-duplicates loads
+      * across tasks).
       * Past the threshold — the north_star's 10^10-url store is ~100 GB —
       * candidates exchange once on `__seen_part` so each task loads only
       * its partitions' |seen|/parts-byte slices; leaving that exchange's
@@ -311,8 +312,8 @@ object SeenStore {
       if (ids.isEmpty) return Filtered(candidates, () => ())
       val cfg = config
       val banks = probeBanks(ids)
-      val directMax = candidates.sparkSession.conf
-        .get("spark.graft.seenstore.directProbeMaxBytes", (1L << 30).toString).toLong
+      val directMax = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        candidates.sparkSession.conf.get("spark.graft.seenstore.directProbeMaxBytes", "1g"))
       val withPart = candidates
         .withColumn("__seen_part", pmod(col("url_hash"), lit(cfg.parts)).cast("int"))
       val routed =
@@ -392,11 +393,12 @@ case class CuckooFilterAggregate(
 case class SeenContains(left: Expression, right: Expression,
                         banks: Seq[String], parts: Int)
     extends BinaryExpression {
-  // JVM-shared resolver (SketchResolver.forBanks): tasks deserialize their
-  // own copy of this expression, so a per-expression resolver would reload
-  // every touched bank per TASK — the shared cache loads each (bank,
-  // partition) blob once per executor instead (required for the direct
-  // probe, where every task touches every partition)
+  // JVM-shared resolver: the interpreted path resolves through
+  // SketchResolver.forBanks here; the codegen path ships the driver's
+  // resolver as a reference object, which every task deserializes and
+  // SketchResolver.readResolve swaps for the executor's shared one. Either
+  // way each (bank, partition) blob loads once per executor JVM, not once
+  // per task (the direct probe has every task touch every partition)
   @transient private lazy val resolver = SketchResolver.forBanks(banks, parts)
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override def nullSafeEval(part: Any, hash: Any): Any =
@@ -410,8 +412,9 @@ case class SeenContains(left: Expression, right: Expression,
   override def prettyName: String = "seen_contains"
 }
 
-/** One resolver per probe expression: lazily loads each (bank, partition)
-  * sketch/state blob once per JVM slot, lock-free reads thereafter. A bank
+/** One resolver per bank list per JVM, over banks shared between lists:
+  * each (bank, partition) sketch/state blob loads lazily once per JVM,
+  * lock-free reads thereafter. A bank
   * is a sketch directory — a compacted generation or a post-compaction
   * increment — so the per-row loop is O(active banks), O(1) after
   * `Store.compact()`, independent of how many crawl rounds ever committed.
@@ -421,45 +424,77 @@ case class SeenContains(left: Expression, right: Expression,
 object SketchResolver {
   // Keyed on the bank PATH LIST: banks are immutable once probe-visible
   // (increments commit-then-never-rewrite; compactions are new gen dirs),
-  // so a path list uniquely identifies contents. Bounded: evicting by
-  // clear() is always safe — resolvers reload lazily on demand.
+  // so a path list uniquely identifies contents. Bounded LRU: eviction is
+  // always safe (resolvers reload lazily on demand), and dropping only the
+  // least recently used keeps the live probes' banks loaded — every task
+  // resolves through here, so a clear-all would make them all reload.
+  private val MaxResolvers = 64
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Seq[String], Int), SketchResolver]()
-  def forBanks(banks: Seq[String], parts: Int): SketchResolver = {
-    if (cache.size > 64) cache.clear()
-    cache.computeIfAbsent((banks, parts),
-      { k => new SketchResolver(k._1.toArray, k._2) })
+    new java.util.LinkedHashMap[(Seq[String], Int), SketchResolver](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(Seq[String], Int), SketchResolver]): Boolean =
+        size() > MaxResolvers
+    }
+  def forBanks(banks: Seq[String], parts: Int): SketchResolver = cache.synchronized {
+    cache.computeIfAbsent((banks, parts), k => new SketchResolver(k._1.toArray, k._2))
+  }
+
+  // One loaded bank per (path, parts) per JVM, shared by every resolver
+  // whose list holds it: successive crawl rounds' lists differ only by the
+  // newest increment, so the cached resolvers share the older banks' blobs
+  // instead of each pinning its own copy. Weak values: a bank that no live
+  // resolver references is collectable.
+  private val banks = new java.util.HashMap[(String, Int), java.lang.ref.WeakReference[SeenBank]]()
+  private[state] def bank(path: String, parts: Int): SeenBank = banks.synchronized {
+    val hit = Option(banks.get((path, parts))).map(_.get).orNull
+    if (hit != null) hit
+    else {
+      banks.values.removeIf(_.get == null)
+      val b = new SeenBank(path, parts)
+      banks.put((path, parts), new java.lang.ref.WeakReference(b))
+      b
+    }
   }
 }
 
 final class SketchResolver(banks: Array[String], parts: Int) extends Serializable {
-  @transient private lazy val probes =
-    new java.util.concurrent.atomic.AtomicReferenceArray[SketchBank.Probe](banks.length * parts)
-  @transient private lazy val exact =
-    new java.util.concurrent.atomic.AtomicReferenceArray[Array[Long]](banks.length * parts)
+  // a deserialized copy (the codegen path's task closures) resolves to
+  // this JVM's shared instance and its already-loaded blobs
+  private def readResolve(): AnyRef = SketchResolver.forBanks(banks.toSeq, parts)
+  @transient private lazy val loaded = banks.map(SketchResolver.bank(_, parts))
 
   def contains(part: Int, hash: Long): Boolean = {
+    val bs = loaded
     var i = 0
-    while (i < banks.length) {
-      val idx = i * parts + part
-      var p = probes.get(idx)
-      if (p == null) {
-        probes.compareAndSet(idx, null, SketchBank.load(s"${banks(i)}/p-$part"))
-        p = probes.get(idx)
-      }
-      if (p.mightContain(hash)) {
-        // sketch maybe → exact sorted-hash state decides (no false positives)
-        var arr = exact.get(idx)
-        if (arr == null) {
-          exact.compareAndSet(idx, null,
-            SketchBank.loadHashes(s"${banks(i)}/p-$part.hashes"))
-          arr = exact.get(idx)
-        }
-        if (java.util.Arrays.binarySearch(arr, hash) >= 0) return true
-      }
+    while (i < bs.length) {
+      if (bs(i).contains(part, hash)) return true
       i += 1
     }
     false
+  }
+}
+
+/** One bank's per-partition sketch and exact sorted-hash state, each
+  * loaded on its first probe. */
+private[state] final class SeenBank(path: String, parts: Int) {
+  private val probes = new java.util.concurrent.atomic.AtomicReferenceArray[SketchBank.Probe](parts)
+  private val exact = new java.util.concurrent.atomic.AtomicReferenceArray[Array[Long]](parts)
+
+  def contains(part: Int, hash: Long): Boolean = {
+    var p = probes.get(part)
+    if (p == null) {
+      probes.compareAndSet(part, null, SketchBank.load(s"$path/p-$part"))
+      p = probes.get(part)
+    }
+    p.mightContain(hash) && {
+      // sketch maybe → exact sorted-hash state decides (no false positives)
+      var arr = exact.get(part)
+      if (arr == null) {
+        exact.compareAndSet(part, null, SketchBank.loadHashes(s"$path/p-$part.hashes"))
+        arr = exact.get(part)
+      }
+      java.util.Arrays.binarySearch(arr, hash) >= 0
+    }
   }
 }
 

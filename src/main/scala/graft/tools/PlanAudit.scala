@@ -132,6 +132,12 @@ object PlanAudit {
       p => common(p) ++ eq(p, ", Partial", 4) ++ eq(p, "BroadcastHashJoin", 1) ++
         atMost(p, "Exchange hashpartitioning", 5) ++ exchangesCarryNoPayload(p)),
 
+    Audit("f01_canonicalize",
+      "each url normalized ONCE: one url_canon kernel expanded by Generate inline — no url_normalize copied into a pushed-down Filter, no url_is_valid re-parse",
+      (s, sf) => Queries.queries("f01_canonicalize")(s, sf),
+      p => common(p) ++ eq(p, "url_canon(", 1) ++ has(p, "Generate inline(url_canon(") ++
+        atMost(p, "url_normalize(", 1) ++ hasNo(p, "url_is_valid")),
+
     Audit("f08_seen_partitioned",
       "DIRECT seen probe (state under the size gate): seen_contains fused as a narrow codegen filter with ZERO probe exchange — the only hash exchange is the first-wins window's; NO bloom subquery, NO join, NO driver-side sketch (probe runs over the COMPACTED single bank)",
       (s, sf) => Queries.queries("f08_seen_partitioned")(s, sf),

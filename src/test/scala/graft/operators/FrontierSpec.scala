@@ -150,6 +150,29 @@ class FrontierSpec extends AnyFunSuite {
     }
   }
 
+  test("one-pass canonicalize equals the normalize/validate/host composite, rows and schema") {
+    import graft.functions.GraftFunctions.{url_host, url_is_valid, url_normalize}
+    val edge = Seq(null, "", "http://./", "http://:5./", "HTTP://A.com:80/x/../y#f",
+      "  http://a.com  ", "http://[::1]:8080/", "http://user@/x", "ftp://x/", "http://a #x")
+    val dirty = spark.range(0, 100000, 1, 8)
+      .map(id => (PagesGen.dirtyUrl(id, 1000, 7L), edge.length + id)).toDF("url", "i")
+    val urls = edge.zipWithIndex.map { case (u, i) => (u, i.toLong) }.toDF("url", "i")
+      .union(dirty)
+    val composite = urls
+      .withColumn("url_norm", url_normalize(col("url")))
+      .filter(url_is_valid(col("url_norm")))
+      .withColumn("host", url_host(col("url_norm")))
+      .withColumn("url_hash", xxhash64(col("url_norm")))
+    val onePass = Frontier.canonicalize(urls)
+    assert(onePass.schema == composite.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("i").collect().toSeq
+    val got = rows(onePass)
+    assert(got == rows(composite))
+    // the edge cases themselves: only these four survive, normalized
+    assert(got.takeWhile(_.getLong(1) < edge.length).map(_.getString(2)) ==
+      Seq("http://a.com/y", "http://a.com/", "http://[::1]:8080/", "http://a /"))
+  }
+
   test("extracted text is byte-identical to the pages' text column") {
     import graft.functions.GraftFunctions._
     val bad = pagesDf

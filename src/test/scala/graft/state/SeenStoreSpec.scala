@@ -184,6 +184,72 @@ class SeenStoreSpec extends AnyFunSuite {
     f.release()
   }
 
+  test("a deserialized resolver is the JVM's shared instance") {
+    val r = SketchResolver.forBanks(Seq("/nonexistent/bank-a", "/nonexistent/bank-b"), 4)
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bos)
+    out.writeObject(r)
+    out.close()
+    val back = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bos.toByteArray)).readObject()
+    assert(back eq r)
+  }
+
+  test("resolver cache evicts the least recently used bank list, not all of them") {
+    def key(i: Int) = Seq(s"/nonexistent/lru-$i")
+    val first = SketchResolver.forBanks(key(0), 2)
+    (1 until 64).foreach(i => SketchResolver.forBanks(key(i), 2))
+    assert(SketchResolver.forBanks(key(0), 2) eq first) // now most recently used
+    SketchResolver.forBanks(key(64), 2) // 65th list
+    assert(SketchResolver.forBanks(key(0), 2) eq first)
+  }
+
+  test("codegen probe loads banks once per JVM: rows survive deleting the bank files") {
+    val dir = Files.createTempDirectory("graft-seen-once").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    store.append(spark.range(0, 3000).select(xxhash64(col("id")).as("url_hash")), 0L)
+    val cand = spark.range(0, 6000, 1, 8).select(xxhash64(col("id")).as("url_hash"))
+    def probe() = store.filterUnseen(cand).result.collect().map(_.getLong(0)).sorted.toSeq
+    val before = probe()
+    assert(before.length == 3000)
+    graft.LocalFiles.deleteRec(new java.io.File(s"$dir/inc-0/sketch"))
+    assert(probe() == before, "tasks must reuse the executor's loaded banks")
+  }
+
+  test("bank lists that share a bank share its loaded state") {
+    val dir = Files.createTempDirectory("graft-seen-shared").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    store.append(spark.range(0, 3000).select(xxhash64(col("id")).as("url_hash")), 0L)
+    store.append(spark.range(3000, 4000).select(xxhash64(col("id")).as("url_hash")), 1L)
+    val cand = spark.range(0, 6000, 1, 8).select(xxhash64(col("id")).as("url_hash"))
+    assert(store.filterUnseen(cand, maxId = Some(0L)).result.count() == 3000)
+    graft.LocalFiles.deleteRec(new java.io.File(s"$dir/inc-0/sketch"))
+    // a new list (inc-0, inc-1): inc-0 answers from the state the first
+    // probe loaded, only inc-1 loads
+    assert(store.filterUnseen(cand).result.count() == 2000)
+  }
+
+  test("directProbeMaxBytes takes byte strings: 1g probes directly, 1k routes, identical rows") {
+    val dir = Files.createTempDirectory("graft-seen-bytestr").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    store.append(spark.range(0, 3000).select(xxhash64(col("id")).as("url_hash")), 0L)
+    val cand = spark.range(0, 6000).select(xxhash64(col("id")).as("url_hash"))
+    val confKey = "spark.graft.seenstore.directProbeMaxBytes"
+    def run(gate: String): (Boolean, Seq[Long]) = {
+      spark.conf.set(confKey, gate)
+      try {
+        val df = store.filterUnseen(cand).result
+        (df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning(__seen_part"),
+          df.collect().map(_.getLong(0)).sorted.toSeq)
+      } finally spark.conf.unset(confKey)
+    }
+    val (directRouted, directRows) = run("1g")
+    val (smallRouted, smallRows) = run("1k")
+    assert(!directRouted, "1g gate: the state fits, probe directly")
+    assert(smallRouted, "1k gate: the state does not fit, route on __seen_part")
+    assert(smallRows == directRows)
+  }
+
   test("probe routing is size-adaptive: direct (no exchange) under the gate, routed over it, identical rows") {
     val dir = Files.createTempDirectory("graft-seen-route").toString
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
