@@ -4,7 +4,8 @@
 # any BENCH/SWEEP run and record the three numbers with the board.
 #
 #   cpu_single   loops/2s of a fixed integer loop on ONE process
-#   cpu_allcore  per-process average of the same loop on 32 processes
+#   cpu_allcore  per-process average of the same loop on one process per
+#                usable core (os.sched_getaffinity)
 #                (the all-core frequency + scheduler envelope; the ratio
 #                 allcore/single is the sustained all-core factor)
 #   disk_wr_mbps fdatasync-bounded sequential write MB/s to /tmp (checkpoint
@@ -31,8 +32,9 @@ def spin(dur=2.0):
 
 if __name__ == "__main__":
     single = spin()
-    with mp.Pool(32) as p:
-        allcore = sum(p.starmap(spin, [()] * 32)) / 32.0
+    cores = len(os.sched_getaffinity(0))
+    with mp.Pool(cores) as p:
+        allcore = sum(p.starmap(spin, [()] * cores)) / float(cores)
     # 1 GiB fdatasync-bounded sequential write
     t0 = time.perf_counter()
     subprocess.run(["dd", "if=/dev/zero", "of=/tmp/.canary_dd", "bs=1M",

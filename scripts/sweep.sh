@@ -35,7 +35,7 @@ fi
 out="/tmp/graft-sweep-$(basename "$sfdir")"
 rm -rf "$out"
 echo "== Spark dump: graft.Verify $sfdir -> $out"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" sbt -batch "runMain graft.Verify $sfdir $out"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" sbt -batch "runMain graft.Verify $sfdir $out"
 
 echo "== DuckDB oracle compare"
 python3 scripts/check_oracle.py "$sfdir" "$out" ${json:+"$json"}

@@ -275,7 +275,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val nPages = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAGES", "150000").toLong
     // spot-bench: comma-separated query names; skips headline + codec
     // micros (their numbers would not be comparable to a full run anyway)

@@ -4,8 +4,8 @@ import java.security.MessageDigest
 
 /** Digest helpers matching the reference's digest semantics
   * (/root/reference/utils.go:23-48): SHA-1 / SHA-256 encoded with RFC 4648
-  * standard Base32 (padded), plus SHA-256 hex. Byte-compatibility is
-  * contractual — the constants appear in fixtures (FIXTURES.md §4).
+  * standard Base32 (padded). Byte-compatibility is contractual — the
+  * constants appear in fixtures (FIXTURES.md §4).
   */
 object Digests {
   private final val B32 = "ABCDEFGHIJKLMNOPQRSTUVWXYZ234567".toCharArray
@@ -49,17 +49,8 @@ object Digests {
   def sha1Base32(bytes: Array[Byte]): String = base32(sha1(bytes))
   def sha256Base32(bytes: Array[Byte]): String = base32(sha256(bytes))
 
-  def sha256Hex(bytes: Array[Byte]): String = {
-    val d = sha256(bytes)
-    val sb = new java.lang.StringBuilder(d.length * 2)
-    d.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
-  }
-
   def sha1Base32(s: String): String =
     sha1Base32(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   def sha256Base32(s: String): String =
     sha256Base32(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  def sha256Hex(s: String): String =
-    sha256Hex(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 }

@@ -267,25 +267,87 @@ object Hashing {
     arr.map(h => java.lang.Long.toHexString(h)).mkString(",")
   }
 
+  /** A stopword table in the shape [[langId]] scans it with: language
+    * codes in ascending order, and one open-addressing token →
+    * language-bitmask table keyed by `String.hashCode`, so a token is
+    * looked up once, straight from the text's chars, whatever the number
+    * of languages. */
+  final class LangTable(stopwords: Map[String, Seq[String]]) {
+    val langs: Array[String] = stopwords.keys.toArray.sorted
+    require(langs.length <= 32, s"at most 32 languages, got ${langs.length}")
+    private val masks: Map[String, Int] =
+      langs.indices.flatMap(li => stopwords(langs(li)).map(_ -> (1 << li)))
+        .groupMapReduce(_._1)(_._2)(_ | _)
+    /** No token longer than this (in chars) can be a stopword. */
+    val maxLen: Int = masks.keys.map(_.length).maxOption.getOrElse(0)
+    private val slots = Integer.highestOneBit(math.max(1, masks.size) * 4)
+    private val keys = new Array[String](slots)
+    private val bits = new Array[Int](slots)
+    masks.foreach { case (w, m) =>
+      var i = spread(w.hashCode)
+      while (keys(i) != null) i = (i + 1) & (slots - 1)
+      keys(i) = w
+      bits(i) = m
+    }
+
+    private def spread(h: Int): Int = (h ^ (h >>> 16)) & (slots - 1)
+
+    /** Language bits of the token `s[start, end)`, whose `String.hashCode`
+      * is `h`; 0 when it is no stopword. */
+    def lookup(s: String, start: Int, end: Int, h: Int): Int = {
+      val len = end - start
+      var i = spread(h)
+      while (keys(i) != null) {
+        val k = keys(i)
+        if (k.length == len && s.regionMatches(start, k, 0, len)) return bits(i)
+        i = (i + 1) & (slots - 1)
+      }
+      0
+    }
+  }
+
+  /** Regex `\s` without UNICODE_CHARACTER_CLASS: space, \t, \n, \u000b,
+    * \f, \r. */
+  @inline private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
   /** Stopword-hit language ID over lowercase whitespace tokens: argmax hit
     * count, ties to the lexicographically greatest language code, "und"
     * when nothing hits. Must mirror TextAnalysis.stopwords + the
-    * greatest(struct(score,lang)) tie rule (the t03 DuckDB oracle). */
-  def langId(text: String, table: Array[(String, java.util.HashSet[String])]): String = {
-    val ts = tokens(text)
+    * greatest(struct(score,lang)) tie rule (the t03 DuckDB oracle). One
+    * scan of the lowercased text: the tokens are `split("\\s+")`'s, each
+    * hashed as it is scanned and looked up once, only when short enough to
+    * be a stopword. */
+  def langId(text: String, table: LangTable): String = {
+    val s = text.toLowerCase
+    val n = s.length
+    val counts = new Array[Int](table.langs.length)
+    var start = -1 // first char of the current token, -1 between tokens
+    var h = 0      // String.hashCode of s[start, i)
+    var i = 0
+    while (i <= n) {
+      val c = if (i < n) s.charAt(i) else ' '
+      if (!isSpace(c)) {
+        if (start < 0) { start = i; h = 0 }
+        h = 31 * h + c
+      } else if (start >= 0) {
+        if (i - start <= table.maxLen) {
+          var bits = table.lookup(s, start, i, h)
+          while (bits != 0) {
+            counts(Integer.numberOfTrailingZeros(bits)) += 1
+            bits &= bits - 1
+          }
+        }
+        start = -1
+      }
+      i += 1
+    }
     var bestLang = "und"
     var bestScore = 0
     var li = 0
-    while (li < table.length) {
-      val (lang, stops) = table(li)
-      var score = 0
-      var i = 0
-      while (i < ts.length) {
-        if (stops.contains(ts(i))) score += 1
-        i += 1
-      }
-      if (score > bestScore || (score == bestScore && score > 0 && lang > bestLang)) {
-        bestScore = score; bestLang = lang
+    while (li < counts.length) {
+      // languages ascend, so >= hands a tie to the greater code
+      if (counts(li) > 0 && counts(li) >= bestScore) {
+        bestScore = counts(li); bestLang = table.langs(li)
       }
       li += 1
     }

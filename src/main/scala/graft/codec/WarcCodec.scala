@@ -54,19 +54,90 @@ object WarcCodec {
 
   final class WarcFormatException(msg: String) extends RuntimeException(msg)
 
-  /** Reads one CRLF- (or LF-) terminated line as ISO-8859-1-safe bytes →
-    * String. Returns null at EOF before any byte is read. */
-  private def readLine(in: InputStream): String = {
-    val buf = new ByteArrayOutputStream(128)
-    var c = in.read()
-    if (c == -1) return null
-    while (c != -1 && c != '\n') {
-      buf.write(c)
-      c = in.read()
+  /** Buffered record input. Header lines are found by scanning this
+    * reader's own byte buffer for `\n`, and payload reads copy out of that
+    * buffer or, once it is drained, read straight into the caller's array.
+    * Every record parse goes through one of these.
+    *
+    * Each read from `in` asks for at most `chunk` bytes. With the default
+    * chunk the reader owns the rest of `in`; with `chunk = 1` it never
+    * reads past the bytes it has handed out, so `in` stays positioned
+    * right after the last record parsed. */
+  final class RecordInput(in: InputStream, chunk: Int = 1 << 16) extends InputStream {
+    require(chunk > 0, s"chunk must be positive: $chunk")
+    private var buf = new Array[Byte](math.max(chunk, 256))
+    private var pos = 0
+    private var lim = 0
+
+    /** Reads up to `chunk` more bytes after `lim`, first compacting the
+      * buffer (or doubling it, when one line fills it); false at EOF. */
+    private def fill(): Boolean = {
+      if (pos == lim) { pos = 0; lim = 0 }
+      else if (lim == buf.length) {
+        if (pos > 0) {
+          System.arraycopy(buf, pos, buf, 0, lim - pos)
+          lim -= pos
+          pos = 0
+        } else buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      }
+      val n = in.read(buf, lim, math.min(chunk, buf.length - lim))
+      if (n > 0) lim += n
+      n > 0
     }
-    val bytes = buf.toByteArray
-    val n = if (bytes.nonEmpty && bytes(bytes.length - 1) == '\r') bytes.length - 1 else bytes.length
-    new String(bytes, 0, n, UTF_8)
+
+    /** One CR?LF-terminated line, CR stripped, decoded as UTF-8; a last
+      * line without LF ends at EOF. null at EOF before any byte. */
+    private[codec] def readLine(): String = {
+      var scan = pos
+      var eof = false
+      while (!eof) {
+        while (scan < lim) {
+          if (buf(scan) == '\n') {
+            val start = pos
+            pos = scan + 1
+            return decode(start, scan)
+          }
+          scan += 1
+        }
+        val scanned = scan - pos
+        eof = !fill()
+        scan = pos + scanned
+      }
+      if (pos == lim) return null
+      val start = pos
+      pos = lim
+      decode(start, lim)
+    }
+
+    private def decode(start: Int, end: Int): String = {
+      val e = if (end > start && buf(end - 1) == '\r') end - 1 else end
+      new String(buf, start, e - start, UTF_8)
+    }
+
+    override def read(): Int =
+      if (pos < lim || fill()) { val b = buf(pos) & 0xff; pos += 1; b } else -1
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      if (len == 0) return 0
+      if (pos == lim) {
+        if (len >= chunk) return in.read(b, off, len)
+        if (!fill()) return -1
+      }
+      val n = math.min(len, lim - pos)
+      System.arraycopy(buf, pos, b, off, n)
+      pos += n
+      n
+    }
+
+    override def close(): Unit = in.close()
+  }
+
+  /** `in` itself when it is already a RecordInput; otherwise a one-byte-
+    * chunk reader over it, so a caller's plain stream is left right after
+    * the record. */
+  private def recordInput(in: InputStream): RecordInput = in match {
+    case r: RecordInput => r
+    case other => new RecordInput(other, chunk = 1)
   }
 
   private def readFully(in: InputStream, n: Long): Array[Byte] = {
@@ -83,15 +154,15 @@ object WarcCodec {
 
   /** Version line + header block + declared Content-Length; null at a
     * clean end-of-stream boundary. */
-  private def readHead(in: InputStream): (String, Map[String, String], Long) = {
-    var version = readLine(in)
+  private def readHead(in: RecordInput): (String, Map[String, String], Long) = {
+    var version = in.readLine()
     // tolerate extra blank lines between records (some writers emit them)
-    while (version != null && version.isEmpty) version = readLine(in)
+    while (version != null && version.isEmpty) version = in.readLine()
     if (version == null) return null
     if (!version.startsWith("WARC/"))
       throw new WarcFormatException(s"bad version line: '$version'")
     var headers = ListMap.empty[String, String]
-    var line = readLine(in)
+    var line = in.readLine()
     while (line != null && line.nonEmpty) {
       val idx = line.indexOf(':')
       if (idx > 0) { // malformed (no colon) header lines are dropped
@@ -99,7 +170,7 @@ object WarcCodec {
         val v = line.substring(idx + 1).trim
         headers = headers.updated(k, v)
       }
-      line = readLine(in)
+      line = in.readLine()
     }
     if (line == null) throw new EOFException("EOF inside header block")
     val cl = headers.get("Content-Length").map(_.trim.toLong).getOrElse(
@@ -108,18 +179,22 @@ object WarcCodec {
   }
 
   /** Two empty-line boundaries required (/root/reference/read.go:120-133). */
-  private def readBoundary(in: InputStream): Unit = {
+  private def readBoundary(in: RecordInput): Unit = {
     var i = 0
     while (i < 2) {
-      val b = readLine(in)
+      val b = in.readLine()
       if (b == null) throw new EOFException("early EOF at record boundary")
       if (b.nonEmpty) throw new WarcFormatException(s"non-empty record boundary: '$b'")
       i += 1
     }
   }
 
-  /** Read one record; None at a clean end-of-stream boundary. */
-  def readRecord(in: InputStream): Option[WarcRecord] = {
+  /** Read one record; None at a clean end-of-stream boundary. Pass a
+    * [[RecordInput]] to read a stream record by record with buffered
+    * header scans. */
+  def readRecord(in: InputStream): Option[WarcRecord] = readOne(recordInput(in))
+
+  private def readOne(in: RecordInput): Option[WarcRecord] = {
     val head = readHead(in)
     if (head == null) return None
     val (version, headers, cl) = head
@@ -134,12 +209,14 @@ object WarcCodec {
     * while the SHA-1 block digest accumulates on the fly, so records
     * larger than the heap — or than the 2 GB array cap that bounds
     * `readRecord` — verify and extract in bounded memory. Caller must
-    * `payload.close()` each record. */
+    * `payload.close()` each record. As with `readRecord`, pass a
+    * [[RecordInput]] for buffered header scans. */
   def readRecordSpooled(
       in: InputStream,
       threshold: Int = Spool.DefaultThreshold,
       spoolDir: Option[java.nio.file.Path] = None): Option[SpooledWarcRecord] = {
-    val head = readHead(in)
+    val input = recordInput(in)
+    val head = readHead(input)
     if (head == null) return None
     val (version, headers, cl) = head
     val payload = new SpooledPayload(threshold, spoolDir)
@@ -147,31 +224,30 @@ object WarcCodec {
     val buf = new Array[Byte](64 << 10)
     var remaining = cl
     while (remaining > 0) {
-      val r = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
+      val r = input.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
       if (r == -1) throw new EOFException(
         s"early EOF: got ${cl - remaining} of $cl payload bytes")
       sha1.update(buf, 0, r)
       payload.write(buf, 0, r)
       remaining -= r
     }
-    readBoundary(in)
+    readBoundary(input)
     Some(SpooledWarcRecord(version, headers, payload, sha1.digest()))
   }
 
-  /** Parse a whole stream into records. Buffers the input once — the
-    * header scanner reads byte-at-a-time, which must never hit the
-    * decompressor directly. */
+  /** Parse a whole stream into records through one [[RecordInput]]:
+    * header lines are scanned inside its 64 KB buffer, so the
+    * decompressor below sees only bulk reads. */
   def readAll(in: InputStream): Vector[WarcRecord] = {
-    val buffered = in match {
-      case b: java.io.BufferedInputStream => b
-      case b: java.io.ByteArrayInputStream => b: InputStream
-      case other => new java.io.BufferedInputStream(other, 1 << 16)
+    val input = in match {
+      case r: RecordInput => r
+      case other => new RecordInput(other)
     }
     val out = Vector.newBuilder[WarcRecord]
-    var r = readRecord(buffered)
+    var r = readOne(input)
     while (r.isDefined) {
       out += r.get
-      r = readRecord(buffered)
+      r = readOne(input)
     }
     out.result()
   }
@@ -203,10 +279,10 @@ object WarcCodec {
     if (!h.contains("WARC-Date")) h = h.updated("WARC-Date", formatRfc3339Nano(now))
     if (!h.contains("WARC-Type")) h = h.updated("WARC-Type", "resource")
     if (!h.contains("WARC-Record-ID")) {
-      val seed = Digests.sha1(rec.content ++ h.toSeq.sorted.mkString("|").getBytes(UTF_8))
-      val hex = seed.take(16).map(b => f"${b & 0xff}%02x").mkString
-      val uuid = s"${hex.substring(0, 8)}-${hex.substring(8, 12)}-${hex.substring(12, 16)}-${hex.substring(16, 20)}-${hex.substring(20, 32)}"
-      h = h.updated("WARC-Record-ID", s"<urn:uuid:$uuid>")
+      val sha1 = java.security.MessageDigest.getInstance("SHA-1")
+      sha1.update(rec.content)
+      sha1.update(h.toSeq.sorted.mkString("|").getBytes(UTF_8))
+      h = h.updated("WARC-Record-ID", urnUuid(sha1.digest()))
     }
     h = h.updated("Content-Length", rec.content.length.toString)
     if (!h.contains("WARC-Block-Digest"))
@@ -219,25 +295,41 @@ object WarcCodec {
     * capture always gets the same `<urn:uuid:…>`, so a revisit record can
     * compute its first capture's `WARC-Refers-To` id
     * (/root/reference/dialer.go:521-523) without re-reading that record. */
-  def recordIdFor(targetUri: String, warcDate: String): String = {
-    val seed = Digests.sha1(s"record-id|$targetUri|$warcDate".getBytes(UTF_8))
-    val hex = seed.take(16).map(b => f"${b & 0xff}%02x").mkString
-    s"<urn:uuid:${hex.substring(0, 8)}-${hex.substring(8, 12)}-${hex.substring(12, 16)}-${hex.substring(16, 20)}-${hex.substring(20, 32)}>"
+  def recordIdFor(targetUri: String, warcDate: String): String =
+    urnUuid(Digests.sha1(s"record-id|$targetUri|$warcDate".getBytes(UTF_8)))
+
+  private final val HexDigits = "0123456789abcdef".toCharArray
+
+  /** `<urn:uuid:…>` of the first 16 bytes of `seed`: lowercase hex in
+    * 8-4-4-4-12 groups. */
+  private def urnUuid(seed: Array[Byte]): String = {
+    val sb = new java.lang.StringBuilder(47).append("<urn:uuid:")
+    var i = 0
+    while (i < 16) {
+      if (i == 4 || i == 6 || i == 8 || i == 10) sb.append('-')
+      val b = seed(i) & 0xff
+      sb.append(HexDigits(b >>> 4)).append(HexDigits(b & 0xf))
+      i += 1
+    }
+    sb.append('>').toString
   }
+
+  private val SecondsUtc = java.time.format.DateTimeFormatter
+    .ofPattern("uuuu-MM-dd'T'HH:mm:ss")
+    .withZone(java.time.ZoneOffset.UTC)
 
   /** Go RFC3339Nano: fractional seconds with trailing zeros trimmed, no
     * dot when the fraction is zero (SURVEY.md F6). */
   def formatRfc3339Nano(t: Instant): String = {
-    val base = java.time.format.DateTimeFormatter
-      .ofPattern("uuuu-MM-dd'T'HH:mm:ss")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(t)
-    val nanos = t.getNano
-    if (nanos == 0) base + "Z"
-    else {
-      var frac = f"$nanos%09d"
-      while (frac.endsWith("0")) frac = frac.substring(0, frac.length - 1)
-      s"$base.${frac}Z"
-    }
+    val base = SecondsUtc.format(t)
+    var frac = t.getNano
+    if (frac == 0) return base + "Z"
+    var digits = 9
+    while (frac % 10 == 0) { frac /= 10; digits -= 1 }
+    val sb = new java.lang.StringBuilder(base.length + 11).append(base).append('.')
+    val s = Integer.toString(frac)
+    var pad = digits - s.length
+    while (pad > 0) { sb.append('0'); pad -= 1 }
+    sb.append(s).append('Z').toString
   }
 }

@@ -202,12 +202,7 @@ object Kernels {
   }
 
   // language table shared by every LangId call in the JVM (built once)
-  private lazy val langTable: Array[(String, java.util.HashSet[String])] =
-    graft.operators.TextAnalysis.stopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
-      val s = new java.util.HashSet[String]()
-      ws.foreach(s.add)
-      (l, s)
-    }.toArray
+  private lazy val langTable = new Hashing.LangTable(graft.operators.TextAnalysis.stopwords)
 
   private lazy val allStops: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()

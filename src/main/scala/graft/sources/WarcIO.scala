@@ -2,7 +2,9 @@ package graft.sources
 
 import graft.codec.{Codecs, Digests, HttpCodec, WarcCodec, WarcRecord}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, GlobFilter, Path}
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Instant
@@ -20,8 +22,8 @@ import java.time.Instant
   *    (/root/reference/write.go:118-145)
   *  - rotation at `recordsPerFile` (the size-based rotation analog)
   *
-  * Read side: multi-file parallel scan (one task per file via Spark's
-  * binaryFile source) + the byte-exact record parser (S1-S3).
+  * Read side: multi-file parallel scan (files balanced over tasks by
+  * bytes, see `readRecords`) + the byte-exact record parser (S1-S3).
   */
 object WarcIO {
 
@@ -241,29 +243,39 @@ object WarcIO {
       .withColumn("lang", graft.operators.TextAnalysis.langId(col("text")))
   }
 
-  /** Parallel WARC scan: one task per file, *streaming* parse — only file
-    * paths go through the DataFrame; each task opens its file as a stream
-    * and emits records incrementally, so a 1 GB WARC never materializes as
+  /** Parallel WARC scan with a *streaming* parse: only file paths are
+    * planned up front; each task opens its files as streams and
+    * emits records incrementally, so a 1 GB WARC never materializes as
     * one on-heap array. Compression is sniffed from magic bytes, never the
-    * filename (gzip/zstd/zstd+dict/bzip2/xz). */
+    * filename (gzip/zstd/zstd+dict/bzip2/xz).
+    *
+    * Files are listed as the `binaryFile` source lists them with
+    * `pathGlobFilter` `*.warc*`: the files directly in `dir`, skipping
+    * names that start with `_` or `.`. The scan runs `max(defaultParallelism,
+    * ceil(bytes / spark.sql.files.maxPartitionBytes))` tasks, at most one
+    * per file, and hands out files largest first, each to the task with
+    * the fewest bytes so far. Tasks open files through the session's
+    * Hadoop configuration, shipped once per scan. An empty listing gives
+    * an empty frame with the same schema. */
   def readRecords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val paths = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .load(dir)
-      .select(col("path"))
-      .as[String]
-    paths.mapPartitions { it =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      it.flatMap { path =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        val raw = p.getFileSystem(conf).open(p)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val files = listWarcFiles(root.getFileSystem(hadoopConf), root)
+      .map(st => (st.getPath.toString, st.getLen))
+    val tasks = planReadTasks(files, spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    spark.sparkContext.parallelize(tasks.toSeq, math.max(1, tasks.length)).mapPartitions { it =>
+      it.flatMap(_.iterator).flatMap { path =>
+        val p = new Path(path)
+        val raw = p.getFileSystem(conf.value.value).open(p)
         val in = Codecs.sniffStream(new java.io.BufferedInputStream(raw, 1 << 16))
         // streaming record iterator: one record in memory at a time. The
         // stream must be released on EVERY exit path — clean exhaustion, a
         // downstream limit/take that abandons the iterator mid-file, or task
         // failure — so closing is tied to task completion, not iteration.
-        val bin = new java.io.BufferedInputStream(in, 1 << 16)
+        val bin = new WarcCodec.RecordInput(in)
         var closed = false
         def closeOnce(): Unit = if (!closed) { closed = true; bin.close() }
         Option(org.apache.spark.TaskContext.get())
@@ -287,5 +299,43 @@ object WarcIO {
       }
     }.toDF("path", "version", "warc_type", "target_uri", "warc_date",
       "content_length", "block_digest", "computed_digest", "headers", "content")
+  }
+
+  /** The `*.warc*` files directly in `root` (or `root` itself, if it is
+    * one such file), as the `binaryFile` source lists them with that
+    * `pathGlobFilter`: hidden names — a leading `.`, a leading `_` without
+    * `=` — and in-flight `._COPYING_` copies are skipped. Like
+    * `binaryFile` on a directory without `k=v` partition subdirectories,
+    * the listing does not descend into subdirectories. */
+  private[sources] def listWarcFiles(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    val glob = new GlobFilter("*.warc*")
+    fs.listStatus(root).toSeq.filter { st =>
+      val name = st.getPath.getName
+      val hidden = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+      st.isFile && !hidden && glob.accept(st.getPath)
+    }
+  }
+
+  /** Groups (path, bytes) files into read tasks: `max(minTasks,
+    * ceil(total / maxPartitionBytes))` of them, capped at the file count,
+    * filled largest file first, each file to the task with the fewest
+    * bytes so far (ties to the lower task index). */
+  private[sources] def planReadTasks(files: Seq[(String, Long)], minTasks: Int,
+                                     maxPartitionBytes: Long): Array[Array[String]] = {
+    if (files.isEmpty) return Array.empty
+    val total = files.map(_._2).sum
+    val n = math.min(files.length.toLong,
+      math.max(minTasks.toLong, (total + maxPartitionBytes - 1) / maxPartitionBytes)).toInt
+    val groups = Array.fill(n)(Array.newBuilder[String])
+    // (bytes so far, task index), least loaded first
+    val queue = new java.util.PriorityQueue[(Long, Int)](n, Ordering[(Long, Int)])
+    (0 until n).foreach(t => queue.add((0L, t)))
+    files.sortBy { case (path, len) => (-len, path) }.foreach { case (path, len) =>
+      val (load, t) = queue.poll()
+      groups(t) += path
+      queue.add((load + len, t))
+    }
+    groups.map(_.result())
   }
 }

@@ -14,7 +14,7 @@ object F07Prof {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val passes = if (args.length > 1) args(1).toInt else 3
     val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt))
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_PROF_CONF="k=v,k=v": runtime conf overrides for A/B probes
     sys.env.get("GRAFT_PROF_CONF").foreach(_.split(",").foreach { kv =>

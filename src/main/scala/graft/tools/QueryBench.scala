@@ -12,7 +12,7 @@ object QueryBench {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = GraftSession.local(cpus)
     // GRAFT_NO_AQE=1: quantify AQE's per-stage replan overhead on a query
     // (diagnostic only — the engine default keeps AQE on)

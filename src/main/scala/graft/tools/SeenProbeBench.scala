@@ -14,7 +14,7 @@ object SeenProbeBench {
   def main(args: Array[String]): Unit = {
     val urlsPerInc = args.headOption.map(_.toLong).getOrElse(200000L)
     val nCand = if (args.length > 1) args(1).toLong else 2000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = GraftSession.local(cpus)
 
     val dirA = java.nio.file.Files.createTempDirectory("graft-probe-chain").toString

@@ -18,8 +18,8 @@ object WarcTool {
   /** Magic-byte sniffing — a mis-named or foreign WARC (gzip/zstd/bzip2/xz)
     * opens correctly regardless of extension
     * (/root/reference/decompression-reader.go:28-66). */
-  private def open(path: String): java.io.InputStream =
-    Codecs.sniffStream(new java.io.BufferedInputStream(new FileInputStream(path), 1 << 16))
+  private def open(path: String): WarcCodec.RecordInput = new WarcCodec.RecordInput(
+    Codecs.sniffStream(new java.io.BufferedInputStream(new FileInputStream(path), 1 << 16)))
 
   /** Filename for an extracted payload, reference semantics
     * (/root/reference/cmd/extract.go:116-140): `Content-Disposition`

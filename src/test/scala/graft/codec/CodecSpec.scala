@@ -13,10 +13,6 @@ class DigestsSpec extends AnyFunSuite {
     assert(Digests.sha256Base32("hello world") ==
       "XFGSPOMTJU7ARJJOKLL5U7NL7LCIJ37DPJJYB3UQRD32ZYXPZXUQ====")
   }
-  test("sha256 hex of 'hello world' matches reference golden") {
-    assert(Digests.sha256Hex("hello world") ==
-      "b94d27b9934d3e08a52e52d7da7dabfac484efe37a5380ee9088f7ace2efcde9")
-  }
   test("empty payload sha1 base32 is the dedupe exemption sentinel") {
     assert(Digests.sha1Base32("") == Digests.EmptySha1Base32)
   }

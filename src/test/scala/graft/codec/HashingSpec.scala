@@ -60,4 +60,32 @@ class HashingSpec extends AnyFunSuite {
     }
     assert(Hashing.cosineF32(a, b) == dot / (math.sqrt(na) * math.sqrt(nb)))
   }
+
+  test("langId equals the split-and-count form on random stopword soups") {
+    val stopwords = graft.operators.TextAnalysis.stopwords
+    val table = new Hashing.LangTable(stopwords)
+    // the four-pass form the one-pass scan replaced
+    def splitAndCount(text: String): String = {
+      val ts = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      var best = "und"
+      var bestScore = 0
+      stopwords.keys.toSeq.sorted.foreach { l =>
+        val score = ts.count(stopwords(l).contains)
+        if (score > bestScore || (score == bestScore && score > 0 && l > best)) {
+          bestScore = score; best = l
+        }
+      }
+      best
+    }
+    val words = stopwords.values.flatten.toSeq ++
+      Seq("THE", "Die", "LES", "nichts", "théâtre", "x", "", "\u0130st", "\u03a3")
+    val seps = Seq(" ", "\t", "\n", "\u000b", "\f", "\r\n", "  ", "\u00a0", "\u2003", ".", "")
+    val rnd = new scala.util.Random(11)
+    (0 until 5000).foreach { _ =>
+      val text = (0 until rnd.nextInt(30)).map { _ =>
+        words(rnd.nextInt(words.length)) + seps(rnd.nextInt(seps.length))
+      }.mkString
+      assert(Hashing.langId(text, table) == splitAndCount(text), s"'$text'")
+    }
+  }
 }

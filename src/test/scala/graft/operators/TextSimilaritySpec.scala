@@ -138,6 +138,27 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(mism == 0L, "kernel and declarative langId must agree incl. tie rules")
   }
 
+  test("langId kernel equals the declarative form on adversarial whitespace, case and ties") {
+    val texts = Seq(
+      "the\tand\u000bof\fto\r\nin le", // every regex-\s separator
+      "the\u00a0and\u00a0of le la", // NBSP is not \s: one token, fr wins
+      "the\u2003and\u2003of le la", // EM SPACE neither
+      "THE AND OF LE", "DER D\u0130E DAS \u0130ST THE", "\u0130 the",
+      "the le", "der the", "the le der これ", "le la der die", // ties
+      "これ は ペン です", "これ\tです\nそれ the and",
+      "", " ", " \t\n\r\f\u000b ", "\u00a0", "  the  and  ",
+      "nicht nichts nicht. nicht", "zzz qqq")
+    val out = texts.zipWithIndex.toDF("text", "i")
+      .select(col("i"), TextAnalysis.langId(col("text")).as("a"),
+        TextAnalysis.langIdDeclarative(col("text")).as("b"))
+      .as[(Int, String, String)].collect().sortBy(_._1)
+    out.foreach { case (i, a, b) => assert(a == b, s"text ${i}: '${texts(i)}'") }
+    val want = Map(0 -> "en", 1 -> "fr", 2 -> "fr", 3 -> "en", 6 -> "fr", 7 -> "en",
+      8 -> "ja", 9 -> "fr", 10 -> "ja", 11 -> "ja", 12 -> "und", 13 -> "und",
+      14 -> "und", 15 -> "und", 16 -> "en", 17 -> "de", 18 -> "und")
+    want.foreach { case (i, l) => assert(out(i)._2 == l, s"text $i: '${texts(i)}'") }
+  }
+
   test("fingerprint is deterministic and collision-resistant on distinct docs") {
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog near the river bank"),

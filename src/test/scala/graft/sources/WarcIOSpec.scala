@@ -190,4 +190,128 @@ class WarcIOSpec extends AnyFunSuite {
     assert(wi("WARC-Filename") == f.getName)
     assert(wi("Content-Type") == "application/warc-fields")
   }
+
+  // --- read listing and task planning ---------------------------------------
+
+  /** Writes `n` response records of seeded pages to `file` as members of
+    * `compression`. */
+  private def writeWarc(file: java.io.File, n: Int, seed: Long,
+                        compression: graft.codec.Codecs.Compression): Unit = {
+    import graft.codec.{Codecs, WarcCodec}
+    file.getParentFile.mkdirs()
+    val out = new java.io.FileOutputStream(file)
+    try {
+      val w = Codecs.memberWriter(out, compression)
+      (0L until n.toLong).foreach { i =>
+        val p = PagesGen.genPage(i, n.toLong, 5, seed)
+        w.writeMember(WarcCodec.serialize(WarcIO.pageToRecord(p.url, p.warc_ts, p.html)))
+      }
+      w.close()
+    } finally out.close()
+  }
+
+  test("readRecords lists the files binaryFile lists with the *.warc* glob") {
+    import graft.codec.Codecs
+    val dir = Files.createTempDirectory("graft-list").toFile
+    writeWarc(new java.io.File(dir, "a.warc.gz"), 3, 1L, Codecs.GzipCompression)
+    writeWarc(new java.io.File(dir, "b.warc.zst"), 4, 2L, Codecs.ZstdCompression())
+    writeWarc(new java.io.File(dir, "c.warc"), 5, 3L, Codecs.NoCompression)
+    // binaryFile does not descend into a subdirectory that is not a k=v
+    // partition, so neither do we: these files are never opened
+    for (junk <- Seq("_x.warc.gz", ".x.warc.gz", "notes.txt", "f.warc.gz._COPYING_",
+                     "sub/d.warc.gz", "sub/deeper/e.warc", "x.warc.d/f.warc")) {
+      val f = new java.io.File(dir, junk)
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, "not a warc".getBytes("UTF-8"))
+    }
+    new java.io.File(dir, "emptysub").mkdirs()
+    val viaBinaryFile = spark.read.format("binaryFile").option("pathGlobFilter", "*.warc*")
+      .load(dir.getPath).select("path").as[String].collect().toSet
+    val back = WarcIO.readRecords(spark, dir.getPath).cache()
+    assert(back.select("path").distinct().as[String].collect().toSet == viaBinaryFile)
+    assert(viaBinaryFile.map(_.split('/').last) == Set("a.warc.gz", "b.warc.zst", "c.warc"))
+    assert(back.count() == 12L)
+    assert(back.filter(col("block_digest") =!= col("computed_digest")).count() == 0L)
+    back.unpersist()
+    // a file given as the path is read on its own
+    val one = WarcIO.readRecords(spark, new java.io.File(dir, "c.warc").getPath)
+    assert(one.count() == 5L)
+  }
+
+  test("an empty directory reads as an empty frame with the same schema") {
+    import graft.codec.Codecs
+    val empty = Files.createTempDirectory("graft-empty").toFile
+    new java.io.File(empty, "sub").mkdirs()
+    val full = Files.createTempDirectory("graft-full").toFile
+    writeWarc(new java.io.File(full, "a.warc.gz"), 2, 1L, Codecs.GzipCompression)
+    val none = WarcIO.readRecords(spark, empty.getPath)
+    assert(none.count() == 0L)
+    assert(none.schema == WarcIO.readRecords(spark, full.getPath).schema)
+    assert(WarcIO.recordsToPages(none).count() == 0L)
+  }
+
+  test("read tasks: max(defaultParallelism, bytes / maxPartitionBytes), capped at files") {
+    val sizes = Seq(90L, 70L, 60L, 50L, 40L, 35L, 30L, 20L, 10L, 5L)
+    val files = sizes.zipWithIndex.map { case (len, i) => (s"f$i", len) }
+    def loads(tasks: Array[Array[String]]) =
+      tasks.map(_.map(p => sizes(p.drop(1).toInt)).sum)
+    def check(tasks: Array[Array[String]], n: Int, of: Seq[(String, Long)] = files): Unit = {
+      assert(tasks.length == n)
+      assert(tasks.flatten.sorted.toSeq == of.map(_._1).sorted, "every file exactly once")
+      assert(tasks.forall(_.nonEmpty))
+      // largest first to the least-loaded task: loads differ by at most
+      // the largest file
+      assert(loads(tasks).max - loads(tasks).min <= sizes.max)
+    }
+    check(WarcIO.planReadTasks(files, 4, 1L << 30), 4)        // parallelism floor
+    check(WarcIO.planReadTasks(files, 4, 100L), 5)            // ceil(410 / 100)
+    check(WarcIO.planReadTasks(files, 2, 60L), 7)             // ceil(410 / 60)
+    check(WarcIO.planReadTasks(files, 4, 1L), 10)             // capped at the file count
+    check(WarcIO.planReadTasks(files.take(3), 4, 1L << 30), 3, files.take(3))
+    assert(WarcIO.planReadTasks(Nil, 4, 1L).isEmpty)
+    // 10 files over 4 tasks: 90+20 | 70+30 | 60+35+5 | 50+40+10
+    assert(loads(WarcIO.planReadTasks(files, 4, 1L << 30)).toSeq == Seq(110L, 100L, 100L, 100L))
+
+    import graft.codec.Codecs
+    val dir = Files.createTempDirectory("graft-tasks").toFile
+    (0 until 6).foreach(i =>
+      writeWarc(new java.io.File(dir, s"w$i.warc.gz"), 2 + i, i.toLong, Codecs.GzipCompression))
+    val par = spark.sparkContext.defaultParallelism
+    assert(WarcIO.readRecords(spark, dir.getPath).rdd.getNumPartitions == math.min(6, par))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1k") // every file is over 1 KB: one task per file
+    try assert(WarcIO.readRecords(spark, dir.getPath).rdd.getNumPartitions == 6)
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("read tasks open files through the session's Hadoop configuration") {
+    import graft.codec.Codecs
+    val dir = Files.createTempDirectory("graft-scheme").toFile
+    writeWarc(new java.io.File(dir, "a.warc.gz"), 7, 1L, Codecs.GzipCompression)
+    writeWarc(new java.io.File(dir, "b.warc.zst"), 5, 2L, Codecs.ZstdCompression())
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftwarc.impl", classOf[WarcIOSpec.SchemeFs].getName)
+    // uncached, so a task's FileSystem comes from the configuration it was
+    // given, not from the instance the listing already made
+    hc.setBoolean("fs.graftwarc.impl.disable.cache", true)
+    try {
+      val back = WarcIO.readRecords(spark, s"graftwarc://${dir.getPath}")
+      val paths = back.select("path").distinct().as[String].collect()
+      assert(paths.length == 2 && paths.forall(_.startsWith("graftwarc:")))
+      assert(back.count() == 12L)
+    } finally {
+      hc.unset("fs.graftwarc.impl")
+      hc.unset("fs.graftwarc.impl.disable.cache")
+    }
+  }
+}
+
+object WarcIOSpec {
+  /** The local filesystem under a scheme only a configuration that names
+    * this class can resolve. */
+  class SchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("graftwarc:///")
+    override def getScheme: String = "graftwarc"
+  }
 }
