@@ -28,6 +28,8 @@ object Crawl {
   final case class RoundOutput(
       fetched: DataFrame,
       nextFrontier: DataFrame,
+      // the politeness carryover part of nextFrontier
+      deferred: DataFrame,
       newSeen: DataFrame,
       counters: Map[String, Long],
       release: () => Unit)
@@ -127,15 +129,7 @@ object Crawl {
       case None => Frontier.digestDedup(fetched0, cfg, captureTsCol = "page_ts")
     }).persist(StorageLevel.MEMORY_AND_DISK)
 
-    // link discovery from non-revisit fetches; discovery recency = the
-    // linking page's capture time
-    val links = fetched
-      .filter(!col("is_revisit"))
-      .select(
-        explode(expr("regexp_extract_all(extracted_text, '<a href=\"([^\"]+)\"', 1)")).as("url"),
-        (col("depth") + 1).as("depth"),
-        col("page_ts").as("warc_ts"))
-    val nextFrontier = links.unionByName(deferred)
+    val nextFrontier = links(fetched).unionByName(deferred)
 
     val newSeen = scheduled.select(col("url_hash"), col("url_norm"))
 
@@ -147,8 +141,18 @@ object Crawl {
       allowed.unpersist(); scheduled.unpersist(); fetched.unpersist()
       filtered.release()
     }
-    RoundOutput(fetched, nextFrontier, newSeen, counters, release)
+    RoundOutput(fetched, nextFrontier, deferred, newSeen, counters, release)
   }
+
+  /** Link discovery from a round's non-revisit fetches; discovery recency =
+    * the linking page's capture time. */
+  private def links(fetched: DataFrame): DataFrame =
+    fetched
+      .filter(!col("is_revisit"))
+      .select(
+        explode(expr("regexp_extract_all(extracted_text, '<a href=\"([^\"]+)\"', 1)")).as("url"),
+        (col("depth") + 1).as("depth"),
+        col("page_ts").as("warc_ts"))
 
   /** Run `maxRounds` rounds from a seed list. When `stateDir` is given, the
     * seen set grows by O(|new|) append-only increments (SeenStore) and the
@@ -170,8 +174,7 @@ object Crawl {
       digestIndex: Option[DigestIndex.Ref] = None): CrawlResult = {
     import spark.implicits._
 
-    val store = stateDir.map(d => SeenStore(d + "/seen",
-      SeenStore.Config(cfg.seenParts, cfg.seenFpp, cfg.seenSketch)))
+    val store = stateDir.map(d => SeenStore(d + "/seen", SeenStore.Config(cfg.seenParts)))
     val frontierTable = stateDir.map(_ + "/frontier")
 
     // resume point: largest round present in BOTH the frontier snapshots
@@ -253,6 +256,12 @@ object Crawl {
         }
         val counters = countersFromObs(obs.get)
         allCounters :+= counters
+        // the next frontier's links come from the PINNED captures: with a
+        // digest index, out.fetched's plan reads the index table, and the
+        // append below makes Spark re-cache it over an index that already
+        // holds this round's own captures — every capture would turn into
+        // a CDX revisit and its links would never be followed
+        val nextFrontier = links(roundFetched).unionByName(out.deferred)
         // optional archival sink: the round's captures as rotated WARC
         // (responses + truncated revisit records, K3 semantics)
         warcDir.foreach(d =>
@@ -277,7 +286,7 @@ object Crawl {
         digestIndex.foreach(DigestIndex.append(roundFetched, _, r.toLong))
         (store, frontierTable) match {
           case (Some(st), Some(ft)) =>
-            val snap = TableIO.commitAs(out.nextFrontier, ft, r.toLong, Map("round" -> r.toLong))
+            val snap = TableIO.commitAs(nextFrontier, ft, r.toLong, Map("round" -> r.toLong))
             frontierCount = snap.rowCount // manifest metadata, no extra scan
             st.append(out.newSeen, r.toLong, counters)
             // periodic log-structured compaction keeps the probe chain O(1)
@@ -299,7 +308,7 @@ object Crawl {
             val stObs = org.apache.spark.sql.Observation()
             val ck = out.newSeen
               .select(lit(1).as("__t"), col("url_hash"), col("url_norm"))
-              .unionByName(out.nextFrontier.select(lit(2).as("__t"), col("url"),
+              .unionByName(nextFrontier.select(lit(2).as("__t"), col("url"),
                 col("depth"), col("warc_ts")), allowMissingColumns = true)
               .observe(stObs, count(when(col("__t") === 2, 1)).as("nf"))
               .localCheckpoint(true)

@@ -34,8 +34,6 @@ object Frontier {
       saltBuckets: Int = 1,
       sizeThreshold: Long = 2048L,
       seenParts: Int = 64,
-      seenFpp: Double = 0.01,
-      seenSketch: String = "bloom",
       // SeenStore.compact() cadence in crawl rounds: every k-th round the
       // probe chain collapses back to one bank, keeping the per-candidate
       // seen probe O(1) in crawl rounds (≤ k banks ever visible). 0 = never.
@@ -80,11 +78,12 @@ object Frontier {
     * exact left-anti join (Catalyst picks the join strategy; AQE handles
     * skew). This is the small-state path. The scale path — the north_star's
     * 10^10-url seen set — is `graft.state.SeenStore.filterUnseen`:
-    * per-partition sketches (Bloom / cuckoo `TypedImperativeAggregate`)
-    * built and loaded entirely executor-side, probed inside whole-stage
-    * codegen, backed by an exact anti-join over the sketch maybes; driver
-    * memory stays O(1) in |seen|. A driver-built global Bloom is
-    * deliberately absent: at 10^10 urls / fpp 0.01 it is a ~12 GB bitset. */
+    * per-partition Bloom sketches and sorted-hash sidecars, built and
+    * loaded entirely executor-side and probed inside whole-stage codegen;
+    * a sketch maybe falls through to a binary search of the sidecar, so
+    * the filter is exact with no join, and driver memory stays O(1) in
+    * |seen|. A driver-built global Bloom is deliberately absent: at 10^10
+    * urls / fpp 0.01 it is a ~12 GB bitset. */
   def dedupeAgainstSeen(candidates: DataFrame, seen: Option[DataFrame], cfg: Config): DataFrame =
     seen match {
       case None => candidates

@@ -1,13 +1,10 @@
 package graft.state
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, BloomFilterAggregate, Complete, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, DataType}
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Partitioned, append-only URL-seen state — the scale-true replacement for
@@ -16,30 +13,35 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *
   * Layout under `dir`:
   * {{{
-  *   store.json                       parts / fpp / sketch config (fixed at creation)
-  *   inc-<id>/data/seen_part=<p>/…    parquet url_hash increments (append-only)
-  *   inc-<id>/sketch/p-<p>.<type>     per-partition sketch blob (bloom | cuckoo)
-  *   compact-<g>/sketch/p-<p>.<type>  merged bank: all increments ≤ upTo in one sketch+sidecar
-  *   manifest/inc-<id>.json           commit marker (atomic rename)
+  *   store.json                       parts (fixed at creation) + the bloom sketch format
+  *   inc-<id>/sketch/p-<p>.hashes     sorted distinct url_hash sidecar of the increment's part p
+  *   inc-<id>/sketch/p-<p>.bloom      Bloom sketch over that sidecar (fpp 0.01)
+  *   compact-<g>/sketch/p-<p>.…       merged bank: all increments ≤ upTo in one sketch+sidecar
+  *   manifest/inc-<id>.json           commit marker (atomic rename), rowCount = distinct hashes
   *   manifest/compact-<g>.json        compaction commit marker {gen, upTo}
   * }}}
   *
   * Scale properties:
-  *  - sketches are built by executors (`bloom_filter_agg` / the cuckoo
-  *    `TypedImperativeAggregate` grouped on `seen_part`) and written by
-  *    executors — the driver never materializes any sketch;
-  *  - the probe runs inside whole-stage codegen: candidates are exchanged
-  *    once on `seen_part`, each task lazily loads only its partitions'
-  *    sketches (|seen|/parts bytes each) from shared storage;
+  *  - sidecars and sketches are built and written by executors, one task
+  *    per seen part — the driver never materializes any of them;
+  *  - the probe runs inside whole-stage codegen: each task lazily loads
+  *    only the partitions it touches (|seen|/parts bytes each) from shared
+  *    storage;
   *  - commits are O(|increment|): no rewrite of the accumulated seen set
   *    (the reference's analog is its append-only `sync.Map` registration,
   *    /root/reference/dialer.go:401-410);
-  *  - sketch false positives fall through to an exact left-anti join against
-  *    the increment parquet, so the filter is exact.
+  *  - sketch false positives fall through to a binary search of the
+  *    partition's sorted sidecar, so the filter is exact.
   */
 object SeenStore {
 
-  final case class Config(parts: Int = 64, fpp: Double = 0.01, sketch: String = "bloom")
+  final case class Config(parts: Int = 64)
+
+  /** Sketch kind and false-positive rate of every bank this store writes.
+    * Both are recorded in `store.json`; a store naming another sketch is
+    * refused instead of probing as if empty. */
+  private val Sketch = "bloom"
+  private[state] val Fpp = 0.01
 
   final case class Filtered(result: DataFrame, release: () => Unit)
 
@@ -53,7 +55,11 @@ object SeenStore {
       val p = Paths.get(dir, "store.json")
       if (Files.exists(p)) {
         val n = mapper.readTree(Files.readAllBytes(p))
-        Config(n.get("parts").asInt(), n.get("fpp").asDouble(), n.get("sketch").asText())
+        val sketch = Option(n.get("sketch")).map(_.asText()).getOrElse(Sketch)
+        if (sketch != Sketch)
+          throw new IllegalStateException(
+            s"seen store $dir: store.json names sketch '$sketch'; only '$Sketch' stores can be read")
+        Config(n.get("parts").asInt())
       } else defaultCfg
     }
 
@@ -61,7 +67,7 @@ object SeenStore {
       val p = Paths.get(dir, "store.json")
       if (!Files.exists(p)) {
         Files.createDirectories(p.getParent)
-        Files.write(p, s"""{"parts":${cfg.parts},"fpp":${cfg.fpp},"sketch":"${cfg.sketch}"}"""
+        Files.write(p, s"""{"parts":${cfg.parts},"fpp":$Fpp,"sketch":"$Sketch"}"""
           .getBytes("UTF-8"))
       }
     }
@@ -84,82 +90,58 @@ object SeenStore {
 
     /** Append one increment (id must be committedIds.length — contiguous).
       * Idempotent: a crashed/orphaned increment with the same id is
-      * overwritten. O(|newSeen|) I/O; the existing seen set is untouched. */
+      * overwritten. O(|newSeen|) I/O; the existing seen set is untouched.
+      *
+      * One job with one shuffle, and the increment is written once: each
+      * map task splits its hashes by seen part and ships every part as one
+      * sorted distinct array; part ids are Ints in [0, parts), which a
+      * HashPartitioner maps to themselves, so task p receives exactly part
+      * p's arrays, merges them and writes the part's sidecar and a sketch
+      * sized to it. The manifest's rowCount (distinct hashes) is summed
+      * from the same tasks. (A DataFrame `repartition` here would cost a
+      * second job: AQE runs every exchange's map stage as its own job.) */
     def append(newSeen: DataFrame, id: Long, counters: Map[String, Long] = Map.empty): Unit = {
       val cfg = config
       writeConfig(cfg)
       require(id == committedIds.length, s"non-contiguous increment $id (have ${committedIds.length})")
-      val incDir = s"$dir/inc-$id"
-      val inc = newSeen.select(col("url_hash").cast("long").as("url_hash"))
-        .distinct() // within-increment only: O(|new|)
-        .withColumn("seen_part", pmod(col("url_hash"), lit(cfg.parts)).cast("int"))
-        .repartition(cfg.parts, col("seen_part"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val obs = Observation(s"seen-inc-$id")
-      inc.observe(obs, count(lit(1)).as("rows"))
-        .write.mode("overwrite").partitionBy("seen_part").parquet(s"$incDir/data")
-      val rows = obs.get("rows").asInstanceOf[Long]
-
-      // per-partition sketch + exact sorted-hash sidecar in ONE pass over
-      // the already-partitioned increment (hash partitioning puts every
-      // row of a seen_part in exactly one task): each task groups its
-      // rows per part, sorts once, writes the sidecar, and builds a
-      // RIGHT-SIZED sketch from the same sorted array (the compact()
-      // build — sized to the actual part, not a uniform rows/parts
-      // estimate). Replaces a sketch groupBy-aggregate pass plus a second
-      // sidecar pass: one fewer full scan of the increment and one fewer
-      // driver action per commit. The probe binary-searches the sidecar
-      // only when the sketch says maybe — the unseen filter stays EXACT
-      // with zero joins.
-      val ext = cfg.sketch
-      val fpp = cfg.fpp
-      val sketchDir = s"$incDir/sketch"
-      inc.select(col("seen_part"), col("url_hash"))
-        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          val byPart = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Long]]()
+      // an orphan of this id (crash before its marker) goes first, so no
+      // part it wrote and this append does not survive
+      graft.LocalFiles.deleteRec(new java.io.File(s"$dir/inc-$id"))
+      val sketchDir = s"$dir/inc-$id/sketch"
+      val parts = cfg.parts
+      val rows = newSeen.sparkSession.sparkContext.longAccumulator(s"seen-inc-$id")
+      newSeen.select(col("url_hash").cast("long")).rdd
+        .mapPartitions { it =>
+          val byPart = Array.fill(parts)(new scala.collection.mutable.ArrayBuilder.ofLong)
           it.foreach { row =>
-            byPart.computeIfAbsent(row.getInt(0),
-              _ => new scala.collection.mutable.ArrayBuffer[Long](1024)) += row.getLong(1)
+            val h = row.getLong(0)
+            byPart(java.lang.Math.floorMod(h, parts.toLong).toInt) += h
           }
-          val conf = new org.apache.hadoop.conf.Configuration()
-          byPart.forEach { (part, buf) =>
-            val arr = buf.toArray
-            java.util.Arrays.sort(arr)
-            val p = new org.apache.hadoop.fs.Path(s"$sketchDir/p-$part.hashes")
-            val fs = p.getFileSystem(conf)
-            val out = fs.create(p, true)
-            val bb = java.nio.ByteBuffer.allocate(arr.length * 8)
-            arr.foreach(bb.putLong)
-            out.write(bb.array())
-            out.close()
-            val sk = SketchBank.buildSketch(arr, ext, fpp)
-            val sp = new org.apache.hadoop.fs.Path(s"$sketchDir/p-$part.$ext")
-            val so = fs.create(sp, true)
-            so.write(sk)
-            so.close()
+          byPart.iterator.map(_.result()).zipWithIndex
+            .collect { case (hs, p) if hs.nonEmpty => p -> SketchBank.sortDistinct(hs) }
+        }
+        .partitionBy(new org.apache.spark.HashPartitioner(parts))
+        .foreachPartition { it =>
+          val runs = it.toArray
+          if (runs.nonEmpty) {
+            val hashes = SketchBank.sortDistinct(runs.flatMap(_._2))
+            SketchBank.writeBank(sketchDir, runs(0)._1, hashes,
+              new org.apache.hadoop.conf.Configuration())
+            rows.add(hashes.length.toLong)
           }
         }
-      inc.unpersist()
 
       // commit marker last (atomic rename = the commit point)
       val mdir = Paths.get(dir, "manifest")
       Files.createDirectories(mdir)
       val json = mapper.createObjectNode()
       json.put("id", id)
-      json.put("rowCount", rows)
+      json.put("rowCount", rows.sum)
       val cn = json.putObject("counters")
       counters.toSeq.sortBy(_._1).foreach { case (k, v) => cn.put(k, v) }
       val tmp = mdir.resolve(s".tmp-inc-$id.json")
       Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json))
       Files.move(tmp, mdir.resolve(s"inc-$id.json"), StandardCopyOption.ATOMIC_MOVE)
-    }
-
-    /** All committed seen hashes (exact), up to `maxId` inclusive. */
-    def seenHashes(spark: SparkSession, maxId: Option[Long] = None): Option[DataFrame] = {
-      val ids = maxId.map(m => committedIds.filter(_ <= m)).getOrElse(committedIds)
-      if (ids.isEmpty) None
-      else Some(ids.map(i => spark.read.parquet(s"$dir/inc-$i/data").select(col("url_hash")))
-        .reduce(_ unionByName _))
     }
 
     /** Committed compaction generations as (gen, upTo-increment-id) pairs,
@@ -213,8 +195,6 @@ object SeenStore {
       val gen = (compactions.map(_._1) :+ -1L).max + 1
       val outSketchDir = s"$dir/compact-$gen/sketch"
       val banksArr = banks.toArray
-      val sketchType = cfg.sketch
-      val fpp = cfg.fpp
       // one row per store partition; each task k-way-merges its partitions.
       // EXPLICIT partition count (REPARTITION_BY_NUM): the rows are a few
       // bytes, so a bare repartition(col) lets AQE coalesce the exchange to
@@ -229,18 +209,7 @@ object SeenStore {
             val merged = banksArr
               .map(b => SketchBank.loadHashes(s"$b/p-$p.hashes"))
               .reduce(SketchBank.mergeDedupSorted)
-            val path = new org.apache.hadoop.fs.Path(s"$outSketchDir/p-$p.hashes")
-            val fs = path.getFileSystem(conf)
-            val out = fs.create(path, true)
-            val bb = java.nio.ByteBuffer.allocate(merged.length * 8)
-            merged.foreach(bb.putLong)
-            out.write(bb.array())
-            out.close()
-            val skBytes = SketchBank.buildSketch(merged, sketchType, fpp)
-            val skPath = new org.apache.hadoop.fs.Path(s"$outSketchDir/p-$p.$sketchType")
-            val skOut = fs.create(skPath, true)
-            skOut.write(skBytes)
-            skOut.close()
+            SketchBank.writeBank(outSketchDir, p, merged, conf)
           }
         }
       // commit marker last (atomic rename = the commit point)
@@ -332,56 +301,10 @@ object SeenStore {
     m
   }
 
-  // --- sketch aggregate columns (Bridge: Column companion is private[sql]) --
-
   import org.apache.spark.sql.graft.Bridge
-
-  /** Spark's own BloomFilterAggregate (a TypedImperativeAggregate) grouped
-    * per seen_part — the executor-side Bloom build. */
-  def bloomAgg(child: Column, expectedItems: Long, fpp: Double): Column = {
-    val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expectedItems, fpp)
-    Bridge.column(new BloomFilterAggregate(Bridge.expression(child),
-      Literal(expectedItems), Literal(bits), 0, 0)
-      .toAggregateExpression())
-  }
-
-  /** The cuckoo-filter TypedImperativeAggregate (north_star state sketch). */
-  def cuckooAgg(child: Column, capacity: Long): Column =
-    Bridge.column(AggregateExpression(
-      CuckooFilterAggregate(Bridge.expression(child), capacity), Complete, isDistinct = false))
 
   def seenContains(part: Column, hash: Column, banks: Seq[String], parts: Int): Column =
     Bridge.column(SeenContains(Bridge.expression(part), Bridge.expression(hash), banks, parts))
-}
-
-/** Builds a [[CuckooFilter]] over a LONG column — same shape as Spark's
-  * BloomFilterAggregate; emits the serialized filter. */
-case class CuckooFilterAggregate(
-    child: Expression,
-    capacity: Long,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CuckooFilter] with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): CuckooFilter = CuckooFilter.create(capacity)
-  override def update(buf: CuckooFilter, input: InternalRow): CuckooFilter = {
-    val v = child.eval(input)
-    if (v != null) buf.insert(v.asInstanceOf[Long])
-    buf
-  }
-  override def merge(a: CuckooFilter, b: CuckooFilter): CuckooFilter = a.merge(b)
-  override def eval(buf: CuckooFilter): Any = buf.serialize()
-  override def serialize(buf: CuckooFilter): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CuckooFilter = CuckooFilter.deserialize(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "cuckoo_filter_agg"
-  override def withNewMutableAggBufferOffset(offset: Int): CuckooFilterAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): CuckooFilterAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildInternal(c: Expression): CuckooFilterAggregate =
-    copy(child = c)
 }
 
 /** Codegen EXACT membership probe against the store's per-partition state:
@@ -505,9 +428,6 @@ object SketchBank {
   private final class Bloom(b: org.apache.spark.util.sketch.BloomFilter) extends Probe {
     def mightContain(h: Long): Boolean = b.mightContainLong(h)
   }
-  private final class Cuckoo(c: CuckooFilter) extends Probe {
-    def mightContain(h: Long): Boolean = c.mightContain(h)
-  }
 
   /** O(n) merge of two sorted arrays, dropping duplicates (increments may
     * overlap when callers append without filtering first). */
@@ -526,23 +446,37 @@ object SketchBank {
     if (k == out.length) out else java.util.Arrays.copyOf(out, k)
   }
 
-  /** Serialized right-sized sketch over a merged hash set (compaction
-    * rebuild path — per-increment sketches were sized for their increment,
-    * the merged bank gets one sized for the union). */
-  private[state] def buildSketch(hashes: Array[Long], sketchType: String, fpp: Double): Array[Byte] =
-    sketchType match {
-      case "cuckoo" =>
-        val c = CuckooFilter.create(math.max(64L, hashes.length.toLong))
-        hashes.foreach(c.insert)
-        c.serialize()
-      case _ =>
-        val bf = org.apache.spark.util.sketch.BloomFilter
-          .create(math.max(64L, hashes.length.toLong), fpp)
-        hashes.foreach(bf.putLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        bos.toByteArray
+  /** Sorts `hashes` in place and returns its distinct values (the array
+    * itself when it has no duplicates). */
+  private[state] def sortDistinct(hashes: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(hashes)
+    var k = 0
+    var i = 0
+    while (i < hashes.length) {
+      if (k == 0 || hashes(i) != hashes(k - 1)) { hashes(k) = hashes(i); k += 1 }
+      i += 1
     }
+    if (k == hashes.length) hashes else java.util.Arrays.copyOf(hashes, k)
+  }
+
+  /** Writes one partition of a bank: the sorted distinct `hashes` as the
+    * `.hashes` sidecar and a Bloom sketch sized to them. */
+  private[state] def writeBank(bankDir: String, part: Int, hashes: Array[Long],
+                               conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val path = new org.apache.hadoop.fs.Path(s"$bankDir/p-$part.hashes")
+    val fs = path.getFileSystem(conf)
+    val out = fs.create(path, true)
+    try {
+      val bb = java.nio.ByteBuffer.allocate(hashes.length * 8)
+      hashes.foreach(bb.putLong)
+      out.write(bb.array())
+    } finally out.close()
+    val bf = org.apache.spark.util.sketch.BloomFilter
+      .create(math.max(64L, hashes.length.toLong), SeenStore.Fpp)
+    hashes.foreach(bf.putLong)
+    val so = fs.create(new org.apache.hadoop.fs.Path(s"$bankDir/p-$part.bloom"), true)
+    try bf.writeTo(so) finally so.close()
+  }
 
   /** Sorted int64 state sidecar; absent file → empty array. */
   private[state] def loadHashes(path: String): Array[Long] = {
@@ -579,8 +513,6 @@ object SketchBank {
     bytesOf(new org.apache.hadoop.fs.Path(prefix + ".bloom"))
       .map(b => new Bloom(org.apache.spark.util.sketch.BloomFilter
         .readFrom(new java.io.ByteArrayInputStream(b))): Probe)
-      .orElse(bytesOf(new org.apache.hadoop.fs.Path(prefix + ".cuckoo"))
-        .map(b => new Cuckoo(CuckooFilter.deserialize(b)): Probe))
       .getOrElse(Absent)
   }
 }

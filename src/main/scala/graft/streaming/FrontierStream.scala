@@ -70,8 +70,7 @@ object FrontierStream {
       politeness: Option[DataFrame],
       cfg: graft.operators.Frontier.Config): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     urls.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val store = graft.state.SeenStore(storeDir,
-        graft.state.SeenStore.Config(cfg.seenParts, cfg.seenFpp, cfg.seenSketch))
+      val store = graft.state.SeenStore(storeDir, graft.state.SeenStore.Config(cfg.seenParts))
       val done = store.committedIds.length
       if (batchId < done) {
         // replayed after a crash between sink write and checkpoint commit:

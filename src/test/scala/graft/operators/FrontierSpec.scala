@@ -183,25 +183,22 @@ class FrontierSpec extends AnyFunSuite {
   }
 
   test("SeenStore.filterUnseen equals exact anti-join (partitioned sketches, P>1)") {
-    for (sketch <- Seq("bloom", "cuckoo")) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-seen-$sketch").toString
-      val store = graft.state.SeenStore(dir,
-        graft.state.SeenStore.Config(parts = 7, sketch = sketch))
-      val canon = Frontier.canonicalize(pagesDf)
-        .select("url_norm", "url_hash").limit(2000).cache()
-      // two increments, like two crawl rounds
-      val seenA = canon.sample(0.2, seed = 7).select("url_hash")
-      val seenB = canon.sample(0.15, seed = 11).select("url_hash")
-      store.append(seenA, 0L)
-      store.append(seenB, 1L)
-      val filtered = store.filterUnseen(canon)
-      val got = filtered.result.select("url_hash").as[Long].collect().sorted
-      val want = canon
-        .join(seenA.unionByName(seenB), Seq("url_hash"), "left_anti")
-        .select("url_hash").as[Long].collect().sorted
-      assert(got.toSeq == want.toSeq, s"sketch=$sketch")
-      filtered.release()
-    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-seen").toString
+    val store = graft.state.SeenStore(dir, graft.state.SeenStore.Config(parts = 7))
+    val canon = Frontier.canonicalize(pagesDf)
+      .select("url_norm", "url_hash").limit(2000).cache()
+    // two increments, like two crawl rounds
+    val seenA = canon.sample(0.2, seed = 7).select("url_hash")
+    val seenB = canon.sample(0.15, seed = 11).select("url_hash")
+    store.append(seenA, 0L)
+    store.append(seenB, 1L)
+    val filtered = store.filterUnseen(canon)
+    val got = filtered.result.select("url_hash").as[Long].collect().sorted
+    val want = canon
+      .join(seenA.unionByName(seenB), Seq("url_hash"), "left_anti")
+      .select("url_hash").as[Long].collect().sorted
+    assert(got.toSeq == want.toSeq)
+    filtered.release()
   }
 
   test("schedule: salted and single-phase plans both equal plain per-host top-k") {
@@ -473,6 +470,37 @@ class FrontierSpec extends AnyFunSuite {
     val banks = store.probeBanks(store.committedIds).length
     assert(banks <= 4, s"probe chain must stay bounded by the cadence, got $banks banks")
     assert(res.allFetched.count() > 0)
+  }
+
+  test("digest index crawl: distinct payloads give the index-free rounds, 0 revisits") {
+    // a web whose payloads are all distinct: no capture may ever become a
+    // revisit, so the cross-round digest index must not change a round.
+    // 100 hosts, because PagesGen's outlinks address a 100-host web: the
+    // rounds after the first are then mostly followed links
+    val web100 = Crawl.asWeb(PagesGen.pages(spark, N, 100, 42L).toDF())
+    val distinctWeb = web100.join(
+      web100.groupBy("text").count().filter(col("count") === 1).select("text"), Seq("text"))
+      .cache()
+    val seeds100 = PagesGen.seeds(N, 60, 100, 42L)
+    val didxCfg = cfg.copy(sizeThreshold = 100)
+    for (stateDir <- Seq(false, true)) {
+      def dir(tag: String) =
+        if (stateDir) Some(java.nio.file.Files.createTempDirectory(s"graft-didx-$tag").toString)
+        else None
+      val plain = Crawl.crawl(spark, distinctWeb, seeds100, 4, None, None, didxCfg,
+        stateDir = dir("plain"))
+      val ref = graft.state.DigestIndex.Ref(s"graft_test_crawl_didx_$stateDir",
+        java.nio.file.Files.createTempDirectory("graft-didx-table").toString + "/idx")
+      graft.state.DigestIndex.drop(spark, ref)
+      try {
+        val indexed = Crawl.crawl(spark, distinctWeb, seeds100, 4, None, None, didxCfg,
+          stateDir = dir("indexed"), digestIndex = Some(ref))
+        assert(plain.rounds.length == 4, s"web must sustain 4 rounds (stateDir=$stateDir)")
+        assert(plain.rounds.forall(_("revisits") == 0L))
+        assert(indexed.rounds == plain.rounds, s"stateDir=$stateDir")
+      } finally graft.state.DigestIndex.drop(spark, ref)
+    }
+    distinctWeb.unpersist()
   }
 
   test("in-memory crawl: capture accumulator plan stays O(1) over 16 rounds") {

@@ -9,45 +9,15 @@ class SeenStoreSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
-  test("cuckoo filter: no false negatives, plausible fp rate, serialize roundtrip") {
-    val f = CuckooFilter.create(10000)
-    val keys = (0 until 10000).map(i => i * 0x9e3779b97f4a7c15L + 17)
-    keys.foreach(k => assert(f.insert(k)))
-    assert(!f.hasOverflowed)
-    keys.foreach(k => assert(f.mightContain(k), s"false negative for $k"))
-    val fp = (0 until 100000).count(i => f.mightContain(-i * 0x517cc1b727220a95L - 3))
-    assert(fp < 1000, s"fp rate too high: $fp/100000") // 16-bit fps: expect ~0.1%
-    val back = CuckooFilter.deserialize(f.serialize())
-    keys.foreach(k => assert(back.mightContain(k)))
-  }
+  /** Every hash in a bank's sidecars, part by part. */
+  private def sidecarHashes(incDir: String): Seq[Long] =
+    new java.io.File(s"$incDir/sketch").listFiles().toSeq.map(_.getName)
+      .filter(_.endsWith(".hashes")).sorted
+      .flatMap(n => SketchBank.loadHashes(s"$incDir/sketch/$n").toSeq)
 
-  test("cuckoo filter: merge keeps all keys from both sides") {
-    val a = CuckooFilter.create(4000)
-    val b = CuckooFilter.create(4000)
-    val ka = (0 until 2000).map(i => i * 7919L + 1)
-    val kb = (0 until 2000).map(i => i * 104729L + 2)
-    ka.foreach(a.insert)
-    kb.foreach(b.insert)
-    a.merge(b)
-    (ka ++ kb).foreach(k => assert(a.mightContain(k), s"lost $k in merge"))
-  }
-
-  test("cuckoo filter: overflow degrades to always-maybe (never a false negative)") {
-    val f = CuckooFilter.create(64)
-    val keys = (0 until 5000).map(i => i * 6364136223846793005L + 9)
-    keys.foreach(f.insert)
-    keys.foreach(k => assert(f.mightContain(k)))
-  }
-
-  test("cuckoo_filter_agg builds a filter distributively") {
-    val hashes = spark.range(0, 5000).select(xxhash64(col("id")).as("url_hash"))
-    val bytes = hashes.repartition(8)
-      .agg(SeenStore.cuckooAgg(col("url_hash"), 5000).as("f"))
-      .head.getAs[Array[Byte]](0)
-    val f = CuckooFilter.deserialize(bytes)
-    val all = hashes.as[Long].collect()
-    all.foreach(h => assert(f.mightContain(h), "aggregate lost a key"))
-  }
+  private def rowCount(dir: String, id: Long): Long =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$dir/manifest/inc-$id.json")).get("rowCount").asLong()
 
   test("append is O(|increment|): committing round N leaves earlier increments untouched") {
     val dir = Files.createTempDirectory("graft-seen-inc").toString
@@ -62,10 +32,39 @@ class SeenStoreSpec extends AnyFunSuite {
     val before = mtimes(0L)
     store.append(spark.range(1000, 1200).select(xxhash64(col("id")).as("url_hash")), 1L)
     assert(mtimes(0L) == before, "increment 0 files must not be rewritten by increment 1")
-    // and increment 1 is small: its data holds only the new rows
-    val inc1 = spark.read.parquet(s"$dir/inc-1/data").count()
-    assert(inc1 == 200L)
+    // and increment 1 is small: its sidecars hold only the new hashes
+    assert(sidecarHashes(s"$dir/inc-1").length == 200)
+    assert(rowCount(dir, 1L) == 200L)
     assert(store.committedIds == Seq(0L, 1L))
+  }
+
+  test("append writes sorted distinct sidecars once: repeated hashes count once") {
+    val dir = Files.createTempDirectory("graft-seen-dups").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    // 0..299 three times over, in 7 input partitions
+    val inc = spark.range(0, 900, 1, 7).select(xxhash64(col("id") % 300).as("url_hash"))
+    store.append(inc, 0L)
+    assert(new java.io.File(s"$dir/inc-0").list().toSeq == Seq("sketch"),
+      "an increment is its sketch directory only")
+    (0 until 4).foreach { p =>
+      val hs = SketchBank.loadHashes(s"$dir/inc-0/sketch/p-$p.hashes")
+      assert(hs.nonEmpty && hs.sliding(2).forall(w => w(0) < w(1)),
+        s"part $p sidecar must be strictly increasing")
+      assert(hs.forall(h => java.lang.Math.floorMod(h, 4L) == p), s"part $p holds only its hashes")
+    }
+    val distinct = spark.range(0, 300).select(xxhash64(col("id"))).as[Long].collect().toSet
+    assert(sidecarHashes(s"$dir/inc-0").toSet == distinct)
+    assert(sidecarHashes(s"$dir/inc-0").length == 300)
+    assert(rowCount(dir, 0L) == 300L)
+  }
+
+  test("append runs one job with one shuffle") {
+    val dir = Files.createTempDirectory("graft-seen-jobs").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    val inc = spark.range(0, 5000, 1, 6).select(xxhash64(col("id")).as("url_hash"))
+    val tally = org.apache.spark.graft.JobTally(spark.sparkContext)(store.append(inc, 0L))
+    assert(tally == org.apache.spark.graft.JobTally.Tally(jobs = 1, shuffles = 1))
+    assert(rowCount(dir, 0L) == 5000L)
   }
 
   test("orphaned increment (crash before manifest) is invisible and replayable") {
@@ -85,45 +84,54 @@ class SeenStoreSpec extends AnyFunSuite {
     f.release()
   }
 
+  test("replaying an orphaned increment with different rows leaves none of the orphan's parts") {
+    val dir = Files.createTempDirectory("graft-seen-orphan-diff").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    val orphan = spark.range(0, 400).select(xxhash64(col("id")).as("url_hash"))
+    store.append(orphan, 0L)
+    Files.delete(java.nio.file.Paths.get(dir, "manifest", "inc-0.json"))
+    // the replay holds one hash, so it writes one part of the four
+    store.append(spark.range(0, 1).select(xxhash64(col("id")).as("url_hash")), 0L)
+    assert(store.filterUnseen(orphan).result.count() == 399L)
+  }
+
   test("compact: 20 increments merge to one probe bank, filterUnseen unchanged") {
-    for (sketch <- Seq("bloom", "cuckoo")) {
-      val dir = Files.createTempDirectory(s"graft-seen-compact-$sketch").toString
-      val store = SeenStore(dir, SeenStore.Config(parts = 4, sketch = sketch))
-      // 20 rounds of 150 urls each, with deliberate overlap between rounds
-      (0 until 20).foreach { i =>
-        store.append(
-          spark.range(i * 100, i * 100 + 150).select(xxhash64(col("id")).as("url_hash")), i)
-      }
-      val cand = spark.range(0, 4000).select(xxhash64(col("id")).as("url_hash"))
-      val before = store.filterUnseen(cand).result.as[Long].collect().sorted
-      assert(store.probeBanks(store.committedIds).length == 20)
-
-      store.compact(spark)
-      // probe-visible bank count is O(1) regardless of round count
-      assert(store.probeBanks(store.committedIds).length == 1,
-        "compaction must collapse the probe chain to one bank")
-      val after = store.filterUnseen(cand).result.as[Long].collect().sorted
-      assert(after.sameElements(before), "compaction must not change filter results")
-      // seen = 0..2049 (last round covers 1900..2049) → 4000-2050 unseen
-      assert(after.length == 4000 - 2050)
-
-      // appends after compaction stack on top of the compacted bank
-      store.append(spark.range(5000, 5100).select(xxhash64(col("id")).as("url_hash")), 20L)
-      assert(store.probeBanks(store.committedIds).length == 2)
-      val cand2 = spark.range(4990, 5010).select(xxhash64(col("id")).as("url_hash"))
-      assert(store.filterUnseen(cand2).result.count() == 10L)
-
-      // maxId time travel to a pre-compaction state still resolves
-      // (per-increment banks are retained)
-      val tt = store.filterUnseen(
-        spark.range(0, 300).select(xxhash64(col("id")).as("url_hash")), maxId = Some(0L))
-      assert(tt.result.count() == 150L, "maxId=0 must see only increment 0")
-
-      // a second compaction folds the new increment in
-      store.compact(spark)
-      assert(store.probeBanks(store.committedIds).length == 1)
-      assert(store.filterUnseen(cand2).result.count() == 10L)
+    val dir = Files.createTempDirectory("graft-seen-compact").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    // 20 rounds of 150 urls each, with deliberate overlap between rounds
+    (0 until 20).foreach { i =>
+      store.append(
+        spark.range(i * 100, i * 100 + 150).select(xxhash64(col("id")).as("url_hash")), i)
     }
+    val cand = spark.range(0, 4000).select(xxhash64(col("id")).as("url_hash"))
+    val before = store.filterUnseen(cand).result.as[Long].collect().sorted
+    assert(store.probeBanks(store.committedIds).length == 20)
+
+    store.compact(spark)
+    // probe-visible bank count is O(1) regardless of round count
+    assert(store.probeBanks(store.committedIds).length == 1,
+      "compaction must collapse the probe chain to one bank")
+    val after = store.filterUnseen(cand).result.as[Long].collect().sorted
+    assert(after.sameElements(before), "compaction must not change filter results")
+    // seen = 0..2049 (last round covers 1900..2049) → 4000-2050 unseen
+    assert(after.length == 4000 - 2050)
+
+    // appends after compaction stack on top of the compacted bank
+    store.append(spark.range(5000, 5100).select(xxhash64(col("id")).as("url_hash")), 20L)
+    assert(store.probeBanks(store.committedIds).length == 2)
+    val cand2 = spark.range(4990, 5010).select(xxhash64(col("id")).as("url_hash"))
+    assert(store.filterUnseen(cand2).result.count() == 10L)
+
+    // maxId time travel to a pre-compaction state still resolves
+    // (per-increment banks are retained)
+    val tt = store.filterUnseen(
+      spark.range(0, 300).select(xxhash64(col("id")).as("url_hash")), maxId = Some(0L))
+    assert(tt.result.count() == 150L, "maxId=0 must see only increment 0")
+
+    // a second compaction folds the new increment in
+    store.compact(spark)
+    assert(store.probeBanks(store.committedIds).length == 1)
+    assert(store.filterUnseen(cand2).result.count() == 10L)
   }
 
   test("gc drops superseded generations; probes and time travel survive") {
@@ -273,5 +281,50 @@ class SeenStoreSpec extends AnyFunSuite {
       val routedRows = routed.orderBy("url_hash").collect().map(_.getLong(0)).toSeq
       assert(routedRows == directRows, "probe routing must never change the result")
     } finally spark.conf.unset(confKey)
+  }
+
+  /** A copy of the checked-in store written by the previous layout:
+    * store.json with fpp and "sketch":"bloom", parquet increments under
+    * inc-<id>/data next to the sidecars and sketches. Increment 0 holds
+    * xxhash64 of ids 0..299, increment 1 ids 250..449, parts = 4. */
+  private def parentFormatStore(): String = {
+    val src = java.nio.file.Paths.get(getClass.getResource("/seenstore-parent-format").toURI)
+    val dst = Files.createTempDirectory("graft-seen-parent")
+    import scala.jdk.CollectionConverters._
+    Files.walk(src).iterator().asScala.toSeq.foreach { f =>
+      val to = dst.resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+    }
+    dst.toString
+  }
+
+  test("a store written with parquet increments and fpp/sketch config still probes, appends and compacts") {
+    val dir = parentFormatStore()
+    assert(new java.io.File(s"$dir/inc-0/data").isDirectory, "fixture keeps its parquet increments")
+    val store = SeenStore(dir)
+    assert(store.config == SeenStore.Config(parts = 4))
+    assert(store.committedIds == Seq(0L, 1L))
+    def ids(r: Range) = spark.range(r.start, r.end).select(xxhash64(col("id")).as("url_hash"))
+    def hashes(r: Range) = ids(r).as[Long].collect().sorted.toSeq
+    def unseen(cand: Range) = store.filterUnseen(ids(cand)).result.as[Long].collect().sorted.toSeq
+    // the rows the previous layout's filterUnseen returned: ids 450..599
+    assert(unseen(0 until 600) == hashes(450 until 600))
+    store.append(ids(450 until 500), 2L)
+    assert(unseen(0 until 600) == hashes(500 until 600))
+    store.compact(spark)
+    assert(store.probeBanks(store.committedIds).length == 1)
+    assert(unseen(0 until 600) == hashes(500 until 600))
+  }
+
+  test("a store naming a sketch other than bloom fails loudly") {
+    val dir = parentFormatStore()
+    Files.write(java.nio.file.Paths.get(dir, "store.json"),
+      """{"parts":4,"fpp":0.01,"sketch":"cuckoo"}""".getBytes("UTF-8"))
+    val store = SeenStore(dir)
+    val cand = spark.range(0, 600).select(xxhash64(col("id")).as("url_hash"))
+    val probe = intercept[IllegalStateException](store.filterUnseen(cand))
+    assert(probe.getMessage.contains("'cuckoo'"), probe.getMessage)
+    intercept[IllegalStateException](store.append(cand, 2L))
+    intercept[IllegalStateException](store.compact(spark))
   }
 }
