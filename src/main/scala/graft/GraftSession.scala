@@ -26,6 +26,13 @@ object GraftSession {
       // core while LARGE inputs still cap at maxPartitionBytes — the
       // 100 TB plan shape is unchanged.
       .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
+      // Plan descriptions are diagnostics, yet AQE rebuilds one on every
+      // stage update and the SQL status store keeps it. A plan that reuses
+      // cached frames prints each cached subtree at every reference, so
+      // chaining Crawl.round three times without a checkpoint gives a
+      // ~790M-char description (a multi-GB heap spike). Cap it at 8M
+      // chars; Spark logs a warning whenever it truncates.
+      .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
     // Profiling hook: SPARK_GRAFT_EVENTLOG=<dir> writes the Spark event
     // log there (stage timings + callsites — the forked-run substitute for
     // a live UI in this sandbox). Off by default: it adds listener-bus
