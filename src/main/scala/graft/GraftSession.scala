@@ -33,6 +33,13 @@ object GraftSession {
       // ~790M-char description (a multi-GB heap spike). Cap it at 8M
       // chars; Spark logs a warning whenever it truncates.
       .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
+      // The only round-robin repartition is the table loader's scan-width
+      // floor, whose input is a file scan: its row order is deterministic,
+      // so the unsorted round-robin is determinate and a retried map task
+      // rebuilds the same partitions. The default pre-sort (SPARK-23207)
+      // only buys that for inputs whose order is not fixed, and over a
+      // one-row-group table it runs in a single task (see Queries.load).
+      .config("spark.sql.execution.sortBeforeRepartition", "false")
     // Profiling hook: SPARK_GRAFT_EVENTLOG=<dir> writes the Spark event
     // log there (stage timings + callsites — the forked-run substitute for
     // a live UI in this sandbox). Off by default: it adds listener-bus

@@ -261,13 +261,19 @@ object Dedup {
     * `idCol` is unique (ties on (digest, id) all become keepers —
     * deterministic, unlike row_number's arbitrary pick). The keeper join
     * is null-safe on the digest so null-text rows dedupe among themselves
-    * exactly as the window form grouped them. */
+    * exactly as the window form grouped them.
+    *
+    * Null ids: `is_dup` is never null. The keeper is the group's least
+    * non-null id, and a row is a dup unless its id equals the keeper
+    * null-safely. So a null-id row in a group with a non-null keeper is a
+    * dup, and in a group whose ids are all null (keeper null) every row
+    * is kept. */
   def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val d = docs.withColumn("digest", sha2(col(textCol), 256))
     val keepers = d.groupBy(col("digest").as("__kd"))
       .agg(min(col(idCol)).as("keeper"))
     d.join(keepers, col("digest") <=> col("__kd"))
-      .withColumn("is_dup", col(idCol) =!= col("keeper"))
+      .withColumn("is_dup", !(col(idCol) <=> col("keeper")))
       .select(docs.columns.map(col) ++
         Seq(col("digest"), col("is_dup"), col("keeper")): _*)
   }

@@ -63,6 +63,13 @@ object PlanAudit {
       .map(l => s"payload column crosses an exchange: ${l.trim.take(140)}")
       .toSeq
 
+  /** Node depth of a plan-tree line: the column of its "+- "/":- " marker
+    * (-1 for the root line). */
+  private def indent(l: String): Int = {
+    val a = l.indexOf("+- "); val b = l.indexOf(":- ")
+    if (a < 0) b else if (b < 0) a else math.min(a, b)
+  }
+
   /** "NO exchange above the bucketed index scan": walk the plan-tree
     * string from the `Bucketed: true` scan line up through its ancestors
     * (nearest line above with strictly smaller node indentation) and
@@ -71,10 +78,6 @@ object PlanAudit {
     * the broadcast-dim or the bucket-aligned sort-merge variant. */
   private def noShuffleAboveBucketedScan(plan: String): Seq[String] = {
     val lines = plan.linesIterator.toArray
-    def indent(l: String): Int = {
-      val a = l.indexOf("+- "); val b = l.indexOf(":- ")
-      if (a < 0) b else if (b < 0) a else math.min(a, b)
-    }
     val scanIdx = lines.indexWhere(_.contains("Bucketed: true"))
     if (scanIdx < 0) return Seq("no bucketed scan in plan")
     var cur = indent(lines(scanIdx))
@@ -95,7 +98,8 @@ object PlanAudit {
 
   /** Every audited plan, regardless of query: no cartesian blow-up, no
     * single-partition exchange (a global Window.orderBy / global sort in
-    * the middle of a pipeline), no Python eval.
+    * the middle of a pipeline), no Python eval, no round-robin exchange
+    * over another exchange.
     *
     * One SinglePartition shape is exempt: the cap-truncation SENTINEL of
     * Dedup.observedTruncation — a keys=[] global sum over the bucket
@@ -115,10 +119,27 @@ object PlanAudit {
     }.toSeq
   }
 
+  /** Round-robin exchanges read only a deterministic input: no exchange
+    * anywhere in the subtree below one. The table loader's scan-width floor
+    * repartitions without Spark's pre-sort, which is safe only because its
+    * input is a file scan (a retried map task then rebuilds the same
+    * partitions); a round-robin over a shuffle would be indeterminate. The
+    * subtree of the line at depth d is every following line deeper than d. */
+  private[tools] def roundRobinOverScanOnly(plan: String): Seq[String] = {
+    val lines = plan.linesIterator.toArray
+    lines.indices.filter(i => lines(i).contains("RoundRobinPartitioning")).flatMap { i =>
+      val d = indent(lines(i))
+      lines.iterator.drop(i + 1).takeWhile(indent(_) > d)
+        .find(_.contains("Exchange"))
+        .map(l => s"round-robin exchange over an exchange: ${l.trim.take(120)}")
+    }
+  }
+
   private def common(plan: String): Seq[String] =
     hasNo(plan, "CartesianProduct") ++
       noDataPathSinglePartition(plan) ++
-      hasNo(plan, "BatchEvalPython")
+      hasNo(plan, "BatchEvalPython") ++
+      roundRobinOverScanOnly(plan)
 
   // ---------------------------------------------------------------- audits
 

@@ -55,12 +55,55 @@ class BenchSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(doc_id), GreaterThan(doc_id,100)]"), plan)
     assert(plan.contains("ReadSchema: struct<doc_id:bigint>"), plan)
+    // the floor's round-robin runs without Spark's pre-sort; its input is a
+    // file scan, so every evaluation must build the same partitions
+    def partitions() = df.rdd.mapPartitionsWithIndex((i, rows) =>
+      Iterator(i -> rows.map(_.getLong(0)).toVector)).collect().toSeq
+    val first = partitions()
+    assert(first.map(_._2.size).sum == 400000 && first.forall(_._2.nonEmpty))
+    assert(partitions() == first, "a floored frame must rebuild identical partitions")
     // small tables (dims, gate-tier corpora) are left alone: no exchange
     spark.range(0, 100).select(col("id").as("r_id"))
       .coalesce(1).write.parquet(s"$dir/region.parquet")
     val small = Queries.t(spark, dir, "region")
     assert(!small.queryExecution.executedPlan.toString.contains("Exchange"),
       "sub-threshold table must not be floored")
+  }
+
+  private def floored(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+
+  test("table loader re-measures a table rewritten at the same path") {
+    val dir = java.nio.file.Files.createTempDirectory("rewrite").toString
+    val rows = spark.range(0, 400000).select(col("id").as("doc_id"),
+      concat(lit("x" * 64), col("id")).as("text"))
+    rows.coalesce(1).write.parquet(s"$dir/documents.parquet")
+    assert(floored(Queries.t(spark, dir, "documents")),
+      "one-file table >= floorMinBytes must be floored")
+    val width = spark.sparkContext.defaultParallelism
+    rows.repartition(width, col("doc_id"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(new java.io.File(s"$dir/documents.parquet").list()
+      .count(_.endsWith(".parquet")) >= width)
+    assert(!floored(Queries.t(spark, dir, "documents")),
+      "a table rewritten as >= defaultParallelism files must not stay floored")
+  }
+
+  test("table loader infers a schema once per table version") {
+    val dir = java.nio.file.Files.createTempDirectory("schema").toString
+    val path = s"$dir/orders.parquet"
+    spark.range(0, 100).select(col("id").as("o_id")).coalesce(1).write.parquet(path)
+    assert(Queries.tExch(spark, dir, "orders").columns.toSeq == Seq("o_id"))
+    val again = org.apache.spark.graft.JobTally(spark.sparkContext) {
+      Queries.tExch(spark, dir, "orders"); ()
+    }
+    assert(again.jobs == 0, s"an unchanged table must load without a job: $again")
+    spark.range(0, 100).select(col("id").as("o_id"), (col("id") * 2).as("o_total"))
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    val rewritten = Queries.t(spark, dir, "orders")
+    assert(rewritten.columns.toSeq == Seq("o_id", "o_total"),
+      "a table rewritten with a new column must be read with the new schema")
+    assert(rewritten.agg(sum("o_total")).head.getLong(0) == 9900L)
   }
 
   test("table loader parses maxPartitionBytes in the documented unit syntax") {

@@ -33,6 +33,27 @@ class DedupSpec extends AnyFunSuite {
     assert(out.drop(2).forall(!_._2))
   }
 
+  test("exact dedup with null ids: a null id is a dup beside a non-null keeper, kept when all ids are null") {
+    val withNulls = Seq[(Option[Long], String)](
+      (Some(7L), "alpha"), (None, "alpha"), (Some(9L), "alpha"), // keeper 7
+      (None, "beta"), (None, "beta"), // every id null: keeper null
+      (Some(3L), "gamma")
+    ).toDF("doc_id", "text")
+    val got = Dedup.exact(withNulls).select("text", "doc_id", "is_dup", "keeper")
+    val expected = Seq[(String, Option[Long], Boolean, Option[Long])](
+      ("alpha", Some(7L), false, Some(7L)),
+      ("alpha", None, true, Some(7L)),
+      ("alpha", Some(9L), true, Some(7L)),
+      ("beta", None, false, None),
+      ("beta", None, false, None),
+      ("gamma", Some(3L), false, Some(3L))
+    ).toDF("text", "doc_id", "is_dup", "keeper")
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+      got.collect().mkString("\n"))
+    // the dedup consumer keeps every row whose is_dup is false, nulls included
+    assert(got.filter(!col("is_dup")).count() == 4)
+  }
+
   test("minhash LSH finds high-jaccard pairs, verified exactly") {
     val got = Dedup.minhashPairs(docs, k = 3, numHashes = 64, bands = 16, threshold = 0.5)
       .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()

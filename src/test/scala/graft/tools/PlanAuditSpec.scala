@@ -15,6 +15,33 @@ class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
   private val sf = "/root/testdata/sf0.01"
 
+  test("round-robin guard: flags an exchange anywhere below a round-robin, not beside it") {
+    val overScan =
+      """AdaptiveSparkPlan isFinalPlan=false
+        |+- HashAggregate(keys=[k#1], functions=[sum(v#2)])
+        |   +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=9]
+        |      +- HashAggregate(keys=[k#1], functions=[partial_sum(v#2)])
+        |         +- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=8]
+        |            +- FileScan parquet [k#1,v#2]""".stripMargin
+    assert(PlanAudit.roundRobinOverScanOnly(overScan).isEmpty)
+    val besideShuffle =
+      """SortMergeJoin [k#1], [k#3], Inner
+        |:- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=8]
+        |:  +- FileScan parquet [k#1]
+        |+- Exchange hashpartitioning(k#3, 4), ENSURE_REQUIREMENTS, [plan_id=9]
+        |   +- FileScan parquet [k#3]""".stripMargin
+    assert(PlanAudit.roundRobinOverScanOnly(besideShuffle).isEmpty)
+    val overShuffle =
+      """Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=9]
+        |+- Project [k#1]
+        |   +- SortMergeJoin [k#1], [k#3], Inner
+        |      :- FileScan parquet [k#1]
+        |      +- Exchange hashpartitioning(k#3, 4), ENSURE_REQUIREMENTS, [plan_id=8]
+        |         +- FileScan parquet [k#3]""".stripMargin
+    val errs = PlanAudit.roundRobinOverScanOnly(overShuffle)
+    assert(errs.size == 1 && errs.head.contains("hashpartitioning(k#3"), errs)
+  }
+
   PlanAudit.audits.foreach { a =>
     test(s"plan contract: ${a.name}") {
       val plan = a.build(spark, sf).queryExecution.executedPlan.toString
