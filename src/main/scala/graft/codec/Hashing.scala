@@ -86,7 +86,7 @@ object Hashing {
 
   /** Lowercased whitespace tokens. */
   def tokens(text: String): Array[String] =
-    text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+    text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
 
   /** Base hashes of the k-word shingles (single pass, one string build per
     * shingle). Empty input → empty array. */
@@ -318,7 +318,7 @@ object Hashing {
     * hashed as it is scanned and looked up once, only when short enough to
     * be a stopword. */
   def langId(text: String, table: LangTable): String = {
-    val s = text.toLowerCase
+    val s = text.toLowerCase(java.util.Locale.ROOT)
     val n = s.length
     val counts = new Array[Int](table.langs.length)
     var start = -1 // first char of the current token, -1 between tokens

@@ -2,6 +2,7 @@ package graft.codec
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.util.Locale
 import java.util.zip.GZIPInputStream
 
 /** Parsed HTTP message (request or response). Header lookup is
@@ -13,17 +14,17 @@ final case class HttpMessage(
     body: Array[Byte]
 ) {
   def header(name: String): Option[String] = {
-    val lower = name.toLowerCase
-    headers.collectFirst { case (k, v) if k.toLowerCase == lower => v }
+    val lower = name.toLowerCase(Locale.ROOT)
+    headers.collectFirst { case (k, v) if k.toLowerCase(Locale.ROOT) == lower => v }
   }
   def status: Int = {
     val parts = startLine.split(" ", 3)
     if (parts.length >= 2 && parts(0).startsWith("HTTP/")) parts(1).toInt else -1
   }
   def isChunked: Boolean =
-    header("Transfer-Encoding").exists(_.toLowerCase.contains("chunked"))
+    header("Transfer-Encoding").exists(_.toLowerCase(Locale.ROOT).contains("chunked"))
   def isGzipped: Boolean =
-    header("Content-Encoding").exists(_.toLowerCase.contains("gzip"))
+    header("Content-Encoding").exists(_.toLowerCase(Locale.ROOT).contains("gzip"))
 }
 
 /** HTTP-over-bytes parse path — the byte-identical text contract

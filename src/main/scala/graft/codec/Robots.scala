@@ -1,5 +1,7 @@
 package graft.codec
 
+import java.util.Locale
+
 /** RFC 9309 (robots.txt) subset for the frontier's politeness layer
   * (BASELINE.json north_star; absent from the reference — SURVEY.md
   * appendix). Supports: user-agent groups, Allow/Disallow with `*`
@@ -108,7 +110,7 @@ object Robots {
       }
       val colon = line.indexOf(':')
       if (colon > 0) {
-        val key = line.substring(0, colon).trim.toLowerCase
+        val key = line.substring(0, colon).trim.toLowerCase(Locale.ROOT)
         val value = line.substring(colon + 1).trim
         key match {
           case "user-agent" =>
@@ -129,9 +131,9 @@ object Robots {
       }
     }
     flush()
-    val agentLower = agent.toLowerCase
+    val agentLower = agent.toLowerCase(Locale.ROOT)
     val matching = groups
-      .flatMap(g => g.agents.map(a => (a.toLowerCase, g)))
+      .flatMap(g => g.agents.map(a => (a.toLowerCase(Locale.ROOT), g)))
       .filter { case (a, _) => a == "*" || agentLower.startsWith(a) }
     if (matching.isEmpty) AllowAll
     else {

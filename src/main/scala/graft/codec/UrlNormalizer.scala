@@ -1,174 +1,328 @@
 package graft.codec
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 /** RFC 3986 URL normalization for the crawl frontier (BASELINE.json
   * north_star; no reference impl — the reference only assembles
   * scheme://host+target, /root/reference/dialer.go:717-726).
   *
   * Rules (RFC 3986 §6.2.2 syntax-based normalization + standard crawler
-  * canonicalization):
+  * canonicalization), applied to the input with surrounding bytes
+  * ≤ 0x20 trimmed:
   *  - lowercase scheme and host
-  *  - strip default ports (http:80, https:443)
+  *  - strip default ports (http:80, https:443, ftp:21); write other
+  *    ports in plain decimal (`:0080` → `:80`)
   *  - remove dot-segments from the path (§5.2.4)
   *  - percent-encoding: uppercase hex digits; decode unreserved characters
   *  - empty path → "/"
   *  - drop the fragment
+  *  - userinfo is kept verbatim; trailing dots leave the host
+  *
+  * A URL parses when it starts with `scheme://`, the scheme being ASCII
+  * letters, digits, `+`, `-` and `.` (§3.1). A port is the ASCII digits
+  * after the host's last `:` (§3.2.3). A port whose value exceeds 65535
+  * makes the URL invalid: `isValid` is false, `host` is "", and
+  * `normalize` keeps its digits verbatim. Unparseable input normalizes to
+  * itself, trimmed — garbage is tolerated so a bad row never kills a
+  * 100 TB job; callers filter on `isValid`.
+  *
+  * Every rule touches only ASCII delimiters, so [[Canon]] works on the
+  * UTF-8 bytes in one scan and copies bytes ≥ 0x80 through. Two
+  * components are decoded when they need to be: a host with a non-ASCII
+  * byte is lowercased as a `String` (`Locale.ROOT`), and malformed UTF-8
+  * is first replaced by U+FFFD exactly as `new String(bytes, UTF_8)` does.
+  * The `String` methods below are UTF-8 wrappers over the same scan.
   */
 object UrlNormalizer {
 
-  private def isUnreserved(c: Char): Boolean =
+  /** One URL's normal form, plus what the URL kernels read off it. A
+    * `Canon` is reused for every URL one thread normalizes, so a run
+    * allocates nothing on well-formed input with an ASCII host; callers
+    * copy what they keep before the next run. Not thread-safe. */
+  final class Canon {
+    private var in = new Array[Byte](256)
+    /** The normal form: `buf[0, len)`. */
+    var buf = new Array[Byte](256)
+    var len = 0
+    /** `host(input)`: `buf[hostOff, hostOff + hostLen)`. */
+    var hostOff = 0
+    var hostLen = 0
+    /** `validHost(input) != null`: an http(s) URL with a non-empty host. */
+    var inputValid = false
+    /** `validHost(normal form) != null`, and that host:
+      * `buf[hostOff, hostOff + validHostLen)`. */
+    var valid = false
+    var validHostLen = 0
+
+    /** This Canon's input buffer, at least `n` bytes long. */
+    def input(n: Int): Array[Byte] = {
+      if (in.length < n) in = new Array[Byte](math.max(n, in.length * 2))
+      in
+    }
+
+    private def reserve(n: Int): Unit =
+      if (buf.length < n) buf = java.util.Arrays.copyOf(buf, math.max(n, buf.length * 2))
+
+    /** Normalize the UTF-8 bytes `b[0, n)`. */
+    def run(b: Array[Byte], n: Int): Canon = {
+      if (scan(b, n) < 0 && !wellFormed(b, n)) {
+        val s = new String(b, 0, n, UTF_8).getBytes(UTF_8)
+        scan(s, s.length)
+      }
+      this
+    }
+
+    /** One left-to-right pass over `b[0, n)` that writes the normal form.
+      * Returns a negative number when the output may hold a byte ≥ 0x80;
+      * `run` then checks that the input is well-formed UTF-8. */
+    private def scan(b: Array[Byte], n: Int): Int = {
+      hostOff = 0; hostLen = 0; inputValid = false; valid = false; validHostLen = 0
+      // String.trim: bytes ≤ 0x20 are exactly the chars ≤ U+0020
+      var lo = 0
+      var hi = n
+      while (lo < hi && (b(lo) & 0xff) <= 0x20) lo += 1
+      while (hi > lo && (b(hi - 1) & 0xff) <= 0x20) hi -= 1
+      // only the empty path grows the output, by the "/" it gets
+      reserve(hi - lo + 1)
+      var o = buf
+      var i = lo
+      var p = 0
+      var c: Byte = 0
+      while (i < hi && isSchemeByte({ c = b(i); c })) { o(p) = lower(c); p += 1; i += 1 }
+      if (p == 0 || i + 3 > hi || b(i) != ':' || b(i + 1) != '/' || b(i + 2) != '/') {
+        System.arraycopy(b, lo, o, 0, hi - lo)
+        len = hi - lo
+        return -1
+      }
+      val http = (p == 4 || p == 5 && o(4) == 's') &&
+        o(0) == 'h' && o(1) == 't' && o(2) == 't' && o(3) == 'p'
+      val defaultPort =
+        if (http) (if (p == 4) 80 else 443)
+        else if (p == 3 && o(0) == 'f' && o(1) == 't' && o(2) == 'p') 21
+        else -1
+      o(p) = ':'; o(p + 1) = '/'; o(p + 2) = '/'
+      p += 3
+      i += 3
+
+      // authority, up to the first '/', '?' or '#', copied lowercased;
+      // userinfo runs to its last '@' and is then copied back verbatim,
+      // the port is the digits after the last ':' behind that '@'
+      val a0 = i
+      val u0 = p
+      var high = 0
+      var at = -1
+      var colon = -1
+      var prevColon = -1
+      while (i < hi && { c = b(i); c != '/' && c != '?' && c != '#' }) {
+        high |= c
+        if (c == '@') { at = i; colon = -1; prevColon = -1 }
+        else if (c == ':') { prevColon = colon; colon = i }
+        o(p) = lower(c)
+        p += 1
+        i += 1
+      }
+      val a1 = i
+      val hs = if (at >= 0) at + 1 else a0
+      hostOff = u0 + (hs - a0)
+      if (at > a0) System.arraycopy(b, a0, o, u0, at - a0)
+      else if (at == a0) { // an empty userinfo drops its '@'
+        System.arraycopy(o, hostOff, o, u0, p - hostOff)
+        hostOff = u0
+      }
+      val port = if (colon >= 0) portValue(b, colon + 1, a1) else -1
+      val he = if (port >= 0) colon else a1
+      p = hostOff + (he - hs)
+      if (high < 0 && hasHigh(b, hs, he)) { // non-ASCII host: lowercase it as a String
+        val h = new String(b, hs, he - hs, UTF_8).toLowerCase(java.util.Locale.ROOT).getBytes(UTF_8)
+        reserve(hostOff + h.length + (hi - he) + 1)
+        o = buf
+        System.arraycopy(h, 0, o, hostOff, h.length)
+        p = hostOff + h.length
+      }
+      while (p > hostOff && o(p - 1) == '.') p -= 1
+      val hostEnd = p
+      val portOk = port <= 65535
+      hostLen = if (portOk) hostEnd - hostOff else 0
+      inputValid = http && he > hs && portOk
+
+      // validHost of the normal form, as a second parse would see it: the
+      // port written here, or else the digits after the host's own last ':'
+      var vEnd = hostEnd
+      var vPortOk = portOk
+      if (!portOk) {
+        System.arraycopy(b, colon, o, p, a1 - colon)
+        p += a1 - colon
+      } else if (port >= 0 && port != defaultPort) {
+        o(p) = ':'
+        p = writeDecimal(port, p + 1)
+      } else if ((if (port >= 0) prevColon else colon) >= 0) {
+        var k = hostEnd - 1
+        while (o(k) != ':') k -= 1
+        val v = portValue(o, k + 1, hostEnd)
+        if (v >= 0) { vEnd = k; vPortOk = v <= 65535 }
+      }
+      if (http && vPortOk && vEnd > hostOff) {
+        valid = true
+        while (vEnd > hostOff && o(vEnd - 1) == '.') vEnd -= 1
+        validHostLen = vEnd - hostOff
+      }
+
+      // path: '/'-led segments up to '?' or '#'; a "." or ".." segment
+      // (after percent-decoding) is removed as §5.2.4 says
+      val pathStart = p
+      while (i < hi && b(i) == '/') {
+        o(p) = '/'
+        p += 1
+        val seg = p
+        i += 1
+        while (i < hi && { c = b(i); c != '/' && c != '?' && c != '#' }) {
+          high |= c
+          if (c == '%' && isPercentTriple(b, i, hi)) { p = putPercent(b, i, p); i += 3 }
+          else { o(p) = c; p += 1; i += 1 }
+        }
+        val dots = p - seg
+        if ((dots == 1 || dots == 2) && o(seg) == '.' && o(p - 1) == '.') {
+          p = seg - 1
+          if (dots == 2 && p > pathStart) {
+            p -= 1
+            while (o(p) != '/') p -= 1
+          }
+          if (i == hi || b(i) != '/') { o(p) = '/'; p += 1 }
+        }
+      }
+      if (p == pathStart) { o(p) = '/'; p += 1 }
+      if (i < hi && b(i) == '?') {
+        o(p) = '?'
+        p += 1
+        i += 1
+        while (i < hi && { c = b(i); c != '#' }) {
+          high |= c
+          if (c == '%' && isPercentTriple(b, i, hi)) { p = putPercent(b, i, p); i += 3 }
+          else { o(p) = c; p += 1; i += 1 }
+        }
+      }
+      len = p
+      high
+    }
+
+    /** Write the percent-encoding at `b(i)` in normal form at `p`: an
+      * unreserved character decoded, anything else with uppercase hex.
+      * Returns the new end. */
+    private def putPercent(b: Array[Byte], i: Int, p: Int): Int = {
+      val v = (hexValue(b(i + 1)) << 4) | hexValue(b(i + 2))
+      if (isUnreserved(v)) { buf(p) = v.toByte; p + 1 }
+      else {
+        buf(p) = '%'; buf(p + 1) = upper(b(i + 1)); buf(p + 2) = upper(b(i + 2))
+        p + 3
+      }
+    }
+
+    private def writeDecimal(v: Int, p0: Int): Int = {
+      var p = p0
+      var d = 10000
+      while (d > 1 && v < d) d /= 10
+      while (d > 0) { buf(p) = ('0' + v / d % 10).toByte; p += 1; d /= 10 }
+      p
+    }
+  }
+
+  private val local = ThreadLocal.withInitial[Canon](() => new Canon)
+
+  /** This thread's [[Canon]]. */
+  def canon(): Canon = local.get
+
+  private def isSchemeByte(c: Byte): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+      c == '+' || c == '-' || c == '.'
+
+  private def isUnreserved(c: Int): Boolean =
     (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') ||
       (c >= '0' && c <= '9') || c == '-' || c == '.' || c == '_' || c == '~'
 
-  private def hexVal(c: Char): Int =
+  private def lower(c: Byte): Byte = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+  private def upper(c: Byte): Byte = if (c >= 'a' && c <= 'z') (c - 32).toByte else c
+
+  private def hexValue(c: Byte): Int =
     if (c >= '0' && c <= '9') c - '0'
     else if (c >= 'a' && c <= 'f') c - 'a' + 10
     else if (c >= 'A' && c <= 'F') c - 'A' + 10
     else -1
 
-  /** Normalize percent-encodings in a path/query component. */
-  private[codec] def normalizePercent(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
+  private def isPercentTriple(b: Array[Byte], i: Int, hi: Int): Boolean =
+    i + 2 < hi && hexValue(b(i + 1)) >= 0 && hexValue(b(i + 2)) >= 0
+
+  private def hasHigh(b: Array[Byte], from: Int, to: Int): Boolean = {
+    var k = from
+    while (k < to && b(k) >= 0) k += 1
+    k < to
+  }
+
+  /** Value of the ASCII digits `b[from, to)`, capped at 65536; -1 when
+    * the range is empty or holds anything else. */
+  private def portValue(b: Array[Byte], from: Int, to: Int): Int = {
+    if (from >= to) return -1
+    var v = 0
+    var k = from
+    while (k < to) {
+      val c = b(k)
+      if (c < '0' || c > '9') return -1
+      v = math.min(v * 10 + (c - '0'), 65536)
+      k += 1
+    }
+    v
+  }
+
+  /** Well-formed UTF-8 (Unicode Table 3-7): exactly the byte strings that
+    * `new String(_, UTF_8)` decodes without a replacement character. */
+  private def wellFormed(b: Array[Byte], n: Int): Boolean = {
     var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length &&
-          hexVal(s.charAt(i + 1)) >= 0 && hexVal(s.charAt(i + 2)) >= 0) {
-        val v = (hexVal(s.charAt(i + 1)) << 4) | hexVal(s.charAt(i + 2))
-        if (v < 128 && isUnreserved(v.toChar)) sb.append(v.toChar)
-        else {
-          sb.append('%')
-          sb.append(Character.toUpperCase(s.charAt(i + 1)))
-          sb.append(Character.toUpperCase(s.charAt(i + 2)))
-        }
-        i += 3
-      } else {
-        sb.append(c)
-        i += 1
-      }
-    }
-    sb.toString
-  }
-
-  /** RFC 3986 §5.2.4 remove_dot_segments. */
-  private[codec] def removeDotSegments(path: String): String = {
-    val out = new scala.collection.mutable.ArrayBuffer[String]
-    var in = path
-    while (in.nonEmpty) {
-      if (in.startsWith("../")) in = in.substring(3)
-      else if (in.startsWith("./")) in = in.substring(2)
-      else if (in.startsWith("/./")) in = "/" + in.substring(3)
-      else if (in == "/.") in = "/"
-      else if (in.startsWith("/../")) {
-        in = "/" + in.substring(4)
-        if (out.nonEmpty) out.remove(out.length - 1)
-      } else if (in == "/..") {
-        in = "/"
-        if (out.nonEmpty) out.remove(out.length - 1)
-      } else if (in == "." || in == "..") in = ""
+    while (i < n) {
+      val c = b(i) & 0xff
+      if (c < 0x80) i += 1
       else {
-        val start = if (in.startsWith("/")) 1 else 0
-        val next = in.indexOf('/', start)
-        if (next < 0) { out += in; in = "" }
-        else { out += in.substring(0, next); in = in.substring(next) }
+        val more =
+          if (c >= 0xC2 && c <= 0xDF) 1
+          else if (c >= 0xE0 && c <= 0xEF) 2
+          else if (c >= 0xF0 && c <= 0xF4) 3
+          else return false
+        if (i + more >= n) return false
+        val c1 = b(i + 1) & 0xff
+        val lo = if (c == 0xE0) 0xA0 else if (c == 0xF0) 0x90 else 0x80
+        val hi = if (c == 0xED) 0x9F else if (c == 0xF4) 0x8F else 0xBF
+        if (c1 < lo || c1 > hi) return false
+        var j = 2
+        while (j <= more) { if ((b(i + j) & 0xC0) != 0x80) return false; j += 1 }
+        i += more + 1
       }
     }
-    out.mkString
+    true
   }
 
-  /** Parse into (scheme, userinfo, host, port, path, query); fragment
-    * dropped. Returns None when there is no `scheme://`. */
-  private def split(url: String): Option[(String, String, String, Int, String, String)] = {
-    val schemeEnd = url.indexOf("://")
-    if (schemeEnd <= 0) return None
-    val scheme = url.substring(0, schemeEnd)
-    if (!scheme.forall(c => c.isLetterOrDigit || c == '+' || c == '-' || c == '.')) return None
-    var rest = url.substring(schemeEnd + 3)
-    val hashIdx = rest.indexOf('#')
-    if (hashIdx >= 0) rest = rest.substring(0, hashIdx)
-    val pathIdx = {
-      val slash = rest.indexOf('/')
-      val q = rest.indexOf('?')
-      if (slash < 0 && q < 0) rest.length
-      else if (slash < 0) q
-      else if (q < 0) slash
-      else math.min(slash, q)
-    }
-    val authority = rest.substring(0, pathIdx)
-    val pathAndQuery = rest.substring(pathIdx)
-    val (userinfo, hostPort) = {
-      val at = authority.lastIndexOf('@')
-      if (at >= 0) (authority.substring(0, at), authority.substring(at + 1))
-      else ("", authority)
-    }
-    val (host, port) = {
-      val colon = hostPort.lastIndexOf(':')
-      // avoid splitting IPv6 literals like [::1]
-      if (colon >= 0 && !hostPort.endsWith("]") && hostPort.substring(colon + 1).forall(_.isDigit)
-          && hostPort.substring(colon + 1).nonEmpty)
-        (hostPort.substring(0, colon), hostPort.substring(colon + 1).toInt)
-      else (hostPort, -1)
-    }
-    val qIdx = pathAndQuery.indexOf('?')
-    val (path, query) =
-      if (qIdx >= 0) (pathAndQuery.substring(0, qIdx), pathAndQuery.substring(qIdx + 1))
-      else (pathAndQuery, null)
-    Some((scheme, userinfo, host, port, path, query))
+  private def run(url: String): Canon = {
+    val b = url.getBytes(UTF_8)
+    canon().run(b, b.length)
   }
 
-  /** Root-dot FQDNs drop ALL trailing dots (a single stripSuffix is not a
-    * fixed point for hosts ending in '..', breaking normalize idempotence
-    * — caught by CodecPropertySpec). */
-  private def stripTrailingDots(h: String): String = {
-    var end = h.length
-    while (end > 0 && h.charAt(end - 1) == '.') end -= 1
-    h.substring(0, end)
-  }
-
-  private def defaultPort(scheme: String): Int = scheme match {
-    case "http" => 80
-    case "https" => 443
-    case "ftp" => 21
-    case _ => -1
-  }
-
-  /** Full syntax-based normalization. Unparseable inputs are returned
-    * trimmed (garbage-in tolerated so a bad row never kills a 100 TB job —
-    * callers filter on `isValid`). */
-  def normalize(url: String): String = {
-    if (url == null) return null
-    val trimmed = url.trim
-    split(trimmed) match {
-      case None => trimmed
-      case Some((scheme0, userinfo, host0, port, path0, query)) =>
-        val scheme = scheme0.toLowerCase
-        val host = stripTrailingDots(host0.toLowerCase)
-        val portPart = if (port < 0 || port == defaultPort(scheme)) "" else s":$port"
-        val userPart = if (userinfo.isEmpty) "" else userinfo + "@"
-        val path1 = normalizePercent(path0)
-        val path2 = removeDotSegments(if (path1.isEmpty) "/" else path1)
-        val path = if (path2.isEmpty) "/" else path2
-        val queryPart = if (query == null) "" else "?" + normalizePercent(query)
-        s"$scheme://$userPart$host$portPart$path$queryPart"
-    }
-  }
+  /** Full syntax-based normalization; null stays null. */
+  def normalize(url: String): String =
+    if (url == null) null
+    else { val c = run(url); new String(c.buf, 0, c.len, UTF_8) }
 
   /** RFC 3986 §3.1: schemes are case-INSENSITIVE — `HTTPS://…` is valid
     * (normalize already lowercases it; this must agree on raw input). */
-  def isValid(url: String): Boolean = validHost(url) != null
+  def isValid(url: String): Boolean = url != null && run(url).inputValid
 
-  /** `host(url)` when `isValid(url)`, else null — both answers from one
-    * `split` (the canonicalize kernel's per-row check). */
+  /** `host(url)` when `isValid(url)`, else null. */
   def validHost(url: String): String =
     if (url == null) null
-    else split(url.trim) match {
-      case Some((s, _, h, _, _, _)) if h.nonEmpty && {
-            val sl = s.toLowerCase
-            sl == "http" || sl == "https"
-          } => stripTrailingDots(h.toLowerCase)
-      case _ => null
+    else {
+      val c = run(url)
+      if (c.inputValid) new String(c.buf, c.hostOff, c.hostLen, UTF_8) else null
     }
 
-  /** Lowercased host of a url, or "" when unparseable. */
+  /** Lowercased host of a url without trailing dots, or "" when it does
+    * not parse or its port exceeds 65535. */
   def host(url: String): String =
-    if (url == null) "" else split(url.trim).map(h => stripTrailingDots(h._3.toLowerCase)).getOrElse("")
+    if (url == null) ""
+    else { val c = run(url); new String(c.buf, c.hostOff, c.hostLen, UTF_8) }
 }

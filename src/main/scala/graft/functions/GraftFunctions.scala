@@ -4,13 +4,14 @@ import graft.codec.{Digests, HttpCodec, UrlNormalizer}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, SpecificInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, GenericInternalRow, SpecificInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static, null-free kernels callable from generated code. Keeping these as
@@ -216,20 +217,34 @@ object Kernels {
   def langId(s: UTF8String): UTF8String =
     UTF8String.fromString(Hashing.langId(s.toString, langTable))
 
-  def urlNormalize(s: UTF8String): UTF8String =
-    UTF8String.fromString(UrlNormalizer.normalize(s.toString))
-  def urlHost(s: UTF8String): UTF8String =
-    UTF8String.fromString(UrlNormalizer.host(s.toString))
-  def urlIsValid(s: UTF8String): Boolean = UrlNormalizer.isValid(s.toString)
+  /** Normalize `s` with `c`, through `c`'s input buffer. */
+  private def run(c: UrlNormalizer.Canon, s: UTF8String): Unit = {
+    val n = s.numBytes
+    val in = c.input(n)
+    s.writeToMemory(in, Platform.BYTE_ARRAY_OFFSET)
+    c.run(in, n)
+  }
+  def urlNormalize(c: UrlNormalizer.Canon, s: UTF8String): UTF8String = {
+    run(c, s)
+    UTF8String.fromBytes(java.util.Arrays.copyOf(c.buf, c.len))
+  }
+  def urlHost(c: UrlNormalizer.Canon, s: UTF8String): UTF8String = {
+    run(c, s)
+    UTF8String.fromBytes(java.util.Arrays.copyOfRange(c.buf, c.hostOff, c.hostOff + c.hostLen))
+  }
+  def urlIsValid(c: UrlNormalizer.Canon, s: UTF8String): Boolean = { run(c, s); c.inputValid }
   private val noUrl = new GenericArrayData(Array.empty[Any])
   /** `url_is_valid(n) ? [(n, url_host(n))] : []` for `n = url_normalize(s)`,
-    * parsing `s` once and `n` once. */
-  def urlCanon(s: UTF8String): ArrayData = {
-    val norm = UrlNormalizer.normalize(s.toString)
-    val host = UrlNormalizer.validHost(norm)
-    if (host == null) noUrl
-    else new GenericArrayData(Array[Any](
-      InternalRow(UTF8String.fromString(norm), UTF8String.fromString(host))))
+    * from one scan of `s`; the host is a view of the normal form's bytes. */
+  def urlCanon(c: UrlNormalizer.Canon, s: UTF8String): ArrayData = {
+    run(c, s)
+    if (!c.valid) noUrl
+    else {
+      val norm = java.util.Arrays.copyOf(c.buf, c.len)
+      new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](
+        UTF8String.fromBytes(norm),
+        UTF8String.fromBytes(norm, c.hostOff, c.validHostLen)))))
+    }
   }
   def sha1Base32(b: Array[Byte]): UTF8String = UTF8String.fromString(Digests.sha1Base32(b))
   def sha256Base32(b: Array[Byte]): UTF8String = UTF8String.fromString(Digests.sha256Base32(b))
@@ -347,26 +362,42 @@ abstract class KernelUnary extends UnaryExpression {
     defineCodeGen(ctx, ev, c => kernelCall.format(c))
 }
 
-case class UrlNormalize(child: Expression) extends KernelUnary {
+/** A URL kernel, called with a [[UrlNormalizer.Canon]] as its first
+  * argument. Generated code makes one per stage instance, so one per task,
+  * when the stage starts; interpreted evaluation takes the thread's own.
+  * (A per-row `ThreadLocal` lookup missed its first probe on Spark's task
+  * threads and cost as much CPU as the scan it served.) */
+abstract class UrlKernel extends KernelUnary {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val canon = ctx.addMutableState("graft.codec.UrlNormalizer.Canon", "urlCanon",
+      v => s"$v = new graft.codec.UrlNormalizer.Canon();")
+    defineCodeGen(ctx, ev, c => kernelCall.format(canon, c))
+  }
+}
+
+case class UrlNormalize(child: Expression) extends UrlKernel {
   override def dataType: DataType = StringType
-  override protected def kernelCall = "graft.functions.Kernels.urlNormalize(%s)"
-  override def nullSafeEval(v: Any): Any = Kernels.urlNormalize(v.asInstanceOf[UTF8String])
+  override protected def kernelCall = "graft.functions.Kernels.urlNormalize(%s, %s)"
+  override def nullSafeEval(v: Any): Any =
+    Kernels.urlNormalize(UrlNormalizer.canon(), v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): UrlNormalize = copy(child = c)
   override def prettyName: String = "url_normalize"
 }
 
-case class UrlHost(child: Expression) extends KernelUnary {
+case class UrlHost(child: Expression) extends UrlKernel {
   override def dataType: DataType = StringType
-  override protected def kernelCall = "graft.functions.Kernels.urlHost(%s)"
-  override def nullSafeEval(v: Any): Any = Kernels.urlHost(v.asInstanceOf[UTF8String])
+  override protected def kernelCall = "graft.functions.Kernels.urlHost(%s, %s)"
+  override def nullSafeEval(v: Any): Any =
+    Kernels.urlHost(UrlNormalizer.canon(), v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): UrlHost = copy(child = c)
   override def prettyName: String = "url_host"
 }
 
-case class UrlIsValid(child: Expression) extends KernelUnary {
+case class UrlIsValid(child: Expression) extends UrlKernel {
   override def dataType: DataType = BooleanType
-  override protected def kernelCall = "graft.functions.Kernels.urlIsValid(%s)"
-  override def nullSafeEval(v: Any): Any = Kernels.urlIsValid(v.asInstanceOf[UTF8String])
+  override protected def kernelCall = "graft.functions.Kernels.urlIsValid(%s, %s)"
+  override def nullSafeEval(v: Any): Any =
+    Kernels.urlIsValid(UrlNormalizer.canon(), v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): UrlIsValid = copy(child = c)
   override def prettyName: String = "url_is_valid"
 }
@@ -376,12 +407,13 @@ case class UrlIsValid(child: Expression) extends KernelUnary {
   * struct, so `inline` expands it in a `Generate` that filter pushdown
   * cannot copy (see `Frontier.canonicalize`). Field nullability follows
   * the input, as `url_normalize`/`url_host` do. */
-case class UrlCanon(child: Expression) extends KernelUnary {
+case class UrlCanon(child: Expression) extends UrlKernel {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("url_norm", StringType, child.nullable),
     StructField("host", StringType, child.nullable))), containsNull = false)
-  override protected def kernelCall = "graft.functions.Kernels.urlCanon(%s)"
-  override def nullSafeEval(v: Any): Any = Kernels.urlCanon(v.asInstanceOf[UTF8String])
+  override protected def kernelCall = "graft.functions.Kernels.urlCanon(%s, %s)"
+  override def nullSafeEval(v: Any): Any =
+    Kernels.urlCanon(UrlNormalizer.canon(), v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): UrlCanon = copy(child = c)
   override def prettyName: String = "url_canon"
 }

@@ -45,7 +45,7 @@ object Multimodal {
         try {
           r.setInput(iis)
           // header-only: width/height come from metadata, no raster decode
-          MediaMeta(bytes.length.toLong, r.getFormatName.toLowerCase,
+          MediaMeta(bytes.length.toLong, r.getFormatName.toLowerCase(java.util.Locale.ROOT),
             r.getWidth(0), r.getHeight(0), valid = true)
         } finally r.dispose()
       } else stubMeta(bytes)
@@ -129,7 +129,7 @@ object Multimodal {
     if (bytes == null || bytes.isEmpty) return AudioMeta(0L, "empty", 0, 0, 0L, valid = false)
     audioFileFormat(bytes) match {
       case Some(aff) =>
-        AudioMeta(bytes.length.toLong, aff.getType.toString.toLowerCase,
+        AudioMeta(bytes.length.toLong, aff.getType.toString.toLowerCase(java.util.Locale.ROOT),
           aff.getFormat.getChannels, aff.getFormat.getSampleRate.toInt,
           aff.getFrameLength.toLong, valid = true)
       case None => AudioMeta(bytes.length.toLong, "unknown", 0, 0, 0L, valid = false)

@@ -78,7 +78,7 @@ object PagesGen extends Serializable {
     val slash = clean.indexOf('/', 8)
     val (hostPart, pathPart) = (clean.substring(0, slash), clean.substring(slash))
     (id % 4, id % 16) match {
-      case (0, 0)  => hostPart.toUpperCase + pathPart // scheme+host case
+      case (0, 0)  => hostPart.toUpperCase(java.util.Locale.ROOT) + pathPart // scheme+host case
       case (1, 1)  => hostPart + ":443" + pathPart // default port
       case (2, 2)  => hostPart + "/." + pathPart // dot segment
       case (3, 3)  => clean + "#section-" + (id % 7) // fragment

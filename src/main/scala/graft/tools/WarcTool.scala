@@ -112,7 +112,7 @@ object WarcTool {
           !r.headers.getOrElse("Content-Type", "").contains("msgtype=response")) true
       else try {
         val (msg, body) = HttpCodec.decodedBodyStream(r.payload.inputStream())
-        if (msg.headers.exists(_._1.toLowerCase.startsWith("x-crawler-"))) false
+        if (msg.headers.exists(_._1.toLowerCase(java.util.Locale.ROOT).startsWith("x-crawler-"))) false
         else stored.split(":", 2) match {
           case Array("sha1", d) => d == Digests.base32(streamDigest(body, "SHA-1"))
           case Array("sha256", d) => d == Digests.base32(streamDigest(body, "SHA-256"))

@@ -218,6 +218,89 @@ class UrlNormalizerSpec extends AnyFunSuite {
     assert(UrlNormalizer.isValid("HTTPS://example.com/x"))
     assert(UrlNormalizer.isValid("Http://example.com/x"))
   }
+  test("a port over 65535 makes the URL invalid; normalize keeps its digits and never throws") {
+    for (u <- Seq("http://h:99999999999/x", "http://h:65536/x", "https://h:443:99999999999/")) {
+      assert(normalize(u) == u, u)
+      assert(!UrlNormalizer.isValid(u), u)
+      assert(UrlNormalizer.host(u) == "", u)
+      assert(UrlNormalizer.validHost(u) == null, u)
+    }
+    assert(UrlNormalizer.isValid("http://h:65535/x"))
+    assert(normalize("http://h:65535/x") == "http://h:65535/x")
+  }
+
+  // Awkward URLs, each expected value worked out by hand from RFC 3986
+  // and the rules in the UrlNormalizer scaladoc (not by running the code).
+  // Columns: input, normalize, host, isValid.
+  private val awkward = Seq(
+    // §3.1, §6.2.2.1: the scheme is case-insensitive and normalizes to
+    // lowercase; the path is case-sensitive and is kept
+    ("HTTP://EXAMPLE.COM/", "http://example.com/", "example.com", true),
+    ("hTTpS://Example.Com/A", "https://example.com/A", "example.com", true),
+    // §3.2.2: a reg-name is case-insensitive; a non-ASCII (IRI) host
+    // lowercases per Unicode, an ASCII xn-- label per ASCII
+    ("http://BÜCHER.example/", "http://bücher.example/", "bücher.example", true),
+    ("http://XN--BCHER-KVA.EXAMPLE/", "http://xn--bcher-kva.example/", "xn--bcher-kva.example", true),
+    // §2.1, §6.2.2.1: percent-encoding hex digits normalize to uppercase;
+    // non-ASCII octets stay encoded
+    ("http://h/%e2%82%ac", "http://h/%E2%82%AC", "h", true),
+    // §2.2: "%2F" is an encoded reserved "/", not a delimiter: it stays
+    ("http://h/a%2fb", "http://h/a%2Fb", "h", true),
+    // §2.3, §6.2.2.2: encoded unreserved characters decode
+    ("http://h/%7euser%41", "http://h/~userA", "h", true),
+    // §2.1: "%4" is not a pct-encoded triple; it is copied as it is
+    ("http://h/a%4", "http://h/a%4", "h", true),
+    ("http://h/a%4?x", "http://h/a%4?x", "h", true),
+    // §6.2.2.2 before §6.2.2.3: "%2E%2e" decodes to "..", then goes
+    ("http://h/a/%2E%2e/b", "http://h/b", "h", true),
+    // §3.2.1: userinfo runs to the last "@", may hold ":" and is kept as
+    // it is; only the host after it lowercases
+    ("http://user:pw@Host.COM/", "http://user:pw@host.com/", "host.com", true),
+    ("http://a@b@Host/", "http://a@b@host/", "host", true),
+    // §3.2.2 IP-literal with §3.2.3 port and §5.2.4 dot segments
+    ("http://[::1]:8080/a/./b/../c", "http://[::1]:8080/a/c", "[::1]", true),
+    // §3.2.2 hex in an IP-literal is case-insensitive; §6.2.3 default port
+    ("http://[2001:DB8::1]:80/", "http://[2001:db8::1]/", "[2001:db8::1]", true),
+    // §3.2.2: a trailing dot names the same fully qualified host
+    ("http://example.com./", "http://example.com/", "example.com", true),
+    // host "." is non-empty in the input, but empty once its dot goes
+    ("http://./", "http:///", "", true),
+    // §3.2.3 allows an empty port; §6.2.3 says a normalizer should drop it,
+    // which this one does not do: "h:" stays the host
+    ("http://h:/x", "http://h:/x", "h:", true),
+    // §3.5: the fragment is not sent in a request; it goes
+    ("http://h/p?q#f#g", "http://h/p?q", "h", true),
+    ("http://h#f", "http://h/", "h", true),
+    // Appendix C: surrounding whitespace is not part of the URI
+    ("  \thttp://h/x \n", "http://h/x", "h", true),
+    // §3.1: a scheme is ASCII; with anything else there is no scheme
+    ("é://h/", "é://h/", "", false),
+    // §3.2.3: a port is ASCII digits; Arabic-Indic digits are host text
+    ("http://h:٨٠/", "http://h:٨٠/", "h:٨٠", true))
+
+  test("awkward URLs match their hand-derived RFC 3986 values") {
+    for ((in, norm, host, valid) <- awkward) {
+      assert(normalize(in) == norm, in)
+      assert(UrlNormalizer.host(in) == host, in)
+      assert(UrlNormalizer.isValid(in) == valid, in)
+    }
+  }
+}
+
+class CaseFoldingSpec extends AnyFunSuite {
+  test("case folding does not follow the default locale (Turkish dotless i)") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      assert(UrlNormalizer.normalize("HTTP://WIKI.EXAMPLE/") == "http://wiki.example/")
+      assert(UrlNormalizer.host("HTTP://WIKI.EXAMPLE/") == "wiki.example")
+      val gz = HttpMessage("HTTP/1.1 200 OK", Seq("Content-Encoding" -> "GZIP"), Array.emptyByteArray)
+      assert(gz.isGzipped)
+      val rules = Robots.parse("USER-AGENT: *\nDISALLOW: /private/\n")
+      assert(!rules.allows("/private/x"))
+      assert(rules.allows("/open"))
+    } finally java.util.Locale.setDefault(saved)
+  }
 }
 
 class SitemapSpec extends AnyFunSuite {

@@ -173,6 +173,16 @@ class FrontierSpec extends AnyFunSuite {
       Seq("http://a.com/y", "http://a.com/", "http://[::1]:8080/", "http://a /"))
   }
 
+  test("canonicalize drops a URL whose port exceeds 65535 and keeps the batch") {
+    import spark.implicits._
+    val urls = Seq("http://a.example/1", "http://h:99999999999/x", "HTTP://B.example:80/2",
+      "http://h:65536/y", "https://c.example:8443/3").toDF("url")
+    val got = Frontier.canonicalize(urls).select("url_norm", "host").as[(String, String)]
+      .collect().toSeq
+    assert(got == Seq("http://a.example/1" -> "a.example", "http://b.example/2" -> "b.example",
+      "https://c.example:8443/3" -> "c.example"))
+  }
+
   test("extracted text is byte-identical to the pages' text column") {
     import graft.functions.GraftFunctions._
     val bad = pagesDf

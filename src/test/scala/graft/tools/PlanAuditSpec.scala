@@ -42,13 +42,35 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(errs.size == 1 && errs.head.contains("hashpartitioning(k#3"), errs)
   }
 
+  private def assertContract(a: PlanAudit.Audit, plan: String): Unit = {
+    val errs = a.check(plan)
+    assert(errs.isEmpty,
+      s"\n${a.name} plan regressed [expect: ${a.expectation}]:\n" +
+        errs.mkString("  - ", "\n  - ", "") + s"\n--- plan ---\n$plan")
+  }
+
   PlanAudit.audits.foreach { a =>
     test(s"plan contract: ${a.name}") {
-      val plan = a.build(spark, sf).queryExecution.executedPlan.toString
-      val errs = a.check(plan)
-      assert(errs.isEmpty,
-        s"\n${a.name} plan regressed [expect: ${a.expectation}]:\n" +
-          errs.mkString("  - ", "\n  - ", "") + s"\n--- plan ---\n$plan")
+      assertContract(a, a.build(spark, sf).queryExecution.executedPlan.toString)
     }
+  }
+
+  // At sf0.1 the larger tables pass Queries.floorMinBytes, so their scans
+  // get the scan-width floor's round-robin exchange, which sf0.01 never
+  // plans. Planned only, not run.
+  private val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.1").getPath
+  private lazy val floored: Map[String, String] = PlanAudit.audits.map { a =>
+    a.name -> a.build(spark, sf01).queryExecution.executedPlan.toString
+  }.toMap
+
+  PlanAudit.audits.foreach { a =>
+    test(s"plan contract at sf0.1: ${a.name}") {
+      assertContract(a, floored(a.name))
+    }
+  }
+
+  test("sf0.1 plans include the scan-width floor's round-robin") {
+    val withFloor = floored.filter(_._2.contains("RoundRobinPartitioning")).keys
+    assert(withFloor.nonEmpty, "no sf0.1 plan has a RoundRobinPartitioning exchange")
   }
 }
