@@ -29,16 +29,18 @@ import java.nio.charset.StandardCharsets.UTF_8
   * Every rule touches only ASCII delimiters, so [[Canon]] works on the
   * UTF-8 bytes in one scan and copies bytes ≥ 0x80 through. Two
   * components are decoded when they need to be: a host with a non-ASCII
-  * byte is lowercased as a `String` (`Locale.ROOT`), and malformed UTF-8
-  * is first replaced by U+FFFD exactly as `new String(bytes, UTF_8)` does.
+  * byte is lowercased as a `String` (`Locale.ROOT`), and input with a
+  * byte ≥ 0x80 is scanned again after `new String(bytes, UTF_8)`, which
+  * replaces malformed UTF-8 by U+FFFD and gives well-formed input back
+  * unchanged.
   * The `String` methods below are UTF-8 wrappers over the same scan.
   */
 object UrlNormalizer {
 
   /** One URL's normal form, plus what the URL kernels read off it. A
     * `Canon` is reused for every URL one thread normalizes, so a run
-    * allocates nothing on well-formed input with an ASCII host; callers
-    * copy what they keep before the next run. Not thread-safe. */
+    * allocates nothing on ASCII input; callers copy what they keep
+    * before the next run. Not thread-safe. */
   final class Canon {
     private var in = new Array[Byte](256)
     /** The normal form: `buf[0, len)`. */
@@ -65,7 +67,8 @@ object UrlNormalizer {
 
     /** Normalize the UTF-8 bytes `b[0, n)`. */
     def run(b: Array[Byte], n: Int): Canon = {
-      if (scan(b, n) < 0 && !wellFormed(b, n)) {
+      if (scan(b, n) < 0) {
+        // malformed UTF-8 becomes U+FFFD; well-formed bytes come back as they were
         val s = new String(b, 0, n, UTF_8).getBytes(UTF_8)
         scan(s, s.length)
       }
@@ -74,7 +77,7 @@ object UrlNormalizer {
 
     /** One left-to-right pass over `b[0, n)` that writes the normal form.
       * Returns a negative number when the output may hold a byte ≥ 0x80;
-      * `run` then checks that the input is well-formed UTF-8. */
+      * `run` then rescans the input decoded and re-encoded. */
     private def scan(b: Array[Byte], n: Int): Int = {
       hostOff = 0; hostLen = 0; inputValid = false; valid = false; validHostLen = 0
       // String.trim: bytes ≤ 0x20 are exactly the chars ≤ U+0020
@@ -92,7 +95,7 @@ object UrlNormalizer {
       if (p == 0 || i + 3 > hi || b(i) != ':' || b(i + 1) != '/' || b(i + 2) != '/') {
         System.arraycopy(b, lo, o, 0, hi - lo)
         len = hi - lo
-        return -1
+        return if (hasHigh(b, lo, hi)) -1 else 0
       }
       val http = (p == 4 || p == 5 && o(4) == 's') &&
         o(0) == 'h' && o(1) == 't' && o(2) == 't' && o(3) == 'p'
@@ -270,32 +273,6 @@ object UrlNormalizer {
       k += 1
     }
     v
-  }
-
-  /** Well-formed UTF-8 (Unicode Table 3-7): exactly the byte strings that
-    * `new String(_, UTF_8)` decodes without a replacement character. */
-  private def wellFormed(b: Array[Byte], n: Int): Boolean = {
-    var i = 0
-    while (i < n) {
-      val c = b(i) & 0xff
-      if (c < 0x80) i += 1
-      else {
-        val more =
-          if (c >= 0xC2 && c <= 0xDF) 1
-          else if (c >= 0xE0 && c <= 0xEF) 2
-          else if (c >= 0xF0 && c <= 0xF4) 3
-          else return false
-        if (i + more >= n) return false
-        val c1 = b(i + 1) & 0xff
-        val lo = if (c == 0xE0) 0xA0 else if (c == 0xF0) 0x90 else 0x80
-        val hi = if (c == 0xED) 0x9F else if (c == 0xF4) 0x8F else 0xBF
-        if (c1 < lo || c1 > hi) return false
-        var j = 2
-        while (j <= more) { if ((b(i + j) & 0xC0) != 0x80) return false; j += 1 }
-        i += more + 1
-      }
-    }
-    true
   }
 
   private def run(url: String): Canon = {

@@ -1,7 +1,7 @@
 package graft.codec
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
@@ -71,7 +71,9 @@ class UrlGoldenSpec extends AnyFunSuite {
       val f = l.split("\t", -1)
       f(0).toInt -> (f(1), f.toSeq.drop(2))
     }.toMap
-    val generated = UnsafeProjection.create(UrlGolden.kernels)
+    // generate, not UnsafeProjection.create: a failed compile must throw
+    // here instead of falling back to the interpreted projection
+    val generated = GenerateUnsafeProjection.generate(UrlGolden.kernels)
     val golden = lines("url-golden.tsv.gz")
     assert(golden.size >= 20000)
     val bad = Seq.newBuilder[String]
