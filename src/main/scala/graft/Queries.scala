@@ -126,9 +126,9 @@ object Queries {
         (df, v)
     }
     // byteStringAsBytes, not a bare toLong: the conf's documented unit
-    // syntax ("128MB", "64m") is valid here — set via spark-defaults,
-    // a user override, or the F07Prof A/B hook — and only the internal
-    // "134217728b" rendering would survive a stripSuffix parse.
+    // syntax ("128MB", "64m") is valid here — set via spark-defaults or
+    // a user override — and only the internal "134217728b" rendering
+    // would survive a stripSuffix parse.
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.files.maxPartitionBytes", "134217728")) max 1L
     // effective scan width: min(row groups, byte-range splits) per file
@@ -265,10 +265,6 @@ object Queries {
           lit("\r\n\r\n"), col("body")).cast("binary").as("html"),
         col("body").as("text"),
         lit("en").as("lang"))
-
-  /** F07Prof's hook into the private closed-form web (diagnostics only). */
-  private[graft] def webLiteForProf(s: SparkSession, dir: String): DataFrame =
-    webLite(s, dir)
 
   /** One unrolled crawl round for the f07 DuckDB oracle. Mirrors
     * Crawl.round exactly: in-batch first-wins (depth asc, ts desc), seen
@@ -531,7 +527,7 @@ object Queries {
       // the bottleneck is per-stage orchestration, so ONE reducer and AQE
       // off (AQE turns each of the round's ~5 exchanges into a separate
       // query-stage job submission — pure fixed cost when every stage is
-      // one task; measured -20% wall via F07Prof A/B). Restored after the
+      // one task; measured -20% wall in an A/B of this loop). Restored after the
       // loop: the returned plan and every other query keep the session
       // defaults, and a real (10^9-url-round) crawl would too — there AQE's
       // runtime re-plan earns its overhead back on skew.
@@ -539,6 +535,7 @@ object Queries {
       val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
       s.conf.set("spark.sql.shuffle.partitions", "1")
       s.conf.set("spark.sql.adaptive.enabled", "false")
+      val seenDir = java.nio.file.Files.createTempDirectory("graft-f07-seen")
       try {
       // the web is joined in EVERY round's job: checkpoint it once so each
       // round plans and scans a leaf, not the full derivation
@@ -559,30 +556,28 @@ object Queries {
       // per round for nothing at this cluster width — f04 keeps the salted
       // plan under oracle + plan-assert coverage; both emit identical rows)
       val cfg = Frontier.Config(defaultBudget = 2, maxBudgetHint = 3)
+      val store = graft.state.SeenStore(seenDir.toString, graft.state.SeenStore.Config(parts = 1))
       var frontier = seeds
-      var seen: Option[DataFrame] = None
       var out: Option[DataFrame] = None
       for (r <- 1 to 3) {
-        val o = Crawl.round(frontier, seen, web, Some(robots), Some(politeness),
-          cfg, withCounters = false)
-        // ONE materialization per round: captures + new-seen + next
-        // frontier ride a single tagged union through one eager
-        // localCheckpoint (3 driver actions/round → 1; at 89-url scale the
-        // fixed per-action cost dominated the whole query)
+        val o = Crawl.round(frontier, web, Some(robots), Some(politeness),
+          cfg, withCounters = false, seenStore = Some(store))
+        // ONE materialization per round for the rows the loop keeps:
+        // captures + next frontier ride a single tagged union through one
+        // eager localCheckpoint (at 89-url scale the fixed per-action cost
+        // dominates the whole query); the seen increment is the round's
+        // one other job
         val ck = o.fetched.select(lit(0).as("__t"), lit(r).as("round"),
             col("url_norm"), col("depth"), col("batch_rank"),
             col("is_revisit"), col("refers_to_url"), col("text_ok"))
-          .unionByName(o.newSeen.select(lit(1).as("__t"), col("url_hash"),
-            col("url_norm")), allowMissingColumns = true)
           .unionByName(o.nextFrontier.select(lit(2).as("__t"), col("url"),
             col("depth"), col("warc_ts")), allowMissingColumns = true)
           .localCheckpoint(true)
         val tagged = ck.filter(col("__t") === 0).select("round", "url_norm",
           "depth", "batch_rank", "is_revisit", "refers_to_url", "text_ok")
         out = Some(out.map(_.unionByName(tagged)).getOrElse(tagged))
-        val newSeen = ck.filter(col("__t") === 1).select("url_hash", "url_norm")
-        seen = Some(seen.map(_.unionByName(newSeen)).getOrElse(newSeen))
         frontier = ck.filter(col("__t") === 2).select("url", "depth", "warc_ts")
+        store.append(o.newSeen, r - 1L)
         o.release()
       }
       // 19 output rows: one partition sorts them without a range-partition
@@ -591,6 +586,7 @@ object Queries {
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", prevParts)
         s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        graft.LocalFiles.deleteRec(seenDir.toFile)
       }
     }),
 

@@ -10,8 +10,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * canonicalization), applied to the input with surrounding bytes
   * ≤ 0x20 trimmed:
   *  - lowercase scheme and host
-  *  - strip default ports (http:80, https:443, ftp:21); write other
-  *    ports in plain decimal (`:0080` → `:80`)
+  *  - strip default ports (http:80, https:443, ftp:21) and empty ones
+  *    (`h:/` → `h/`, §6.2.3); write other ports in plain decimal
+  *    (`:0080` → `:80`)
   *  - remove dot-segments from the path (§5.2.4)
   *  - percent-encoding: uppercase hex digits; decode unreserved characters
   *  - empty path → "/"
@@ -133,7 +134,8 @@ object UrlNormalizer {
         hostOff = u0
       }
       val port = if (colon >= 0) portValue(b, colon + 1, a1) else -1
-      val he = if (port >= 0) colon else a1
+      // an empty port (a ':' that ends the authority) goes too (§6.2.3)
+      val he = if (port >= 0 || colon == a1 - 1) colon else a1
       p = hostOff + (he - hs)
       if (high < 0 && hasHigh(b, hs, he)) { // non-ASCII host: lowercase it as a String
         val h = new String(b, hs, he - hs, UTF_8).toLowerCase(java.util.Locale.ROOT).getBytes(UTF_8)
@@ -158,11 +160,12 @@ object UrlNormalizer {
       } else if (port >= 0 && port != defaultPort) {
         o(p) = ':'
         p = writeDecimal(port, p + 1)
-      } else if ((if (port >= 0) prevColon else colon) >= 0) {
+      } else if ((if (he == colon) prevColon else colon) >= 0) {
         var k = hostEnd - 1
         while (o(k) != ':') k -= 1
         val v = portValue(o, k + 1, hostEnd)
         if (v >= 0) { vEnd = k; vPortOk = v <= 65535 }
+        else if (k == hostEnd - 1) vEnd = k // an empty port, as above
       }
       if (http && vPortOk && vEnd > hostOff) {
         valid = true

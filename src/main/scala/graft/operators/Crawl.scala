@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.GraftFunctions._
-import graft.state.{DigestIndex, SeenStore, TableIO}
+import graft.state.{DigestIndex, Durable, SeenStore, TableIO}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -77,12 +77,11 @@ object Crawl {
     "payload_bytes" -> Option(row.get(3)).map(_.asInstanceOf[Long]).getOrElse(0L),
     "dedupe_saved_bytes" -> Option(row.get(4)).map(_.asInstanceOf[Long]).getOrElse(0L))
 
-  /** One frontier round. `web` must be the asWeb() shape. Seen-state comes
-    * from either `seenStore` (the partitioned scale path) or `seen` (an
-    * in-memory DataFrame for small crawls/tests) — store wins if both. */
+  /** One frontier round. `web` must be the asWeb() shape. Seen-state is
+    * `seenStore` (`None`: nothing seen yet); its probe runs in executors,
+    * so they must be able to read the store's directory. */
   def round(
       frontier: DataFrame,
-      seen: Option[DataFrame],
       web: DataFrame,
       robots: Option[DataFrame],
       politeness: Option[DataFrame],
@@ -96,11 +95,8 @@ object Crawl {
     // within-round first-discovery-wins per url
     val batchDeduped = Frontier.firstSeenWins(canonical, col("url_hash"),
       Seq(col("depth").asc, col("warc_ts").desc, col("url_norm").asc))
-    val filtered = seenStore match {
-      case Some(st) => st.filterUnseen(batchDeduped)
-      case None =>
-        SeenStore.Filtered(Frontier.dedupeAgainstSeen(batchDeduped, seen, cfg), () => ())
-    }
+    val filtered = seenStore.fold(SeenStore.Filtered(batchDeduped, () => ()))(
+      _.filterUnseen(batchDeduped))
     val allowed = (robots match {
       case Some(r) => Frontier.applyRobots(filtered.result, r, cfg)
       case None => filtered.result
@@ -154,12 +150,15 @@ object Crawl {
         (col("depth") + 1).as("depth"),
         col("page_ts").as("warc_ts"))
 
-  /** Run `maxRounds` rounds from a seed list. When `stateDir` is given, the
-    * seen set grows by O(|new|) append-only increments (SeenStore) and the
-    * frontier is snapshotted per round; both are keyed by the round number,
-    * so resume picks the largest round committed in BOTH tables — a crash
-    * between the two commits replays that round exactly (north_rule exact
-    * resume), never against a stale frontier. */
+  /** Run `maxRounds` rounds from a seed list. The seen set grows by
+    * O(|new|) append-only increments in one SeenStore: `stateDir + "/seen"`,
+    * or without `stateDir` a fresh temp directory that is deleted when the
+    * crawl returns or throws. The seen probe runs in executors, so they
+    * must be able to read the temp store exactly as they would `stateDir`.
+    * With `stateDir` the frontier is also snapshotted per round; both are
+    * keyed by the round number, so resume picks the largest round committed
+    * in BOTH tables — a crash between the two commits replays that round
+    * exactly (north_rule exact resume), never against a stale frontier. */
   def crawl(
       spark: SparkSession,
       web: DataFrame,
@@ -174,166 +173,134 @@ object Crawl {
       digestIndex: Option[DigestIndex.Ref] = None): CrawlResult = {
     import spark.implicits._
 
-    val store = stateDir.map(d => SeenStore(d + "/seen", SeenStore.Config(cfg.seenParts)))
+    val seenDir = stateDir.fold(
+      java.nio.file.Files.createTempDirectory("graft-crawl-seen").toString)(_ + "/seen")
+    val store = SeenStore(seenDir, SeenStore.Config(cfg.seenParts))
     val frontierTable = stateDir.map(_ + "/frontier")
-
-    // resume point: largest round present in BOTH the frontier snapshots
-    // and the seen increments (ids are contiguous from 0)
-    val resumedRound: Option[Long] = (store, frontierTable) match {
-      case (Some(st), Some(ft)) =>
-        val seenIds = st.committedIds.toSet
-        TableIO.listSnapshots(ft).filter(seenIds.contains).lastOption
-      case _ => None
-    }
-
-    var seen: Option[DataFrame] = None // in-memory path only
-    val startRound = resumedRound.map(_.toInt + 1).getOrElse(0)
-
-    var frontier: DataFrame = resumedRound match {
-      case Some(id) => TableIO.read(spark, frontierTable.get, Some(id)).get
-      case None =>
-        seeds.toDF("url")
-          .withColumn("depth", lit(0))
-          .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGenTs.base)))
-    }
-
-    var allCounters = Vector.empty[Map[String, Long]]
     val fetchedTable = stateDir.map(_ + "/fetched")
-    // durable resume restores the already-captured rounds too (they are
-    // TableIO snapshots keyed by round id), so CrawlResult.fetched is the
-    // whole crawl's captures, not just the rounds after the restart
-    var allFetched: Option[DataFrame] = (fetchedTable, resumedRound) match {
-      case (Some(ft), Some(last)) =>
-        TableIO.listSnapshots(ft).filter(_ <= last)
-          .flatMap(id => TableIO.read(spark, ft, Some(id)))
-          .reduceOption(_ unionByName _)
-      case _ => None
-    }
-
-    // Frontier emptiness is TRACKED, not queried: seeds are driver-side, a
-    // durable resume has the manifest's rowCount, and each round's next
-    // frontier reports its count through the round's one materialization —
-    // the old `frontier.isEmpty` was a whole extra job per round
-    var frontierCount: Long = resumedRound match {
-      case Some(id) => TableIO.readManifest(frontierTable.get, id).rowCount
-      case None => seeds.size.toLong
-    }
-
-    var r = startRound
-    var done = false
-    while (r < startRound + maxRounds && !done) {
-      if (frontierCount == 0) done = true
-      else {
-        // cross-round digest dedup: the bucketed index accumulates every
-        // prior round's first-captures (the reference's crawl-lifetime
-        // dedupe map); a static CDX (a real remote archive) unions in
-        // with an index configured, round 0 (nothing appended yet) still
-        // runs the SAME dedup-with-cdx plan over an empty frame, so every
-        // round's output schema is identical (the accumulator unions them)
-        val idxCdx = digestIndex.map(r =>
-          DigestIndex.cdx(spark, r).getOrElse(DigestIndex.emptyCdx(spark)))
-        val roundCdx = (cdx, idxCdx) match {
-          case (Some(c), Some(idx)) => Some(c.unionByName(idx))
-          case (c, idx) => c.orElse(idx)
-        }
-        val out = round(frontier, seen, web, robots, politeness, cfg,
-          withCounters = false, seenStore = store, cdx = roundCdx)
-        // Pin this round's rows BEFORE release() so the round cache can be
-        // dropped below. Durable (stateDir set): TableIO snapshot keyed by
-        // round — survives executor loss and feeds resume; committed FIRST
-        // so a crash before the frontier/seen commits leaves only an
-        // orphan that the replayed round idempotently overwrites.
-        // In-memory: eager localCheckpoint (truncated lineage, one compact
-        // RDD per round). Either way the accumulator is a shallow union of
-        // leaf scans, never a chain of full per-round pipelines — and the
-        // A3 counters ride this SAME materialization via observe (the old
-        // separate aggregation job per round is gone).
-        val obs = org.apache.spark.sql.Observation()
-        val observed = out.fetched.observe(obs, counterAggs.head, counterAggs.tail: _*)
-        val roundFetched = fetchedTable match {
-          case Some(_) => graft.state.Durable.pin(observed, fetchedTable, r.toLong)
-          case None => observed.localCheckpoint(true)
-        }
-        val counters = countersFromObs(obs.get)
-        allCounters :+= counters
-        // the next frontier's links come from the PINNED captures: with a
-        // digest index, out.fetched's plan reads the index table, and the
-        // append below makes Spark re-cache it over an index that already
-        // holds this round's own captures — every capture would turn into
-        // a CDX revisit and its links would never be followed
-        val nextFrontier = links(roundFetched).unionByName(out.deferred)
-        // optional archival sink: the round's captures as rotated WARC
-        // (responses + truncated revisit records, K3 semantics)
-        warcDir.foreach(d =>
-          graft.sources.WarcIO.writeFetched(roundFetched, s"$d/round-$r"))
-        allFetched = allFetched match {
-          case None => Some(roundFetched)
-          case Some(prev) =>
-            val merged = prev.unionByName(roundFetched)
-            // like the seen accumulator below: the union of per-round
-            // checkpoint leaves is O(1) to extend but O(rounds) to ANALYZE —
-            // collapse it periodically so a long in-memory crawl plans O(1)
-            // per round. Durable mode keeps the plain union: its leaves are
-            // parquet scans (fault-tolerant), and a localCheckpoint here
-            // would silently trade that away for executor-pinned RDDs.
-            Some(
-              if (fetchedTable.isEmpty && (r + 1) % 8 == 0) merged.localCheckpoint(true)
-              else merged)
-        }
-        // O(|new|) index growth, like the seen increments; keyed by round so
-        // a crash-replay of this round overwrites its own partition instead
-        // of appending duplicates
-        digestIndex.foreach(DigestIndex.append(roundFetched, _, r.toLong))
-        (store, frontierTable) match {
-          case (Some(st), Some(ft)) =>
-            val snap = TableIO.commitAs(nextFrontier, ft, r.toLong, Map("round" -> r.toLong))
-            frontierCount = snap.rowCount // manifest metadata, no extra scan
-            st.append(out.newSeen, r.toLong, counters)
-            // periodic log-structured compaction keeps the probe chain O(1)
-            // in rounds (a 1,000-round crawl would otherwise pay 1,000
-            // sketch checks per candidate)
-            if (cfg.seenCompactEvery > 0 && (r + 1) % cfg.seenCompactEvery == 0) {
-              st.compact(spark)
-              st.gc() // drop the superseded generation's blobs
-            }
-            frontier = TableIO.read(spark, ft, Some(r.toLong)).get
-          case _ =>
-            // ONE eager localCheckpoint materializes the seen increment AND
-            // the next frontier (tagged union, split back by filter over the
-            // checkpointed leaf): truncates the per-round plan lineage
-            // (digestDedup's union branches would otherwise double the
-            // logical plan every round), materializes before release(), and
-            // carries the next frontier's row count as an observed metric —
-            // this round's ONLY other job besides the capture pin
-            val stObs = org.apache.spark.sql.Observation()
-            val ck = out.newSeen
-              .select(lit(1).as("__t"), col("url_hash"), col("url_norm"))
-              .unionByName(nextFrontier.select(lit(2).as("__t"), col("url"),
-                col("depth"), col("warc_ts")), allowMissingColumns = true)
-              .observe(stObs, count(when(col("__t") === 2, 1)).as("nf"))
-              .localCheckpoint(true)
-            val newSeen = ck.filter(col("__t") === 1).select("url_hash", "url_norm")
-            val merged = seen match {
-              case None => newSeen
-              case Some(s) => s.unionByName(newSeen)
-            }
-            // the accumulator is a union of per-round checkpoint leaves:
-            // O(1) per round to extend, but its ANALYSIS cost grows with
-            // rounds — collapse it periodically so a long in-memory crawl
-            // plans O(1) instead of O(rounds) per round (the durable path
-            // reads one table and never grows)
-            seen = Some(
-              if ((r + 1) % 8 == 0) merged.localCheckpoint(true) else merged)
-            frontier = ck.filter(col("__t") === 2).select("url", "depth", "warc_ts")
-            frontierCount = stObs.get("nf").asInstanceOf[Long]
-        }
-        // round caches (allowed/scheduled/fetched) are no longer referenced:
-        // everything downstream reads the checkpoint or durable state
-        out.release()
-        r += 1
+    try {
+      // resume point: largest round present in BOTH the frontier snapshots
+      // and the seen increments (ids are contiguous from 0)
+      val resumedRound: Option[Long] = frontierTable.flatMap { ft =>
+        val seenIds = store.committedIds.toSet
+        TableIO.listSnapshots(ft).filter(seenIds.contains).lastOption
       }
-    }
-    CrawlResult(allCounters, allFetched.getOrElse(spark.emptyDataFrame))
+      val startRound = resumedRound.map(_.toInt + 1).getOrElse(0)
+
+      var frontier: DataFrame = resumedRound match {
+        case Some(id) => TableIO.read(spark, frontierTable.get, Some(id)).get
+        case None =>
+          seeds.toDF("url")
+            .withColumn("depth", lit(0))
+            .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGenTs.base)))
+      }
+
+      var allCounters = Vector.empty[Map[String, Long]]
+      // durable resume restores the already-captured rounds too (they are
+      // TableIO snapshots keyed by round id), so CrawlResult.fetched is the
+      // whole crawl's captures, not just the rounds after the restart
+      var allFetched: Option[DataFrame] = (fetchedTable, resumedRound) match {
+        case (Some(ft), Some(last)) =>
+          TableIO.listSnapshots(ft).filter(_ <= last)
+            .flatMap(id => TableIO.read(spark, ft, Some(id)))
+            .reduceOption(_ unionByName _)
+        case _ => None
+      }
+
+      // Frontier emptiness is TRACKED, not queried: seeds are driver-side, a
+      // durable resume has the manifest's rowCount, and each round's next
+      // frontier reports its count through its own pin — the old
+      // `frontier.isEmpty` was a whole extra job per round
+      var frontierCount: Long = resumedRound match {
+        case Some(id) => TableIO.readManifest(frontierTable.get, id).rowCount
+        case None => seeds.size.toLong
+      }
+
+      var r = startRound
+      var done = false
+      while (r < startRound + maxRounds && !done) {
+        if (frontierCount == 0) done = true
+        else {
+          // cross-round digest dedup: the bucketed index accumulates every
+          // prior round's first-captures (the reference's crawl-lifetime
+          // dedupe map); a static CDX (a real remote archive) unions in
+          // with an index configured, round 0 (nothing appended yet) still
+          // runs the SAME dedup-with-cdx plan over an empty frame, so every
+          // round's output schema is identical (the accumulator unions them)
+          val idxCdx = digestIndex.map(r =>
+            DigestIndex.cdx(spark, r).getOrElse(DigestIndex.emptyCdx(spark)))
+          val roundCdx = (cdx, idxCdx) match {
+            case (Some(c), Some(idx)) => Some(c.unionByName(idx))
+            case (c, idx) => c.orElse(idx)
+          }
+          val out = round(frontier, web, robots, politeness, cfg,
+            withCounters = false, seenStore = Some(store), cdx = roundCdx)
+          // Pin this round's rows BEFORE release() so the round cache can be
+          // dropped below. Durable (stateDir set): TableIO snapshot keyed by
+          // round — survives executor loss and feeds resume; committed FIRST
+          // so a crash before the frontier/seen commits leaves only an
+          // orphan that the replayed round idempotently overwrites.
+          // In-memory: eager localCheckpoint (truncated lineage, one compact
+          // RDD per round). Either way the accumulator is a shallow union of
+          // leaf scans, never a chain of full per-round pipelines — and the
+          // A3 counters ride this SAME materialization via observe (the old
+          // separate aggregation job per round is gone).
+          val obs = org.apache.spark.sql.Observation()
+          val roundFetched = Durable.pin(out.fetched.observe(obs, counterAggs.head,
+            counterAggs.tail: _*), fetchedTable, r.toLong)
+          val counters = countersFromObs(obs.get)
+          allCounters :+= counters
+          // the next frontier's links come from the PINNED captures: with a
+          // digest index, out.fetched's plan reads the index table, and the
+          // append below makes Spark re-cache it over an index that already
+          // holds this round's own captures — every capture would turn into
+          // a CDX revisit and its links would never be followed
+          val nextFrontier = links(roundFetched).unionByName(out.deferred)
+          // optional archival sink: the round's captures as rotated WARC
+          // (responses + truncated revisit records, K3 semantics)
+          warcDir.foreach(d =>
+            graft.sources.WarcIO.writeFetched(roundFetched, s"$d/round-$r"))
+          allFetched = allFetched match {
+            case None => Some(roundFetched)
+            case Some(prev) =>
+              val merged = prev.unionByName(roundFetched)
+              // the union of per-round checkpoint leaves is O(1) to extend
+              // but O(rounds) to ANALYZE — collapse it periodically so a long
+              // in-memory crawl plans O(1) per round. Durable mode keeps the
+              // plain union: its leaves are parquet scans (fault-tolerant),
+              // and a localCheckpoint here would silently trade that away for
+              // executor-pinned RDDs.
+              Some(
+                if (fetchedTable.isEmpty && (r + 1) % 8 == 0) merged.localCheckpoint(true)
+                else merged)
+          }
+          // O(|new|) index growth, like the seen increments; keyed by round so
+          // a crash-replay of this round overwrites its own partition instead
+          // of appending duplicates
+          digestIndex.foreach(DigestIndex.append(roundFetched, _, r.toLong))
+          // the next frontier is pinned like the captures (a snapshot that
+          // resume reads, or a localCheckpoint that truncates the round's
+          // lineage before release()); its row count rides the same job
+          val nfObs = org.apache.spark.sql.Observation()
+          frontier = Durable.pin(nextFrontier.observe(nfObs, count(lit(1)).as("rows")),
+            frontierTable, r.toLong, Map("round" -> r.toLong))
+          frontierCount = nfObs.get("rows").asInstanceOf[Long]
+          store.append(out.newSeen, r.toLong, counters)
+          // periodic log-structured compaction keeps the probe chain O(1) in
+          // rounds (a 1,000-round crawl would otherwise pay 1,000 sketch
+          // checks per candidate)
+          if (cfg.seenCompactEvery > 0 && (r + 1) % cfg.seenCompactEvery == 0) {
+            store.compact(spark)
+            store.gc() // drop the superseded generation's blobs
+          }
+          // round caches (allowed/scheduled/fetched) are no longer referenced:
+          // everything downstream reads pinned or durable state
+          out.release()
+          r += 1
+        }
+      }
+      CrawlResult(allCounters, allFetched.getOrElse(spark.emptyDataFrame))
+    } finally if (stateDir.isEmpty) graft.LocalFiles.deleteRec(new java.io.File(seenDir))
   }
 }
 

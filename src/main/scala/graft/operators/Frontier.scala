@@ -9,14 +9,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 /** The Spark-native URL frontier + fetch scheduler (BASELINE.json
   * north_star). Every stage is a declarative DataFrame → DataFrame function
   * so Catalyst owns pushdown/pruning/reorder; shuffles happen exactly where
-  * keyed state forces them (seen-join on url_hash, politeness rank on
-  * host); the politeness window is skew-safe via Catalyst's map-side
+  * keyed state forces them (the routed seen probe on url_hash, politeness
+  * rank on host); the politeness window is skew-safe via Catalyst's map-side
   * WindowGroupLimit partial top-k (plus an optional salted pre-rank for
   * extreme budget×cluster-width products — see schedule's scaladoc).
   *
   * Reference semantics grafted in (SURVEY.md §2.4):
   *  - URL-seen is first-occurrence-wins (the sync.Map registration in
-  *    /root/reference/dialer.go:401-410) → ranking window + left-anti join.
+  *    /root/reference/dialer.go:401-410) → a ranking window within a batch
+  *    (`firstSeenWins`) and, across batches, the exact probe of one
+  *    append-only `graft.state.SeenStore`.
   *  - Payload-digest dedup honors the 2048-byte size threshold
   *    (/root/reference/client.go:110-112) and the empty-payload exemption
   *    (/root/reference/dialer.go:402,516).
@@ -76,22 +78,6 @@ object Frontier {
     df.withColumn("__rn", row_number().over(Window.partitionBy(key).orderBy(order: _*)))
       .filter(col("__rn") === 1)
       .drop("__rn")
-
-  /** Stage 2 — URL-seen filter for an *in-memory* seen DataFrame: a plain
-    * exact left-anti join (Catalyst picks the join strategy; AQE handles
-    * skew). This is the small-state path. The scale path — the north_star's
-    * 10^10-url seen set — is `graft.state.SeenStore.filterUnseen`:
-    * per-partition Bloom sketches and sorted-hash sidecars, built and
-    * loaded entirely executor-side and probed inside whole-stage codegen;
-    * a sketch maybe falls through to a binary search of the sidecar, so
-    * the filter is exact with no join, and driver memory stays O(1) in
-    * |seen|. A driver-built global Bloom is deliberately absent: at 10^10
-    * urls / fpp 0.01 it is a ~12 GB bitset. */
-  def dedupeAgainstSeen(candidates: DataFrame, seen: Option[DataFrame], cfg: Config): DataFrame =
-    seen match {
-      case None => candidates
-      case Some(s) => candidates.join(s.select(col("url_hash")), Seq("url_hash"), "left_anti")
-    }
 
   /** Stage 3 — payload-digest dedup (J2+J4): first capture per digest wins;
     * later captures are flagged `is_revisit` and reference the first

@@ -329,9 +329,10 @@ object PlanAudit {
         eq(p, "Exchange hashpartitioning", 1) ++ atLeast(p, ", Partial", 1)),
   )
 
-  // the integrated crawl-round core (f07's per-round plan, unpersisted):
-  // canonicalize -> in-batch first-wins -> robots broadcast gate ->
-  // two-phase schedule -> fetch join -> digest-dedup window
+  // the integrated crawl-round core (a crawl round's plan without its
+  // seen probe, robots gate or caches): canonicalize -> in-batch
+  // first-wins -> salted two-phase schedule over the broadcast politeness
+  // dim -> fetch join -> digest dedup (min-aggregate + join back)
   private def f07RoundCore(spark: SparkSession): DataFrame = {
     import graft.functions.GraftFunctions
     import spark.implicits._

@@ -107,8 +107,8 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("table loader parses maxPartitionBytes in the documented unit syntax") {
-    // "64MB"-style values are legal conf syntax (spark-defaults, user
-    // override, the F07Prof A/B hook) — the loader's width probe must not
+    // "64MB"-style values are legal conf syntax (spark-defaults, a user
+    // override) — the loader's width probe must not
     // require the internal "134217728b" rendering
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {

@@ -265,9 +265,8 @@ class UrlNormalizerSpec extends AnyFunSuite {
     ("http://example.com./", "http://example.com/", "example.com", true),
     // host "." is non-empty in the input, but empty once its dot goes
     ("http://./", "http:///", "", true),
-    // §3.2.3 allows an empty port; §6.2.3 says a normalizer should drop it,
-    // which this one does not do: "h:" stays the host
-    ("http://h:/x", "http://h:/x", "h:", true),
+    // §3.2.3 allows an empty port; §6.2.3: a normalizer drops it
+    ("http://h:/x", "http://h/x", "h", true),
     // §3.5: the fragment is not sent in a request; it goes
     ("http://h/p?q#f#g", "http://h/p?q", "h", true),
     ("http://h#f", "http://h/", "h", true),

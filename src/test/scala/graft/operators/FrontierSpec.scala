@@ -242,27 +242,36 @@ class FrontierSpec extends AnyFunSuite {
     val oracle = SequentialOracle.crawl(
       pagesLocal, seeds, 3, budgets, cfg.defaultBudget, robotsMap, cfg.sizeThreshold)
 
-    // Spark crawl, capturing per-round scheduled sets
-    var seen: Option[org.apache.spark.sql.DataFrame] = None
-    var frontier = seeds.toDF("url")
-      .withColumn("depth", lit(0))
-      .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
-    for (r <- 0 until 3) {
-      val out = Crawl.round(frontier, seen, web, Some(robotsDf), Some(politenessDf), cfg,
-        withCounters = false)
-      val got = out.fetched
-        .select("url_norm", "depth", "batch_rank", "is_revisit")
-        .as[(String, Int, Int, Boolean)].collect()
-        .sortBy(_._1)
-        .map { case (u, d, b, rev) => SequentialOracle.Sched(u, d, b, rev) }
-        .toVector
-      assert(got == oracle(r), s"round $r mismatch: got ${got.size} vs oracle ${oracle(r).size}")
-      seen = Some(seen.map(_.unionByName(out.newSeen).distinct()).getOrElse(out.newSeen))
-      frontier = out.nextFrontier.cache()
-      frontier.count() // materialize before releasing the round's caches
-      out.release()
-      out.fetched.unpersist()
+    // Spark crawl, capturing per-round scheduled sets; the seen set is a
+    // temp SeenStore that grows by one increment per round
+    withSeenStore { store =>
+      var frontier = seeds.toDF("url")
+        .withColumn("depth", lit(0))
+        .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
+      for (r <- 0 until 3) {
+        val out = Crawl.round(frontier, web, Some(robotsDf), Some(politenessDf), cfg,
+          withCounters = false, seenStore = Some(store))
+        val got = out.fetched
+          .select("url_norm", "depth", "batch_rank", "is_revisit")
+          .as[(String, Int, Int, Boolean)].collect()
+          .sortBy(_._1)
+          .map { case (u, d, b, rev) => SequentialOracle.Sched(u, d, b, rev) }
+          .toVector
+        assert(got == oracle(r), s"round $r mismatch: got ${got.size} vs oracle ${oracle(r).size}")
+        frontier = out.nextFrontier.cache()
+        frontier.count() // materialize before releasing the round's caches
+        store.append(out.newSeen, r.toLong)
+        out.release()
+        out.fetched.unpersist()
+      }
     }
+  }
+
+  /** Runs `body` over an empty SeenStore in a temp dir, deleted after. */
+  private def withSeenStore(body: graft.state.SeenStore.Store => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-round-seen")
+    try body(graft.state.SeenStore(dir.toString, graft.state.SeenStore.Config(cfg.seenParts)))
+    finally graft.LocalFiles.deleteRec(dir.toFile)
   }
 
   test("budgetsFromRobots: Crawl-delay drives the per-host budget dim") {
@@ -314,24 +323,23 @@ class FrontierSpec extends AnyFunSuite {
     var frontier = host0seeds.toDF("url")
       .withColumn("depth", lit(0))
       .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
-    var seen: Option[org.apache.spark.sql.DataFrame] = None
     var fetchedUrls = Vector.empty[String]
-    for (_ <- 0 until 4) {
-      // no link discovery interference: restrict the frontier to the seeds
-      val out = Crawl.round(frontier, seen, web, None, Some(politeness1),
-        cfg.copy(defaultBudget = 1), withCounters = false)
-      val sched = out.newSeen.select("url_norm").as[String].collect()
-      assert(sched.length <= 1, "budget 1 → at most one fetch per round")
-      fetchedUrls ++= sched
-      // eager localCheckpoint truncates the cross-round plan lineage
-      seen = Some(seen.map(_.unionByName(out.newSeen)).getOrElse(out.newSeen)
-        .select("url_hash", "url_norm").localCheckpoint(true))
-      // next round = deferred candidates only (drop discovered links to
-      // isolate the carryover property)
-      frontier = out.nextFrontier
-        .filter(col("depth") === 0)
-        .localCheckpoint(true)
-      out.release()
+    withSeenStore { store =>
+      for (r <- 0 until 4) {
+        // no link discovery interference: restrict the frontier to the seeds
+        val out = Crawl.round(frontier, web, None, Some(politeness1),
+          cfg.copy(defaultBudget = 1), withCounters = false, seenStore = Some(store))
+        val sched = out.newSeen.select("url_norm").as[String].collect()
+        assert(sched.length <= 1, "budget 1 → at most one fetch per round")
+        fetchedUrls ++= sched
+        store.append(out.newSeen, r.toLong)
+        // next round = deferred candidates only (drop discovered links to
+        // isolate the carryover property)
+        frontier = out.nextFrontier
+          .filter(col("depth") === 0)
+          .localCheckpoint(true)
+        out.release()
+      }
     }
     assert(fetchedUrls.distinct.size == 4,
       s"all 4 candidates must be fetched across rounds, got $fetchedUrls")
@@ -522,6 +530,34 @@ class FrontierSpec extends AnyFunSuite {
     val leaves = res.allFetched.queryExecution.analyzed.collectLeaves().size
     assert(leaves < 8, s"capture accumulator must collapse periodically, got $leaves leaves")
     assert(res.allFetched.count() > 0)
+  }
+
+  test("in-memory crawl: temp seen store matches a compacting durable crawl, gone on return or throw") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def seenDirs = Option(tmp.list()).fold(Set.empty[String])(
+      _.filter(_.startsWith("graft-crawl-seen")).toSet)
+    val before = seenDirs
+    def rows(res: Crawl.CrawlResult) = res.allFetched
+      .select("url_norm", "depth", "batch_rank", "is_revisit")
+      .as[(String, Int, Int, Boolean)].collect().sorted.toVector
+    val compactCfg = cfg.copy(seenCompactEvery = 1)
+    val mem = Crawl.crawl(spark, web, seeds, 5, Some(robotsDf), Some(politenessDf), compactCfg)
+    assert(seenDirs == before, "a returning crawl must delete its temp seen store")
+    val dir = java.nio.file.Files.createTempDirectory("graft-crawl-vs-mem").toString
+    val durable = Crawl.crawl(spark, web, seeds, 5, Some(robotsDf), Some(politenessDf),
+      compactCfg, Some(dir))
+    assert(mem.rounds.length >= 4, s"web must sustain 4 rounds, got ${mem.rounds.length}")
+    assert(graft.state.SeenStore(dir + "/seen").compactions.nonEmpty,
+      "seenCompactEvery = 1 must compact the store")
+    assert(mem.rounds == durable.rounds)
+    assert(rows(mem) == rows(durable))
+    graft.LocalFiles.deleteRec(new java.io.File(dir))
+    // a round that fails in an executor still leaves no store behind
+    val boom = udf((t: String) => { if (t != null) throw new IllegalStateException("boom"); t })
+    intercept[Exception] {
+      Crawl.crawl(spark, web.withColumn("text", boom(col("text"))), seeds, 2, None, None, cfg)
+    }
+    assert(seenDirs == before, "a failing crawl must delete its temp seen store")
   }
 
   test("crawl counters: revisits and byte sums are deterministic") {

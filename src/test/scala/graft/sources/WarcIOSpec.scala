@@ -47,7 +47,7 @@ class WarcIOSpec extends AnyFunSuite {
       .select(col("url_norm").as("url"))
       .withColumn("depth", lit(0))
       .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
-    val out = Crawl.round(frontier, None, web, None, None, cfg, withCounters = true)
+    val out = Crawl.round(frontier, web, None, None, cfg, withCounters = true)
     assert(out.counters("revisits") > 0, "generator dup clusters must produce revisits")
     val n = WarcIO.writeFetched(out.fetched, dir, recordsPerFile = 500)
     assert(n >= 1)
@@ -159,7 +159,7 @@ class WarcIOSpec extends AnyFunSuite {
     val frontier = Frontier.canonicalize(pages).select(col("url_norm").as("url"))
       .withColumn("depth", lit(0))
       .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
-    val out = Crawl.round(frontier, None, web, None, None, cfg,
+    val out = Crawl.round(frontier, web, None, None, cfg,
       withCounters = true, cdx = Some(cdx))
     assert(out.counters("revisits") > 0)
     val srcCounts = out.fetched.groupBy("dedupe_source").count()
