@@ -5,6 +5,7 @@ import graft.operators._
 import graft.sources.PagesGen
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScratchDir
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -513,14 +514,15 @@ object Queries {
         .orderBy("host")),
 
     "f07_crawl_round" -> ((s, dir) => {
-      // The integrated multi-round crawl, oracle-checked end to end: a
+      // The integrated multi-round crawl, oracle-checked end to end: three
+      // rounds of Crawl.crawl — the loop CrawlTool runs — over a
       // deterministic closed-form web (urls, bodies, links, and robots all
-      // derive from doc_id arithmetic) lets DuckDB replay all 3 rounds —
-      // canonicalize → in-batch first-wins → seen filter → robots →
-      // politeness schedule → fetch → digest dedup (revisits) → link
-      // discovery → budget-loser deferral — in unrolled CTEs. The
+      // derive from doc_id arithmetic) that DuckDB replays — canonicalize
+      // → in-batch first-wins → seen filter → robots → politeness schedule
+      // → fetch → digest dedup (revisits) → link discovery from the pinned
+      // captures → budget-loser deferral — in unrolled CTEs. The
       // PagesGen-web conformance (all 4 HTTP transfer modes, sequential
-      // reference simulation) stays in CrawlSpec.
+      // reference simulation) stays in FrontierSpec.
       import s.implicits._
       // reducer count sized to the round, not the session: a 3-round
       // 89-url frontier never fills 32 reducers, and at this cardinality
@@ -528,14 +530,13 @@ object Queries {
       // off (AQE turns each of the round's ~5 exchanges into a separate
       // query-stage job submission — pure fixed cost when every stage is
       // one task; measured -20% wall in an A/B of this loop). Restored after the
-      // loop: the returned plan and every other query keep the session
+      // crawl: the returned plan and every other query keep the session
       // defaults, and a real (10^9-url-round) crawl would too — there AQE's
       // runtime re-plan earns its overhead back on skew.
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
       s.conf.set("spark.sql.shuffle.partitions", "1")
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      val seenDir = java.nio.file.Files.createTempDirectory("graft-f07-seen")
       try {
       // the web is joined in EVERY round's job: checkpoint it once so each
       // round plans and scans a leaf, not the full derivation
@@ -545,48 +546,24 @@ object Queries {
       val robots = (0 until 7).filter(_ % 2 == 0)
         .map(h => (s"host$h.example", "User-agent: *\nDisallow: /doc/1"))
         .toDF("host", "body")
-      val seedUs = Seq(0, 2, 3, 5, 8, 11, 17, 21, 26, 30, 39, 44)
-      val seeds = seedUs.map(u => s"HTTPS://host${u % 7}.example:443/doc/$u")
-        .toDF("url")
-        .withColumn("depth", lit(0))
-        .withColumn("warc_ts", expr("TIMESTAMP '2022-03-20 03:55:45'"))
+      // seeded at PagesGen.BaseEpochSec, the oracle's 2022-03-20 03:55:45 UTC
+      val seeds = Seq(0, 2, 3, 5, 8, 11, 17, 21, 26, 30, 39, 44)
+        .map(u => s"HTTPS://host${u % 7}.example:443/doc/$u")
       // budgets are 1 + h % 3 ∈ {1,2,3}: hint the literal rank bound so no
       // round pays the per-call max(budget) driver aggregate. Single-phase
       // schedule (the salted pre-rank would add a full-frontier exchange
       // per round for nothing at this cluster width — f04 keeps the salted
       // plan under oracle + plan-assert coverage; both emit identical rows)
-      val cfg = Frontier.Config(defaultBudget = 2, maxBudgetHint = 3)
-      val store = graft.state.SeenStore(seenDir.toString, graft.state.SeenStore.Config(parts = 1))
-      var frontier = seeds
-      var out: Option[DataFrame] = None
-      for (r <- 1 to 3) {
-        val o = Crawl.round(frontier, web, Some(robots), Some(politeness),
-          cfg, withCounters = false, seenStore = Some(store))
-        // ONE materialization per round for the rows the loop keeps:
-        // captures + next frontier ride a single tagged union through one
-        // eager localCheckpoint (at 89-url scale the fixed per-action cost
-        // dominates the whole query); the seen increment is the round's
-        // one other job
-        val ck = o.fetched.select(lit(0).as("__t"), lit(r).as("round"),
-            col("url_norm"), col("depth"), col("batch_rank"),
-            col("is_revisit"), col("refers_to_url"), col("text_ok"))
-          .unionByName(o.nextFrontier.select(lit(2).as("__t"), col("url"),
-            col("depth"), col("warc_ts")), allowMissingColumns = true)
-          .localCheckpoint(true)
-        val tagged = ck.filter(col("__t") === 0).select("round", "url_norm",
-          "depth", "batch_rank", "is_revisit", "refers_to_url", "text_ok")
-        out = Some(out.map(_.unionByName(tagged)).getOrElse(tagged))
-        frontier = ck.filter(col("__t") === 2).select("url", "depth", "warc_ts")
-        store.append(o.newSeen, r - 1L)
-        o.release()
-      }
-      // 19 output rows: one partition sorts them without a range-partition
-      // sampling pass (global order still holds — single partition)
-      out.get.coalesce(1).sortWithinPartitions("round", "url_norm")
+      val cfg = Frontier.Config(defaultBudget = 2, maxBudgetHint = 3, seenParts = 1)
+      Crawl.crawl(s, web, seeds, 3, Some(robots), Some(politeness), cfg).allFetched
+        .select((col("round") + 1).as("round"), col("url_norm"), col("depth"),
+          col("batch_rank"), col("is_revisit"), col("refers_to_url"), col("text_ok"))
+        // 19 output rows: one partition sorts them without a range-partition
+        // sampling pass (global order still holds — single partition)
+        .coalesce(1).sortWithinPartitions("round", "url_norm")
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", prevParts)
         s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        graft.LocalFiles.deleteRec(seenDir.toFile)
       }
     }),
 
@@ -631,8 +608,9 @@ object Queries {
       // partitioned URL-seen filter (SeenStore): per-partition sketches
       // probed executor-side + exact anti-join fallback ≡ exact anti-join.
       // Two increments + a compaction put the merged-bank probe path
-      // under the oracle gate, not just the per-increment chain.
-      val seenDir = java.nio.file.Files.createTempDirectory("graft-f08-seen").toString
+      // under the oracle gate, not just the per-increment chain. The
+      // returned frame probes the store lazily, so it lives until JVM exit.
+      val seenDir = ScratchDir("graft-f08-seen")
       val store = graft.state.SeenStore(seenDir, graft.state.SeenStore.Config(parts = 8))
       val all = fw(s, dir)
       store.append(all.filter(col("doc_id") % 6 === 0).select("url_hash"), 0L)
@@ -652,7 +630,7 @@ object Queries {
       // batch 1 — the deferral semantics, cross-checked here through the
       // streaming surface.
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft-f12").toString
+      val tmp = ScratchDir("graft-f12")
       val p = pagesLite(s, dir).select(col("url"), col("depth"), col("warc_ts"), col("doc_id"))
       p.filter(col("doc_id") % 2 === 0).drop("doc_id")
         .coalesce(1).write.parquet(s"$tmp/in/b0")
@@ -699,7 +677,7 @@ object Queries {
         .withColumn("payload_len", length(encode(col("text2"), "UTF-8")).cast("long"))
       val cfg = Frontier.Config()
       val ref = graft.state.DigestIndex.Ref("graft_f13_digest_idx",
-        java.nio.file.Files.createTempDirectory("graft-f13-idx").toString, nBuckets = 8)
+        ScratchDir("graft-f13-idx"), nBuckets = 8)
       graft.state.DigestIndex.drop(s, ref) // fresh run: drop a stale catalog entry
       val r1 = Frontier.digestDedup(p.filter(col("doc_id") % 2 === 0), cfg)
       graft.state.DigestIndex.append(r1, ref, captureTsCol = "warc_ts")

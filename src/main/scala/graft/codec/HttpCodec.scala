@@ -1,7 +1,7 @@
 package graft.codec
 
 import java.io.ByteArrayOutputStream
-import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.util.Locale
 import java.util.zip.GZIPInputStream
 
@@ -158,9 +158,6 @@ object HttpCodec {
     val dechunked = if (msg.isChunked) decodeChunked(msg.body) else msg.body
     if (msg.isGzipped) gunzip(dechunked) else dechunked
   }
-
-  /** Decoded body as UTF-8 text. */
-  def extractText(block: Array[Byte]): String = new String(decodedBody(block), UTF_8)
 
   // --- streaming variants (the spooled >2 GB tool path) -------------------
 

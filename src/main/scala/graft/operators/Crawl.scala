@@ -12,6 +12,11 @@ import org.apache.spark.storage.StorageLevel
   * commits and lineage counters (the reference's counters model, SURVEY.md
   * A3, as deterministic per-round sums instead of rate counters).
   *
+  * `crawl` is the one crawl loop: `CrawlTool`, perfbench's `crawl-rounds`
+  * and the oracle-checked query `f07_crawl_round` all run it, and `round`
+  * is its single step (the reference wires its stages together once, in
+  * its warc.go:58-90).
+  *
   * Frontier rows: (url STRING, depth INT, warc_ts TIMESTAMP) where warc_ts
   * is the discovery recency used by the priority order (north_star:
   * depth asc, budget rank, warc_ts desc).
@@ -27,13 +32,13 @@ object Crawl {
 
   final case class RoundOutput(
       fetched: DataFrame,
-      nextFrontier: DataFrame,
-      // the politeness carryover part of nextFrontier
+      // the politeness carryover: allowed candidates that lost the budget race
       deferred: DataFrame,
       newSeen: DataFrame,
-      counters: Map[String, Long],
       release: () => Unit)
 
+  /** `rounds(r)` holds round r's A3 counters; `allFetched` is every round's
+    * captures, each tagged with its round number in `round`. */
   final case class CrawlResult(
       rounds: Vector[Map[String, Long]],
       allFetched: DataFrame)
@@ -55,9 +60,9 @@ object Crawl {
       .select(col("url_norm"), col("w.page_ts").as("page_ts"),
         col("w.html").as("html"), col("w.text").as("text"), col("w.lang").as("lang"))
 
-  /** A3 global counters over a round's captures. Exposed as expressions so
-    * `crawl` can ride them on the round's ONE materialization via
-    * `observe` — no separate aggregation job per round. */
+  /** A3 global counters over a round's captures, as expressions so
+    * `crawl` rides them on the round's capture pin via `observe` — no
+    * separate aggregation job per round. */
   private val counterAggs = Seq(
     count(lit(1)).as("fetched"),
     sum(when(col("is_revisit"), 1L).otherwise(0L)).as("revisits"),
@@ -70,37 +75,21 @@ object Crawl {
       .map(k => k -> Option(m.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L))
       .toMap
 
-  private def countersFromRow(row: org.apache.spark.sql.Row): Map[String, Long] = Map(
-    "fetched" -> row.getLong(0),
-    "revisits" -> Option(row.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L),
-    "text_mismatches" -> Option(row.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L),
-    "payload_bytes" -> Option(row.get(3)).map(_.asInstanceOf[Long]).getOrElse(0L),
-    "dedupe_saved_bytes" -> Option(row.get(4)).map(_.asInstanceOf[Long]).getOrElse(0L))
-
-  /** One frontier round. `web` must be the asWeb() shape. Seen-state is
-    * `seenStore` (`None`: nothing seen yet); its probe runs in executors,
-    * so they must be able to read the store's directory. */
+  /** One frontier round: admission (`Frontier.admit`), schedule, fetch,
+    * extraction and digest dedup. `web` must be the asWeb() shape.
+    * Seen-state is `seenStore` (`None`: nothing seen yet); its probe runs
+    * in executors, so they must be able to read the store's directory. */
   def round(
       frontier: DataFrame,
       web: DataFrame,
       robots: Option[DataFrame],
       politeness: Option[DataFrame],
       cfg: Frontier.Config,
-      withCounters: Boolean = true,
       seenStore: Option[SeenStore.Store] = None,
       cdx: Option[DataFrame] = None): RoundOutput = {
 
-    val canonical = Frontier.canonicalize(frontier)
-      .select(col("url_norm"), col("host"), col("url_hash"), col("depth"), col("warc_ts"))
-    // within-round first-discovery-wins per url
-    val batchDeduped = Frontier.firstSeenWins(canonical, col("url_hash"),
-      Seq(col("depth").asc, col("warc_ts").desc, col("url_norm").asc))
-    val filtered = seenStore.fold(SeenStore.Filtered(batchDeduped, () => ()))(
-      _.filterUnseen(batchDeduped))
-    val allowed = (robots match {
-      case Some(r) => Frontier.applyRobots(filtered.result, r, cfg)
-      case None => filtered.result
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    val admitted = Frontier.admit(frontier, seenStore, robots, cfg)
+    val allowed = admitted.result.persist(StorageLevel.MEMORY_AND_DISK)
     val scheduled = Frontier.schedule(allowed, politeness, cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // politeness carryover: allowed-but-unscheduled candidates re-enter the
@@ -125,19 +114,13 @@ object Crawl {
       case None => Frontier.digestDedup(fetched0, cfg, captureTsCol = "page_ts")
     }).persist(StorageLevel.MEMORY_AND_DISK)
 
-    val nextFrontier = links(fetched).unionByName(deferred)
-
     val newSeen = scheduled.select(col("url_hash"), col("url_norm"))
-
-    val counters: Map[String, Long] =
-      if (!withCounters) Map.empty
-      else countersFromRow(fetched.agg(counterAggs.head, counterAggs.tail: _*).collect()(0))
 
     val release = () => {
       allowed.unpersist(); scheduled.unpersist(); fetched.unpersist()
-      filtered.release()
+      admitted.release()
     }
-    RoundOutput(fetched, nextFrontier, deferred, newSeen, counters, release)
+    RoundOutput(fetched, deferred, newSeen, release)
   }
 
   /** Link discovery from a round's non-revisit fetches; discovery recency =
@@ -150,10 +133,11 @@ object Crawl {
         (col("depth") + 1).as("depth"),
         col("page_ts").as("warc_ts"))
 
-  /** Run `maxRounds` rounds from a seed list. The seen set grows by
-    * O(|new|) append-only increments in one SeenStore: `stateDir + "/seen"`,
-    * or without `stateDir` a fresh temp directory that is deleted when the
-    * crawl returns or throws. The seen probe runs in executors, so they
+  /** Run `maxRounds` rounds from a seed list (depth 0, discovered at
+    * `PagesGen.BaseEpochSec`). The seen set grows by O(|new|) append-only
+    * increments in one SeenStore: `stateDir + "/seen"`, or without
+    * `stateDir` a fresh temp directory that is deleted when the crawl
+    * returns or throws. The seen probe runs in executors, so they
     * must be able to read the temp store exactly as they would `stateDir`.
     * With `stateDir` the frontier is also snapshotted per round; both are
     * keyed by the round number, so resume picks the largest round committed
@@ -234,7 +218,7 @@ object Crawl {
             case (c, idx) => c.orElse(idx)
           }
           val out = round(frontier, web, robots, politeness, cfg,
-            withCounters = false, seenStore = Some(store), cdx = roundCdx)
+            seenStore = Some(store), cdx = roundCdx)
           // Pin this round's rows BEFORE release() so the round cache can be
           // dropped below. Durable (stateDir set): TableIO snapshot keyed by
           // round — survives executor loss and feeds resume; committed FIRST
@@ -246,8 +230,8 @@ object Crawl {
           // A3 counters ride this SAME materialization via observe (the old
           // separate aggregation job per round is gone).
           val obs = org.apache.spark.sql.Observation()
-          val roundFetched = Durable.pin(out.fetched.observe(obs, counterAggs.head,
-            counterAggs.tail: _*), fetchedTable, r.toLong)
+          val roundFetched = Durable.pin(out.fetched.withColumn("round", lit(r))
+            .observe(obs, counterAggs.head, counterAggs.tail: _*), fetchedTable, r.toLong)
           val counters = countersFromObs(obs.get)
           allCounters :+= counters
           // the next frontier's links come from the PINNED captures: with a

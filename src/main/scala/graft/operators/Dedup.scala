@@ -857,13 +857,6 @@ object Dedup {
           i => concat_ws(" ", slice(words, i, lit(n)))))
         .otherwise(array().cast("array<string>")))
 
-  /** Word n-grams of a text column (lowercased, whitespace-tokenized,
-    * empties filtered). Convenience form — for hot paths, materialize the
-    * token array in a projection below and use [[wordNgramsFrom]] (see its
-    * scaladoc for why). */
-  def wordNgrams(c: Column, n: Int): Column =
-    wordNgramsFrom(wsTokens(lower(c)), n)
-
   /** The tokenization used by the n-gram builders, exposed so callers can
     * materialize it once per row. */
   def ngramTokens(c: Column): Column = wsTokens(lower(c))

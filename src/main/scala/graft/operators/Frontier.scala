@@ -79,6 +79,26 @@ object Frontier {
       .filter(col("__rn") === 1)
       .drop("__rn")
 
+  /** The north_star priority order of frontier candidates: shallower first,
+    * then the most recently discovered, then url_norm as the deterministic
+    * tiebreak. It picks the in-batch first discovery ([[admit]]) and each
+    * host's fetch waves ([[schedule]]). */
+  val priority: Seq[Column] = Seq(col("depth").asc, col("warc_ts").desc, col("url_norm").asc)
+
+  /** Stages 1–2 and 4 — admission of a frontier batch (url, depth,
+    * warc_ts): canonicalize → one row per url_hash by [[priority]] → drop
+    * urls `seen` already holds → `robots` gate. Output
+    * (url_norm, host, url_hash, depth, warc_ts), ready for [[schedule]];
+    * release it like [[graft.state.SeenStore.Store.filterUnseen]]'s. */
+  def admit(frontier: DataFrame, seen: Option[graft.state.SeenStore.Store],
+            robots: Option[DataFrame], cfg: Config): graft.state.SeenStore.Filtered = {
+    val canonical = canonicalize(frontier)
+      .select(col("url_norm"), col("host"), col("url_hash"), col("depth"), col("warc_ts"))
+    val deduped = firstSeenWins(canonical, col("url_hash"), priority)
+    val unseen = seen.fold(graft.state.SeenStore.Filtered(deduped, () => ()))(_.filterUnseen(deduped))
+    robots.fold(unseen)(r => unseen.copy(result = applyRobots(unseen.result, r, cfg)))
+  }
+
   /** Stage 3 — payload-digest dedup (J2+J4): first capture per digest wins;
     * later captures are flagged `is_revisit` and reference the first
     * (WARC-Refers-To semantics). Exemptions: payloads under the size
@@ -380,8 +400,8 @@ object Frontier {
     }
   }
 
-  /** Stage 5 — politeness scheduling: per-host top-`budget` by priority
-    * (depth asc, warc_ts desc, url asc — the north_star priority queue).
+  /** Stage 5 — politeness scheduling: per-host top-`budget` by
+    * [[priority]] (the north_star priority queue).
     *
     * Default plan (saltBuckets ≤ 1): ONE exchange. The rank filter carries
     * a literal maxBudget bound, so Catalyst's InferWindowGroupLimit inserts
@@ -415,7 +435,6 @@ object Frontier {
           .withColumn("__budget", coalesce(col("__budget"), lit(cfg.defaultBudget)))
       case None => pruned0.withColumn("__budget", lit(cfg.defaultBudget))
     }
-    val order = Seq(col("depth").asc, col("warc_ts").desc, col("url_norm").asc)
     // the largest any host's budget can be — a LITERAL, so Catalyst's
     // InferWindowGroupLimit inserts a map-side partial top-k
     // (WindowGroupLimit, whole-stage codegen) before BOTH exchanges: each
@@ -434,13 +453,13 @@ object Frontier {
       if (cfg.saltBuckets <= 1) withBudget
       else {
         val salted = withBudget.withColumn("__salt", pmod(col("url_hash"), lit(cfg.saltBuckets)))
-        val wA = Window.partitionBy(col("host"), col("__salt")).orderBy(order: _*)
+        val wA = Window.partitionBy(col("host"), col("__salt")).orderBy(priority: _*)
         salted
           .withColumn("__rnA", row_number().over(wA))
           .filter(col("__rnA") <= lit(maxBudget) && col("__rnA") <= col("__budget"))
           .drop("__rnA", "__salt")
       }
-    val wB = Window.partitionBy(col("host")).orderBy(order: _*)
+    val wB = Window.partitionBy(col("host")).orderBy(priority: _*)
     phaseA
       .withColumn("batch_rank", row_number().over(wB))
       .filter(col("batch_rank") <= lit(maxBudget) && col("batch_rank") <= col("__budget"))
@@ -472,12 +491,4 @@ object Frontier {
         col("host").asc, col("url_norm").asc)
       .limit(waveSlots)
   }
-
-  /** Outlink extraction from page text (frontier growth between rounds). */
-  def extractLinks(df: DataFrame): DataFrame =
-    df.select(
-      col("url_norm").as("src_url"),
-      col("depth"),
-      explode(expr("regexp_extract_all(text, '<a href=\"([^\"]+)\"', 1)")).as("url"))
-      .withColumn("depth", col("depth") + 1)
 }

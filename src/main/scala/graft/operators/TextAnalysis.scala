@@ -16,7 +16,6 @@ object TextAnalysis {
   def alphaChars(c: Column): Column = length(regexp_replace(c, "[^a-zA-Z]", ""))
   def digitChars(c: Column): Column = length(regexp_replace(c, "[^0-9]", ""))
   def punctChars(c: Column): Column = length(regexp_replace(c, "[^.,;:!?'\"()-]", ""))
-  def spaceChars(c: Column): Column = length(c) - length(regexp_replace(c, " ", ""))
 
   /** Whitespace token count (0 for blank). */
   def tokenCount(c: Column): Column =

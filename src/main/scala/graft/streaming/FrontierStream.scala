@@ -48,11 +48,12 @@ object FrontierStream {
   }
 
   /** Streaming frontier over the PERSISTENT partitioned seen-state: each
-    * micro-batch of candidate urls is canonicalized, deduped in-batch,
-    * filtered against the SeenStore (the same per-partition sketch + exact
-    * sidecar state the batch crawler uses — NOT engine-private streaming
-    * state), politeness-scheduled, written as a fetch batch, and appended
-    * to the store.
+    * micro-batch of candidate urls goes through the crawl round's own
+    * admission (`Frontier.admit`: canonicalized, deduped in-batch,
+    * filtered against the SeenStore — the same per-partition sketch +
+    * exact sidecar state the batch crawler uses, NOT engine-private
+    * streaming state — with no robots gate), is politeness-scheduled,
+    * written as a fetch batch, and appended to the store.
     *
     * Why a store and not flatMapGroupsWithState for the seen set: the
     * accumulated 10^10-url membership belongs to the TABLE, shared by
@@ -76,17 +77,13 @@ object FrontierStream {
         // replayed after a crash between sink write and checkpoint commit:
         // the increment is already durable — skip (idempotent)
       } else {
-        val canonical = graft.operators.Frontier.canonicalize(batch.toDF())
-          .select(col("url_norm"), col("host"), col("url_hash"), col("depth"), col("warc_ts"))
-        val deduped = graft.operators.Frontier.firstSeenWins(canonical, col("url_hash"),
-          Seq(col("depth").asc, col("warc_ts").desc, col("url_norm").asc))
-        val unseen = store.filterUnseen(deduped).result
-        val sched = graft.operators.Frontier.schedule(unseen, politeness, cfg)
+        val unseen = graft.operators.Frontier.admit(batch.toDF(), Some(store), None, cfg)
+        val sched = graft.operators.Frontier.schedule(unseen.result, politeness, cfg)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           sched.write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
           store.append(sched.select(col("url_hash")), batchId)
-        } finally sched.unpersist()
+        } finally { sched.unpersist(); unseen.release() }
       }
     }
   }

@@ -14,3 +14,13 @@ object Bridge {
   def column(e: Expression): Column = Column(ExpressionColumnNode(e))
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }
+
+/** Scratch state that a returned lazy frame still reads after the code
+  * that made it has returned (a query's seen store or index table), so it
+  * cannot be deleted in a `finally`. Spark's `private[spark]`
+  * `Utils.createTempDir` makes `<java.io.tmpdir>/<prefix>-<uuid>` and
+  * registers it for recursive deletion when the JVM exits. */
+object ScratchDir {
+  def apply(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getPath
+}

@@ -242,28 +242,17 @@ class FrontierSpec extends AnyFunSuite {
     val oracle = SequentialOracle.crawl(
       pagesLocal, seeds, 3, budgets, cfg.defaultBudget, robotsMap, cfg.sizeThreshold)
 
-    // Spark crawl, capturing per-round scheduled sets; the seen set is a
-    // temp SeenStore that grows by one increment per round
-    withSeenStore { store =>
-      var frontier = seeds.toDF("url")
-        .withColumn("depth", lit(0))
-        .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
-      for (r <- 0 until 3) {
-        val out = Crawl.round(frontier, web, Some(robotsDf), Some(politenessDf), cfg,
-          withCounters = false, seenStore = Some(store))
-        val got = out.fetched
-          .select("url_norm", "depth", "batch_rank", "is_revisit")
-          .as[(String, Int, Int, Boolean)].collect()
-          .sortBy(_._1)
-          .map { case (u, d, b, rev) => SequentialOracle.Sched(u, d, b, rev) }
-          .toVector
-        assert(got == oracle(r), s"round $r mismatch: got ${got.size} vs oracle ${oracle(r).size}")
-        frontier = out.nextFrontier.cache()
-        frontier.count() // materialize before releasing the round's caches
-        store.append(out.newSeen, r.toLong)
-        out.release()
-        out.fetched.unpersist()
-      }
+    // the Spark crawl loop itself (a temp SeenStore that grows by one
+    // increment per round); its captures carry their round number
+    val res = Crawl.crawl(spark, web, seeds, 3, Some(robotsDf), Some(politenessDf), cfg)
+    for (r <- 0 until 3) {
+      val got = res.allFetched.filter(col("round") === r)
+        .select("url_norm", "depth", "batch_rank", "is_revisit")
+        .as[(String, Int, Int, Boolean)].collect()
+        .sortBy(_._1)
+        .map { case (u, d, b, rev) => SequentialOracle.Sched(u, d, b, rev) }
+        .toVector
+      assert(got == oracle(r), s"round $r mismatch: got ${got.size} vs oracle ${oracle(r).size}")
     }
   }
 
@@ -328,16 +317,14 @@ class FrontierSpec extends AnyFunSuite {
       for (r <- 0 until 4) {
         // no link discovery interference: restrict the frontier to the seeds
         val out = Crawl.round(frontier, web, None, Some(politeness1),
-          cfg.copy(defaultBudget = 1), withCounters = false, seenStore = Some(store))
+          cfg.copy(defaultBudget = 1), seenStore = Some(store))
         val sched = out.newSeen.select("url_norm").as[String].collect()
         assert(sched.length <= 1, "budget 1 → at most one fetch per round")
         fetchedUrls ++= sched
         store.append(out.newSeen, r.toLong)
-        // next round = deferred candidates only (drop discovered links to
+        // next round = deferred candidates only (no discovered links, to
         // isolate the carryover property)
-        frontier = out.nextFrontier
-          .filter(col("depth") === 0)
-          .localCheckpoint(true)
+        frontier = out.deferred.localCheckpoint(true)
         out.release()
       }
     }

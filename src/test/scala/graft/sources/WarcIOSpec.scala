@@ -47,14 +47,16 @@ class WarcIOSpec extends AnyFunSuite {
       .select(col("url_norm").as("url"))
       .withColumn("depth", lit(0))
       .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
-    val out = Crawl.round(frontier, web, None, None, cfg, withCounters = true)
-    assert(out.counters("revisits") > 0, "generator dup clusters must produce revisits")
+    val out = Crawl.round(frontier, web, None, None, cfg)
+    val fetched = out.fetched.count()
+    val nRevisits = out.fetched.filter(col("is_revisit")).count()
+    assert(nRevisits > 0, "generator dup clusters must produce revisits")
     val n = WarcIO.writeFetched(out.fetched, dir, recordsPerFile = 500)
     assert(n >= 1)
     val back = WarcIO.readRecords(spark, dir).cache()
     assert(back.filter(col("block_digest") =!= col("computed_digest")).count() == 0L)
     val revisits = back.filter(col("warc_type") === "revisit")
-    assert(revisits.count() == out.counters("revisits"))
+    assert(revisits.count() == nRevisits)
     val rv = revisits.select("headers", "content")
       .as[(Map[String, String], Array[Byte])].head()
     assert(rv._1.contains("WARC-Refers-To-Target-URI"))
@@ -65,13 +67,13 @@ class WarcIOSpec extends AnyFunSuite {
     // content truncated at end of HTTP headers
     assert(graft.codec.HttpCodec.endOfHeaders(rv._2) == rv._2.length || rv._2.isEmpty)
     val responses = back.filter(col("warc_type") === "response").count()
-    assert(responses == out.counters("fetched") - out.counters("revisits"))
+    assert(responses == fetched - nRevisits)
 
     // fetch PAIRS (J1): every capture has a request record whose
     // WARC-Concurrent-To names its response/revisit record, written
     // response-first into the same file (dialer.go:352-354,380-388)
     val requests = back.filter(col("warc_type") === "request")
-    assert(requests.count() == out.counters("fetched"), "one request per fetch")
+    assert(requests.count() == fetched, "one request per fetch")
     val mainIds = back.filter(col("warc_type").isin("response", "revisit"))
       .select("headers").as[Map[String, String]].collect()
       .map(_("WARC-Record-ID")).toSet
@@ -159,9 +161,8 @@ class WarcIOSpec extends AnyFunSuite {
     val frontier = Frontier.canonicalize(pages).select(col("url_norm").as("url"))
       .withColumn("depth", lit(0))
       .withColumn("warc_ts", lit(new java.sql.Timestamp(PagesGen.BaseEpochSec * 1000L)))
-    val out = Crawl.round(frontier, web, None, None, cfg,
-      withCounters = true, cdx = Some(cdx))
-    assert(out.counters("revisits") > 0)
+    val out = Crawl.round(frontier, web, None, None, cfg, cdx = Some(cdx))
+    assert(out.fetched.filter(col("is_revisit")).count() > 0)
     val srcCounts = out.fetched.groupBy("dedupe_source").count()
       .as[(String, Long)].collect().toMap
     assert(srcCounts.getOrElse("cdx", 0L) > 0, "remote dedupe must fire")

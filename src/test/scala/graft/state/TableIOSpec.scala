@@ -71,6 +71,8 @@ class TableIOSpec extends AnyFunSuite {
       df.select("url_norm").as[String].collect().sorted.toSeq
     assert(urls(part2.allFetched) == urls(full.allFetched),
       "resumed crawl must return all rounds' captures, not only post-restart ones")
+    assert(part2.allFetched.select("round").distinct().as[Int].collect().sorted.toSeq ==
+      Seq(0, 1, 2), "each capture keeps the round that fetched it across the resume")
     assert(TableIO.listSnapshots(s"$dir/fetched") == Seq(0L, 1L, 2L))
   }
 
