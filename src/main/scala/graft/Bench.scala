@@ -61,9 +61,7 @@ object Bench {
     // timings: count() over the rank filter did evaluate the windows, but
     // the uniform basis evaluates the output columns too (r5 re-base)
     val schedSec = median3 {
-      val filtered = store.filterUnseen(canon)
-      evaluate(Frontier.schedule(filtered.result, None, cfg))
-      filtered.release()
+      evaluate(Frontier.schedule(store.filterUnseen(canon).result, None, cfg))
     }
     val extractSec = median3 {
       require(pages.select(http_extract_text(col("html")).as("et"))

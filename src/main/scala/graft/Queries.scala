@@ -682,7 +682,7 @@ object Queries {
       val r1 = Frontier.digestDedup(p.filter(col("doc_id") % 2 === 0), cfg)
       graft.state.DigestIndex.append(r1, ref, captureTsCol = "warc_ts")
       val r2 = Frontier.digestDedupWithCdx(p.filter(col("doc_id") % 2 === 1),
-        graft.state.DigestIndex.cdx(s, ref).get, cfg)
+        graft.state.DigestIndex.cdx(s, ref, before = Some(1L)).get, cfg)
       r2.select("doc_id", "is_revisit", "dedupe_source", "refers_to_url")
         .orderBy("doc_id")
     }),

@@ -88,8 +88,8 @@ object Crawl {
       seenStore: Option[SeenStore.Store] = None,
       cdx: Option[DataFrame] = None): RoundOutput = {
 
-    val admitted = Frontier.admit(frontier, seenStore, robots, cfg)
-    val allowed = admitted.result.persist(StorageLevel.MEMORY_AND_DISK)
+    val allowed = Frontier.admit(frontier, seenStore, robots, cfg)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val scheduled = Frontier.schedule(allowed, politeness, cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // politeness carryover: allowed-but-unscheduled candidates re-enter the
@@ -116,11 +116,8 @@ object Crawl {
 
     val newSeen = scheduled.select(col("url_hash"), col("url_norm"))
 
-    val release = () => {
-      allowed.unpersist(); scheduled.unpersist(); fetched.unpersist()
-      admitted.release()
-    }
-    RoundOutput(fetched, deferred, newSeen, release)
+    RoundOutput(fetched, deferred, newSeen,
+      () => { allowed.unpersist(); scheduled.unpersist(); fetched.unpersist() })
   }
 
   /** Link discovery from a round's non-revisit fetches; discovery recency =
@@ -210,9 +207,11 @@ object Crawl {
           // dedupe map); a static CDX (a real remote archive) unions in
           // with an index configured, round 0 (nothing appended yet) still
           // runs the SAME dedup-with-cdx plan over an empty frame, so every
-          // round's output schema is identical (the accumulator unions them)
-          val idxCdx = digestIndex.map(r =>
-            DigestIndex.cdx(spark, r).getOrElse(DigestIndex.emptyCdx(spark)))
+          // round's output schema is identical (the accumulator unions them).
+          // Only rounds before r: a crash-replayed round must not find its
+          // own earlier captures, which its append below has yet to wipe
+          val idxCdx = digestIndex.map(ix =>
+            DigestIndex.cdx(spark, ix, before = Some(r.toLong)).getOrElse(DigestIndex.emptyCdx(spark)))
           val roundCdx = (cdx, idxCdx) match {
             case (Some(c), Some(idx)) => Some(c.unionByName(idx))
             case (c, idx) => c.orElse(idx)
@@ -262,20 +261,25 @@ object Crawl {
           // a crash-replay of this round overwrites its own partition instead
           // of appending duplicates
           digestIndex.foreach(DigestIndex.append(roundFetched, _, r.toLong))
-          // the next frontier is pinned like the captures (a snapshot that
-          // resume reads, or a localCheckpoint that truncates the round's
-          // lineage before release()); its row count rides the same job
-          val nfObs = org.apache.spark.sql.Observation()
-          frontier = Durable.pin(nextFrontier.observe(nfObs, count(lit(1)).as("rows")),
-            frontierTable, r.toLong, Map("round" -> r.toLong))
-          frontierCount = nfObs.get("rows").asInstanceOf[Long]
-          store.append(out.newSeen, r.toLong, counters)
-          // periodic log-structured compaction keeps the probe chain O(1) in
-          // rounds (a 1,000-round crawl would otherwise pay 1,000 sketch
-          // checks per candidate)
-          if (cfg.seenCompactEvery > 0 && (r + 1) % cfg.seenCompactEvery == 0) {
-            store.compact(spark)
-            store.gc() // drop the superseded generation's blobs
+          // after an in-memory crawl's last round nothing reads the next
+          // frontier or the seen store (deleted below); a durable crawl
+          // commits both, because resume reads them
+          if (stateDir.nonEmpty || r < startRound + maxRounds - 1) {
+            // the next frontier is pinned like the captures (a snapshot that
+            // resume reads, or a localCheckpoint that truncates the round's
+            // lineage before release()); its row count rides the same job
+            val nfObs = org.apache.spark.sql.Observation()
+            frontier = Durable.pin(nextFrontier.observe(nfObs, count(lit(1)).as("rows")),
+              frontierTable, r.toLong, Map("round" -> r.toLong))
+            frontierCount = nfObs.get("rows").asInstanceOf[Long]
+            store.append(out.newSeen, r.toLong, counters)
+            // periodic log-structured compaction keeps the probe chain O(1)
+            // in rounds (a 1,000-round crawl would otherwise pay 1,000
+            // sketch checks per candidate)
+            if (cfg.seenCompactEvery > 0 && (r + 1) % cfg.seenCompactEvery == 0) {
+              store.compact(spark)
+              store.gc() // drop the superseded generation's blobs
+            }
           }
           // round caches (allowed/scheduled/fetched) are no longer referenced:
           // everything downstream reads pinned or durable state

@@ -88,15 +88,14 @@ object Frontier {
   /** Stages 1–2 and 4 — admission of a frontier batch (url, depth,
     * warc_ts): canonicalize → one row per url_hash by [[priority]] → drop
     * urls `seen` already holds → `robots` gate. Output
-    * (url_norm, host, url_hash, depth, warc_ts), ready for [[schedule]];
-    * release it like [[graft.state.SeenStore.Store.filterUnseen]]'s. */
+    * (url_norm, host, url_hash, depth, warc_ts), ready for [[schedule]]. */
   def admit(frontier: DataFrame, seen: Option[graft.state.SeenStore.Store],
-            robots: Option[DataFrame], cfg: Config): graft.state.SeenStore.Filtered = {
+            robots: Option[DataFrame], cfg: Config): DataFrame = {
     val canonical = canonicalize(frontier)
       .select(col("url_norm"), col("host"), col("url_hash"), col("depth"), col("warc_ts"))
     val deduped = firstSeenWins(canonical, col("url_hash"), priority)
-    val unseen = seen.fold(graft.state.SeenStore.Filtered(deduped, () => ()))(_.filterUnseen(deduped))
-    robots.fold(unseen)(r => unseen.copy(result = applyRobots(unseen.result, r, cfg)))
+    val unseen = seen.fold(deduped)(_.filterUnseen(deduped).result)
+    robots.fold(unseen)(applyRobots(unseen, _, cfg))
   }
 
   /** Stage 3 — payload-digest dedup (J2+J4): first capture per digest wins;

@@ -26,15 +26,20 @@ object DigestIndex {
   def exists(spark: SparkSession, ref: Ref): Boolean =
     spark.catalog.tableExists(ref.table)
 
-  /** The index as a digestDedupWithCdx-compatible CDX frame. Reading the
-    * bucketed table carries its partitioning into the plan: the
-    * per-digest last-capture aggregate and the dedup join need NO exchange
-    * on this side (bucket files with the same id are combined across the
-    * round partition dirs into one scan partition). The internal `round`
-    * key is dropped — consumers see the pure CDX shape. */
-  def cdx(spark: SparkSession, ref: Ref): Option[DataFrame] =
+  /** The index as a digestDedupWithCdx-compatible CDX frame, of the rounds
+    * below `before` if given (a partition filter: the scan skips the other
+    * `round=` dirs). Reading the bucketed table carries its partitioning
+    * into the plan: the per-digest last-capture aggregate and the dedup
+    * join need NO exchange on this side (bucket files with the same id are
+    * combined across the round partition dirs into one scan partition).
+    * The internal `round` key is dropped — consumers see the pure CDX
+    * shape. */
+  def cdx(spark: SparkSession, ref: Ref, before: Option[Long] = None): Option[DataFrame] =
     if (!exists(spark, ref)) None
-    else Some(spark.table(ref.table).drop("round"))
+    else {
+      val t = spark.table(ref.table)
+      Some(before.fold(t)(r => t.filter(col("round") < r)).drop("round"))
+    }
 
   /** Append one round's NEW first-captures (non-revisit rows of the
     * round's deduped output). O(|new|): the existing index files are never
@@ -59,12 +64,8 @@ object DigestIndex {
         lit("response").as("record_type"),
         lit(round).as("round"))
     val spark = fetched.sparkSession
-    if (!exists(spark, ref)) {
-      rows.write.mode(SaveMode.Overwrite).option("path", ref.path)
-        .partitionBy("round")
-        .bucketBy(ref.nBuckets, "payload_digest").sortBy("payload_digest")
-        .saveAsTable(ref.table)
-    } else {
+    val existed = exists(spark, ref)
+    if (existed) {
       // replay hygiene: drop whatever a crashed earlier append left for
       // this round (files kept inside the dir so a registered partition
       // location never dangles mid-wipe), then re-append. Through Hadoop
@@ -78,24 +79,20 @@ object DigestIndex {
       if (fs.exists(part))
         fs.listStatus(part).foreach(st => fs.delete(st.getPath, true))
       spark.sql(s"ALTER TABLE `${ref.table}` DROP IF EXISTS PARTITION (round=$round)")
-      rows.write.mode(SaveMode.Append).option("path", ref.path)
-        .partitionBy("round")
-        .bucketBy(ref.nBuckets, "payload_digest").sortBy("payload_digest")
-        .saveAsTable(ref.table)
     }
+    rows.write.mode(if (existed) SaveMode.Append else SaveMode.Overwrite).option("path", ref.path)
+      .partitionBy("round")
+      .bucketBy(ref.nBuckets, "payload_digest").sortBy("payload_digest")
+      .saveAsTable(ref.table)
   }
 
   /** Zero-row CDX frame with the index schema — lets a crawl's FIRST round
     * run the same digestDedupWithCdx plan (stable output schema) before
     * anything has been appended. */
   def emptyCdx(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("payload_digest", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("target_uri", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("capture_ts", org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("record_type", org.apache.spark.sql.types.StringType))))
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "payload_digest STRING, target_uri STRING, capture_ts TIMESTAMP, record_type STRING"))
 
   def drop(spark: SparkSession, ref: Ref): Unit = Buckets.drop(spark, ref.table)
 }

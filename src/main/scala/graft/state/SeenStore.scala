@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Partitioned, append-only URL-seen state — the scale-true replacement for
   * a driver-built global Bloom filter (which at the north_star's 10^10 seen
@@ -16,10 +16,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   store.json                       parts (fixed at creation) + the bloom sketch format
   *   inc-<id>/sketch/p-<p>.hashes     sorted distinct url_hash sidecar of the increment's part p
   *   inc-<id>/sketch/p-<p>.bloom      Bloom sketch over that sidecar (fpp 0.01)
-  *   compact-<g>/sketch/p-<p>.…       merged bank: all increments ≤ upTo in one sketch+sidecar
+  *   inc-<id>/sketch/p-<p>.crc32c     CRC32C of the part's .hashes and .bloom
+  *   compact-<g>/sketch/p-<p>.…       merged bank: all increments ≤ upTo in one part's three files
   *   manifest/inc-<id>.json           commit marker (atomic rename), rowCount = distinct hashes
   *   manifest/compact-<g>.json        compaction commit marker {gen, upTo}
   * }}}
+  * No `.crc` files: every file is written and read through `java.nio`
+  * ([[SketchBank]] owns the bank files), so `dir` is a local or
+  * POSIX-mounted path, and every executor must be able to read it.
   *
   * Scale properties:
   *  - sidecars and sketches are built and written by executors, one task
@@ -43,6 +47,8 @@ object SeenStore {
   private val Sketch = "bloom"
   private[state] val Fpp = 0.01
 
+  /** `filterUnseen`'s result. `release` is a no-op, kept only because the
+    * benchmark's `frontier-burst` workload calls it. */
   final case class Filtered(result: DataFrame, release: () => Unit)
 
   def apply(dir: String, cfg: Config = Config()): Store = new Store(dir, cfg)
@@ -72,21 +78,32 @@ object SeenStore {
       }
     }
 
-    /** Committed increment ids: the contiguous prefix 0..k (an orphan
-      * increment beyond a crash is invisible until recommitted). */
-    def committedIds: Seq[Long] = {
-      val mdir = Paths.get(dir, "manifest")
-      if (!Files.exists(mdir)) return Seq.empty
-      import scala.jdk.CollectionConverters._
-      val ids = Files.list(mdir).iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("inc-") && n.endsWith(".json"))
-        .map(n => n.stripPrefix("inc-").stripSuffix(".json").toLong)
-        .toSeq.sorted
-      ids.zipWithIndex.takeWhile { case (id, i) => id == i }.map(_._1)
+    private def manifest: Path = Paths.get(dir, "manifest")
+
+    /** The n of every committed `manifest/<kind>-<n>.json`, ascending. */
+    private def markers(kind: String): Seq[Long] =
+      if (!Files.isDirectory(manifest)) Seq.empty
+      else {
+        import scala.jdk.CollectionConverters._
+        val ls = Files.list(manifest)
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.startsWith(s"$kind-") && n.endsWith(".json"))
+          .map(_.stripPrefix(s"$kind-").stripSuffix(".json").toLong).toList.sorted
+        finally ls.close()
+      }
+
+    /** Writes `manifest/<name>.json` by atomic rename: the commit point. */
+    private def commitMarker(name: String, json: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
+      Files.createDirectories(manifest)
+      val tmp = manifest.resolve(s".tmp-$name.json")
+      Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json))
+      Files.move(tmp, manifest.resolve(s"$name.json"), StandardCopyOption.ATOMIC_MOVE)
     }
 
-    def isEmpty: Boolean = committedIds.isEmpty
+    /** Committed increment ids: the contiguous prefix 0..k (an orphan
+      * increment beyond a crash is invisible until recommitted). */
+    def committedIds: Seq[Long] =
+      markers("inc").zipWithIndex.takeWhile { case (id, i) => id == i }.map(_._1)
 
     /** Append one increment (id must be committedIds.length — contiguous).
       * Idempotent: a crashed/orphaned increment with the same id is
@@ -125,40 +142,27 @@ object SeenStore {
           val runs = it.toArray
           if (runs.nonEmpty) {
             val hashes = SketchBank.sortDistinct(runs.flatMap(_._2))
-            SketchBank.writeBank(sketchDir, runs(0)._1, hashes,
-              new org.apache.hadoop.conf.Configuration())
+            SketchBank.writeBank(sketchDir, runs(0)._1, hashes)
             rows.add(hashes.length.toLong)
           }
         }
 
-      // commit marker last (atomic rename = the commit point)
-      val mdir = Paths.get(dir, "manifest")
-      Files.createDirectories(mdir)
+      // commit marker last
       val json = mapper.createObjectNode()
       json.put("id", id)
       json.put("rowCount", rows.sum)
       val cn = json.putObject("counters")
       counters.toSeq.sortBy(_._1).foreach { case (k, v) => cn.put(k, v) }
-      val tmp = mdir.resolve(s".tmp-inc-$id.json")
-      Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json))
-      Files.move(tmp, mdir.resolve(s"inc-$id.json"), StandardCopyOption.ATOMIC_MOVE)
+      commitMarker(s"inc-$id", json)
     }
 
     /** Committed compaction generations as (gen, upTo-increment-id) pairs,
       * ascending by gen. */
-    def compactions: Seq[(Long, Long)] = {
-      val mdir = Paths.get(dir, "manifest")
-      if (!Files.exists(mdir)) return Seq.empty
-      import scala.jdk.CollectionConverters._
-      Files.list(mdir).iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("compact-") && n.endsWith(".json"))
-        .map { n =>
-          val node = mapper.readTree(Files.readAllBytes(mdir.resolve(n)))
-          (node.get("gen").asLong(), node.get("upTo").asLong())
-        }
-        .toSeq.sortBy(_._1)
-    }
+    def compactions: Seq[(Long, Long)] =
+      markers("compact").map { g =>
+        val node = mapper.readTree(Files.readAllBytes(manifest.resolve(s"compact-$g.json")))
+        (node.get("gen").asLong(), node.get("upTo").asLong())
+      }.sortBy(_._1)
 
     /** The sketch-bank directories a probe over increments `ids` (a
       * contiguous 0..m prefix) must consult: the newest compaction covering
@@ -203,25 +207,20 @@ object SeenStore {
       spark.range(cfg.parts).selectExpr("cast(id as int) as p")
         .repartition(cfg.parts, col("p"))
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          val conf = new org.apache.hadoop.conf.Configuration()
           it.foreach { row =>
             val p = row.getInt(0)
             val merged = banksArr
-              .map(b => SketchBank.loadHashes(s"$b/p-$p.hashes"))
+              .map(b => SketchBank.loadHashes(s"$b/p-$p"))
               .reduce(SketchBank.mergeDedupSorted)
-            SketchBank.writeBank(outSketchDir, p, merged, conf)
+            SketchBank.writeBank(outSketchDir, p, merged)
           }
         }
-      // commit marker last (atomic rename = the commit point)
-      val mdir = Paths.get(dir, "manifest")
-      Files.createDirectories(mdir)
+      // commit marker last
       val json = mapper.createObjectNode()
       json.put("gen", gen)
       json.put("upTo", ids.last)
       json.put("mergedBanks", banks.length)
-      val tmp = mdir.resolve(s".tmp-compact-$gen.json")
-      Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json))
-      Files.move(tmp, mdir.resolve(s"compact-$gen.json"), StandardCopyOption.ATOMIC_MOVE)
+      commitMarker(s"compact-$gen", json)
     }
 
     /** Reclaim superseded compaction generations: every committed
@@ -236,9 +235,8 @@ object SeenStore {
       val gens = compactions
       if (gens.length <= 1) return
       val keep = gens.maxBy(c => (c._2, c._1))._1
-      val mdir = Paths.get(dir, "manifest")
       gens.filter(_._1 != keep).foreach { case (g, _) =>
-        Files.deleteIfExists(mdir.resolve(s"compact-$g.json"))
+        Files.deleteIfExists(manifest.resolve(s"compact-$g.json"))
         graft.LocalFiles.deleteRec(new java.io.File(s"$dir/compact-$g"))
       }
     }
@@ -247,20 +245,18 @@ object SeenStore {
       * the banks a probe over `ids` consults — the size that decides
       * routed vs direct probing in [[filterUnseen]]. */
     private def probeStateBytes(banks: Seq[String]): Long = {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      banks.map { b =>
-        val p = new org.apache.hadoop.fs.Path(b)
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) 0L
-        else fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
+      import scala.jdk.CollectionConverters._
+      banks.map(Paths.get(_)).filter(Files.isDirectory(_)).map { b =>
+        val ls = Files.list(b)
+        try ls.iterator().asScala.filterNot(_.toString.endsWith(".crc")).map(Files.size).sum
+        finally ls.close()
       }.sum
     }
 
     /** Exact unseen filter as a narrow codegen filter: the probe checks the
       * sketch (fast definite-no) and falls through to a binary search of
       * the partition's exact sorted-hash state — no join, no second pass
-      * over the candidates, no driver state. `release` is a no-op (kept
-      * for API stability with earlier join-based builds).
+      * over the candidates, no driver state.
       *
       * Routing is SIZE-ADAPTIVE (the broadcast-join decision applied to
       * seen state): when the probe-visible banks' on-disk footprint fits
@@ -295,11 +291,7 @@ object SeenStore {
     }
   }
 
-  private def mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m
-  }
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   import org.apache.spark.sql.graft.Bridge
 
@@ -413,7 +405,7 @@ private[state] final class SeenBank(path: String, parts: Int) {
       // sketch maybe → exact sorted-hash state decides (no false positives)
       var arr = exact.get(part)
       if (arr == null) {
-        exact.compareAndSet(part, null, SketchBank.loadHashes(s"$path/p-$part.hashes"))
+        exact.compareAndSet(part, null, SketchBank.loadHashes(s"$path/p-$part"))
         arr = exact.get(part)
       }
       java.util.Arrays.binarySearch(arr, hash) >= 0
@@ -421,7 +413,12 @@ private[state] final class SeenBank(path: String, parts: Int) {
   }
 }
 
-/** Sketch-blob loader (cold path only — resolvers cache the result). */
+/** The one reader and writer of bank files (the `p-<p>.*` layout in
+  * [[SeenStore]]), all through `java.nio.file.Files`. `.crc32c` holds the
+  * CRC32C of `.hashes` then of `.bloom` as two big-endian ints; every read
+  * verifies its file against it, and a part without one (written before
+  * checksums were kept) loads unchecked. Loads are the cold path only:
+  * resolvers cache the result. */
 object SketchBank {
   private[state] trait Probe { def mightContain(h: Long): Boolean }
   private object Absent extends Probe { def mightContain(h: Long) = false }
@@ -459,60 +456,64 @@ object SketchBank {
     if (k == hashes.length) hashes else java.util.Arrays.copyOf(hashes, k)
   }
 
-  /** Writes one partition of a bank: the sorted distinct `hashes` as the
-    * `.hashes` sidecar and a Bloom sketch sized to them. */
-  private[state] def writeBank(bankDir: String, part: Int, hashes: Array[Long],
-                               conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$bankDir/p-$part.hashes")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(path, true)
-    try {
-      val bb = java.nio.ByteBuffer.allocate(hashes.length * 8)
-      hashes.foreach(bb.putLong)
-      out.write(bb.array())
-    } finally out.close()
+  /** Writes part `part` of a bank: the sorted distinct `hashes` as the
+    * `.hashes` sidecar, a Bloom sketch sized to them, and last the CRCs of
+    * both (a part is only probe-visible once its manifest commits). */
+  private[state] def writeBank(bankDir: String, part: Int, hashes: Array[Long]): Unit = {
+    val sidecar = java.nio.ByteBuffer.allocate(hashes.length * 8)
+    hashes.foreach(sidecar.putLong)
     val bf = org.apache.spark.util.sketch.BloomFilter
       .create(math.max(64L, hashes.length.toLong), SeenStore.Fpp)
     hashes.foreach(bf.putLong)
-    val so = fs.create(new org.apache.hadoop.fs.Path(s"$bankDir/p-$part.bloom"), true)
-    try bf.writeTo(so) finally so.close()
+    val sketch = new java.io.ByteArrayOutputStream()
+    bf.writeTo(sketch)
+    val files = Seq(sidecar.array(), sketch.toByteArray)
+    val prefix = Files.createDirectories(Paths.get(bankDir)).resolve(s"p-$part").toString
+    Exts.zip(files).foreach { case (ext, bytes) => Files.write(Paths.get(s"$prefix.$ext"), bytes) }
+    val crcs = java.nio.ByteBuffer.allocate(8)
+    files.foreach(b => crcs.putInt(crc32c(b)))
+    Files.write(Paths.get(s"$prefix.crc32c"), crcs.array())
   }
 
-  /** Sorted int64 state sidecar; absent file → empty array. */
-  private[state] def loadHashes(path: String): Array[Long] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Array.emptyLongArray
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    val bb = java.nio.ByteBuffer.wrap(buf)
-    val out = new Array[Long](len / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong(); i += 1 }
-    out
+  // the data files of a part, in the order of their CRCs in `.crc32c`
+  private val Exts = Seq("hashes", "bloom")
+
+  private def crc32c(bytes: Array[Byte]): Int = {
+    val c = new java.util.zip.CRC32C()
+    c.update(bytes)
+    c.getValue.toInt
   }
 
-  private[state] def load(prefix: String): Probe = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    def bytesOf(p: org.apache.hadoop.fs.Path): Option[Array[Byte]] = {
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf)
-          Some(buf)
-        } finally in.close()
+  private def readIfExists(path: String): Option[Array[Byte]] =
+    try Some(Files.readAllBytes(Paths.get(path)))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** The bytes of `<prefix>.<ext>` (None if absent), checked against the
+    * part's `.crc32c` when it has one. */
+  private def readChecked(prefix: String, ext: String): Option[Array[Byte]] =
+    readIfExists(s"$prefix.$ext").map { bytes =>
+      readIfExists(s"$prefix.crc32c").foreach { crcs =>
+        if (crcs.length != 4 * Exts.length ||
+            crc32c(bytes) != java.nio.ByteBuffer.wrap(crcs).getInt(4 * Exts.indexOf(ext)))
+          throw new java.io.IOException(
+            s"seen bank file $prefix.$ext does not match its CRC32C in $prefix.crc32c")
       }
+      bytes
     }
-    bytesOf(new org.apache.hadoop.fs.Path(prefix + ".bloom"))
+
+  /** Sorted int64 state sidecar of the part at `prefix` (`<bank>/p-<p>`);
+    * absent file → empty array. */
+  private[state] def loadHashes(prefix: String): Array[Long] =
+    readChecked(prefix, "hashes").fold(Array.emptyLongArray) { buf =>
+      val out = new Array[Long](buf.length / 8)
+      java.nio.ByteBuffer.wrap(buf).asLongBuffer().get(out)
+      out
+    }
+
+  /** Sketch of the part at `prefix`; absent file → a probe that holds nothing. */
+  private[state] def load(prefix: String): Probe =
+    readChecked(prefix, "bloom")
       .map(b => new Bloom(org.apache.spark.util.sketch.BloomFilter
         .readFrom(new java.io.ByteArrayInputStream(b))): Probe)
       .getOrElse(Absent)
-  }
 }

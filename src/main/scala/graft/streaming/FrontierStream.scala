@@ -78,12 +78,12 @@ object FrontierStream {
         // the increment is already durable — skip (idempotent)
       } else {
         val unseen = graft.operators.Frontier.admit(batch.toDF(), Some(store), None, cfg)
-        val sched = graft.operators.Frontier.schedule(unseen.result, politeness, cfg)
+        val sched = graft.operators.Frontier.schedule(unseen, politeness, cfg)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           sched.write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
           store.append(sched.select(col("url_hash")), batchId)
-        } finally { sched.unpersist(); unseen.release() }
+        } finally sched.unpersist()
       }
     }
   }

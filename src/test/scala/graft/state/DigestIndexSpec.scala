@@ -5,8 +5,8 @@ import graft.operators.Frontier
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScratchDir
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The cross-round digest index: bucketed persistence keeps the dedupe
   * join exchange-free on the index side across consecutive rounds, and the
@@ -35,7 +35,7 @@ class DigestIndexSpec extends AnyFunSuite {
     // the exchange question entirely; at scale the index is huge
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val ref = DigestIndex.Ref("graft_test_didx",
-      Files.createTempDirectory("graft-didx").toString, nBuckets = 4)
+      ScratchDir("graft-didx"), nBuckets = 4)
     val cfg = Frontier.Config()
     try {
       val r1 = Frontier.digestDedup(pages(0L until 40L), cfg)
@@ -71,6 +71,20 @@ class DigestIndexSpec extends AnyFunSuite {
         case e: ShuffleExchangeExec
           if e.collectFirst { case f: FileSourceScanExec if f.bucketedScan => f }.isDefined => e
       }.isEmpty, s"round 3 must stay exchange-free on the index side:\n$plan3")
+
+      // a read bounded to the rounds before 1 prunes round=1 and stays
+      // exchange-free on the index side
+      val bounded = DigestIndex.cdx(spark, ref, before = Some(1L)).get
+      assert(bounded.count() == rowsAfterFirst, "before = 1 reads round 0 only")
+      val plan3b = Frontier.digestDedupWithCdx(pages(80L until 120L), bounded, cfg)
+        .queryExecution.executedPlan
+      assert(plan3b.collect {
+        case f: FileSourceScanExec if f.bucketedScan && f.partitionFilters.nonEmpty => f
+      }.nonEmpty, s"the bounded index scan must stay bucketed and prune on round:\n$plan3b")
+      assert(plan3b.collect {
+        case e: ShuffleExchangeExec
+          if e.collectFirst { case f: FileSourceScanExec if f.bucketedScan => f }.isDefined => e
+      }.isEmpty, s"the bounded read must stay exchange-free on the index side:\n$plan3b")
 
       // cross-round correctness: every round-3 capture whose digest was
       // first seen in round 1 or 2 is a revisit referencing that capture
@@ -114,7 +128,7 @@ class DigestIndexSpec extends AnyFunSuite {
     // FileSystem — a java.io.File("file:/...") probe silently no-ops and
     // the re-append would read both generations forever
     val ref = DigestIndex.Ref("graft_test_didx_uri",
-      "file:" + Files.createTempDirectory("graft-didx-uri").toString, nBuckets = 2)
+      "file:" + ScratchDir("graft-didx-uri"), nBuckets = 2)
     try {
       val r1 = Frontier.digestDedup(pages(0L until 40L), Frontier.Config())
       DigestIndex.append(r1, ref, round = 0L, captureTsCol = "warc_ts")

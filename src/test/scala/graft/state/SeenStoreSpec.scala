@@ -2,6 +2,7 @@ package graft.state
 
 import graft.GraftSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScratchDir
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -13,14 +14,14 @@ class SeenStoreSpec extends AnyFunSuite {
   private def sidecarHashes(incDir: String): Seq[Long] =
     new java.io.File(s"$incDir/sketch").listFiles().toSeq.map(_.getName)
       .filter(_.endsWith(".hashes")).sorted
-      .flatMap(n => SketchBank.loadHashes(s"$incDir/sketch/$n").toSeq)
+      .flatMap(n => SketchBank.loadHashes(s"$incDir/sketch/${n.stripSuffix(".hashes")}").toSeq)
 
   private def rowCount(dir: String, id: Long): Long =
     new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(new java.io.File(s"$dir/manifest/inc-$id.json")).get("rowCount").asLong()
 
   test("append is O(|increment|): committing round N leaves earlier increments untouched") {
-    val dir = Files.createTempDirectory("graft-seen-inc").toString
+    val dir = ScratchDir("graft-seen-inc")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     store.append(spark.range(0, 1000).select(xxhash64(col("id")).as("url_hash")), 0L)
     def mtimes(inc: Long): Map[String, Long] = {
@@ -39,7 +40,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("append writes sorted distinct sidecars once: repeated hashes count once") {
-    val dir = Files.createTempDirectory("graft-seen-dups").toString
+    val dir = ScratchDir("graft-seen-dups")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     // 0..299 three times over, in 7 input partitions
     val inc = spark.range(0, 900, 1, 7).select(xxhash64(col("id") % 300).as("url_hash"))
@@ -47,7 +48,7 @@ class SeenStoreSpec extends AnyFunSuite {
     assert(new java.io.File(s"$dir/inc-0").list().toSeq == Seq("sketch"),
       "an increment is its sketch directory only")
     (0 until 4).foreach { p =>
-      val hs = SketchBank.loadHashes(s"$dir/inc-0/sketch/p-$p.hashes")
+      val hs = SketchBank.loadHashes(s"$dir/inc-0/sketch/p-$p")
       assert(hs.nonEmpty && hs.sliding(2).forall(w => w(0) < w(1)),
         s"part $p sidecar must be strictly increasing")
       assert(hs.forall(h => java.lang.Math.floorMod(h, 4L) == p), s"part $p holds only its hashes")
@@ -59,7 +60,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("append runs one job with one shuffle") {
-    val dir = Files.createTempDirectory("graft-seen-jobs").toString
+    val dir = ScratchDir("graft-seen-jobs")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     val inc = spark.range(0, 5000, 1, 6).select(xxhash64(col("id")).as("url_hash"))
     val tally = org.apache.spark.graft.JobTally(spark.sparkContext)(store.append(inc, 0L))
@@ -68,7 +69,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("orphaned increment (crash before manifest) is invisible and replayable") {
-    val dir = Files.createTempDirectory("graft-seen-orphan").toString
+    val dir = ScratchDir("graft-seen-orphan")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     store.append(spark.range(0, 500).select(xxhash64(col("id")).as("url_hash")), 0L)
     // simulate a crash: data + sketch written for inc-1, no manifest
@@ -85,7 +86,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("replaying an orphaned increment with different rows leaves none of the orphan's parts") {
-    val dir = Files.createTempDirectory("graft-seen-orphan-diff").toString
+    val dir = ScratchDir("graft-seen-orphan-diff")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     val orphan = spark.range(0, 400).select(xxhash64(col("id")).as("url_hash"))
     store.append(orphan, 0L)
@@ -96,7 +97,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("compact: 20 increments merge to one probe bank, filterUnseen unchanged") {
-    val dir = Files.createTempDirectory("graft-seen-compact").toString
+    val dir = ScratchDir("graft-seen-compact")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     // 20 rounds of 150 urls each, with deliberate overlap between rounds
     (0 until 20).foreach { i =>
@@ -135,7 +136,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("gc drops superseded generations; probes and time travel survive") {
-    val dir = Files.createTempDirectory("graft-seen-gc").toString
+    val dir = ScratchDir("graft-seen-gc")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     (0 until 4).foreach { i =>
       store.append(spark.range(i * 100, i * 100 + 100)
@@ -161,7 +162,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("compact crash before marker is invisible; replay commits cleanly") {
-    val dir = Files.createTempDirectory("graft-seen-compact-crash").toString
+    val dir = ScratchDir("graft-seen-compact-crash")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     (0 until 3).foreach { i =>
       store.append(spark.range(i * 100, i * 100 + 100)
@@ -180,7 +181,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("probe plan: sketch probe is codegen'd, no bloom bytes cross the driver") {
-    val dir = Files.createTempDirectory("graft-seen-plan").toString
+    val dir = ScratchDir("graft-seen-plan")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     store.append(spark.range(0, 2000).select(xxhash64(col("id")).as("url_hash")), 0L)
     val cand = spark.range(0, 4000).select(xxhash64(col("id")).as("url_hash"))
@@ -213,7 +214,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("codegen probe loads banks once per JVM: rows survive deleting the bank files") {
-    val dir = Files.createTempDirectory("graft-seen-once").toString
+    val dir = ScratchDir("graft-seen-once")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     store.append(spark.range(0, 3000).select(xxhash64(col("id")).as("url_hash")), 0L)
     val cand = spark.range(0, 6000, 1, 8).select(xxhash64(col("id")).as("url_hash"))
@@ -225,7 +226,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("bank lists that share a bank share its loaded state") {
-    val dir = Files.createTempDirectory("graft-seen-shared").toString
+    val dir = ScratchDir("graft-seen-shared")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     store.append(spark.range(0, 3000).select(xxhash64(col("id")).as("url_hash")), 0L)
     store.append(spark.range(3000, 4000).select(xxhash64(col("id")).as("url_hash")), 1L)
@@ -238,7 +239,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("directProbeMaxBytes takes byte strings: 1g probes directly, 1k routes, identical rows") {
-    val dir = Files.createTempDirectory("graft-seen-bytestr").toString
+    val dir = ScratchDir("graft-seen-bytestr")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     store.append(spark.range(0, 3000).select(xxhash64(col("id")).as("url_hash")), 0L)
     val cand = spark.range(0, 6000).select(xxhash64(col("id")).as("url_hash"))
@@ -259,7 +260,7 @@ class SeenStoreSpec extends AnyFunSuite {
   }
 
   test("probe routing is size-adaptive: direct (no exchange) under the gate, routed over it, identical rows") {
-    val dir = Files.createTempDirectory("graft-seen-route").toString
+    val dir = ScratchDir("graft-seen-route")
     val store = SeenStore(dir, SeenStore.Config(parts = 4))
     store.append(spark.range(0, 3000).select(xxhash64(col("id")).as("url_hash")), 0L)
     def candidates = spark.range(0, 6000).select(xxhash64(col("id")).as("url_hash"))
@@ -289,7 +290,7 @@ class SeenStoreSpec extends AnyFunSuite {
     * xxhash64 of ids 0..299, increment 1 ids 250..449, parts = 4. */
   private def parentFormatStore(): String = {
     val src = java.nio.file.Paths.get(getClass.getResource("/seenstore-parent-format").toURI)
-    val dst = Files.createTempDirectory("graft-seen-parent")
+    val dst = java.nio.file.Paths.get(ScratchDir("graft-seen-parent"))
     import scala.jdk.CollectionConverters._
     Files.walk(src).iterator().asScala.toSeq.foreach { f =>
       val to = dst.resolve(src.relativize(f).toString)
@@ -298,8 +299,17 @@ class SeenStoreSpec extends AnyFunSuite {
     dst.toString
   }
 
-  test("a store written with parquet increments and fpp/sketch config still probes, appends and compacts") {
-    val dir = parentFormatStore()
+  /** Every file under `dir`, recursively. */
+  private def filesUnder(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val w = Files.walk(java.nio.file.Paths.get(dir))
+    try w.iterator().asScala.filter(Files.isRegularFile(_)).toList finally w.close()
+  }
+
+  /** Probes, appends to and compacts a copy of the checked-in store; the
+    * rows are the ones the previous layout's filterUnseen returned, and
+    * the new banks carry a `.crc32c` per part and no `.crc`. */
+  private def probeAppendCompactParentFormat(dir: String): Unit = {
     assert(new java.io.File(s"$dir/inc-0/data").isDirectory, "fixture keeps its parquet increments")
     val store = SeenStore(dir)
     assert(store.config == SeenStore.Config(parts = 4))
@@ -314,6 +324,56 @@ class SeenStoreSpec extends AnyFunSuite {
     store.compact(spark)
     assert(store.probeBanks(store.committedIds).length == 1)
     assert(unseen(0 until 600) == hashes(500 until 600))
+    val written = filesUnder(s"$dir/inc-2") ++ filesUnder(s"$dir/compact-0")
+    assert(!written.exists(_.toString.endsWith(".crc")), s"append and compact wrote a .crc: $written")
+    assert(written.count(_.toString.endsWith(".crc32c")) == 4 + 4, written)
+  }
+
+  test("a store written with parquet increments and fpp/sketch config still probes, appends and compacts") {
+    probeAppendCompactParentFormat(parentFormatStore())
+  }
+
+  test("the same store with Hadoop .crc files beside its banks gives the same rows") {
+    val dir = parentFormatStore()
+    // rewrite every bank file through Hadoop's local FileSystem, which
+    // writes its .<name>.crc checksum beside each
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    val bankFiles = filesUnder(dir).filter(_.getParent.getFileName.toString == "sketch")
+    assert(bankFiles.length == 16)
+    bankFiles.foreach { f =>
+      val bytes = Files.readAllBytes(f)
+      val out = fs.create(new org.apache.hadoop.fs.Path(f.toString), true)
+      try out.write(bytes) finally out.close()
+    }
+    assert(filesUnder(dir).count(_.toString.endsWith(".crc")) == 16)
+    probeAppendCompactParentFormat(dir)
+  }
+
+  /** A store with one committed increment whose part 0 file `name` is
+    * damaged by `damage`: every probe must fail naming the file. */
+  private def assertDamagedPartFails(name: String)(damage: Array[Byte] => Array[Byte]): Unit = {
+    val dir = ScratchDir("graft-seen-damaged")
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    store.append(spark.range(0, 2000).select(xxhash64(col("id")).as("url_hash")), 0L)
+    val file = java.nio.file.Paths.get(dir, "inc-0", "sketch", name)
+    Files.write(file, damage(Files.readAllBytes(file)))
+    val cand = spark.range(0, 4000).select(xxhash64(col("id")).as("url_hash"))
+    val e = intercept[Exception](store.filterUnseen(cand).result.collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(messages.exists(m => m.contains(file.toString) && m.contains("CRC32C")), messages)
+  }
+
+  test("a flipped byte in a part's .hashes fails the probe, naming the file") {
+    assertDamagedPartFails("p-0.hashes") { b => b(b.length / 2) = (b(b.length / 2) ^ 1).toByte; b }
+  }
+
+  test("a flipped byte in a part's .bloom fails the probe, naming the file") {
+    assertDamagedPartFails("p-0.bloom") { b => b(b.length - 1) = (b(b.length - 1) ^ 0x40).toByte; b }
+  }
+
+  test("a truncated .hashes fails the probe, naming the file") {
+    assertDamagedPartFails("p-0.hashes")(b => java.util.Arrays.copyOf(b, b.length - 8))
   }
 
   test("a store naming a sketch other than bloom fails loudly") {

@@ -3,15 +3,15 @@ package graft.state
 import graft.GraftSession
 import graft.operators.{Crawl, Frontier}
 import graft.sources.PagesGen
+import org.apache.spark.sql.graft.ScratchDir
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 class TableIOSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   test("snapshot commit / read / time travel / counters") {
-    val dir = Files.createTempDirectory("graft-tbl").toString
+    val dir = ScratchDir("graft-tbl")
     val t = s"$dir/t"
     val s0 = TableIO.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t, Map("n" -> 2L))
     assert(s0.id == 0L && s0.rowCount == 2L)
@@ -31,7 +31,7 @@ class TableIOSpec extends AnyFunSuite {
   }
 
   test("timestamp time travel: readAsOf resolves the newest snapshot ≤ ts") {
-    val dir = Files.createTempDirectory("graft-asof").toString
+    val dir = ScratchDir("graft-asof")
     val t = s"$dir/t"
     val s0 = TableIO.commit(Seq((1L, "a")).toDF("k", "v"), t)
     Thread.sleep(5)
@@ -57,7 +57,7 @@ class TableIOSpec extends AnyFunSuite {
     val full = Crawl.crawl(spark, web, seeds, 3, None, None, cfg)
 
     // 2 rounds, then resume 1 round from the snapshot state
-    val dir = Files.createTempDirectory("graft-crawl").toString
+    val dir = ScratchDir("graft-crawl")
     val part1 = Crawl.crawl(spark, web, seeds, 2, None, None, cfg, Some(dir))
     assert(part1.rounds.length == 2)
     val part2 = Crawl.crawl(spark, web, seeds, 1, None, None, cfg, Some(dir))
@@ -82,7 +82,7 @@ class TableIOSpec extends AnyFunSuite {
       .toDF("src_host", "dst_host")
     val expect = Frontier.hostRank(edges, iterations = 4)
       .as[(String, Long)].collect().toMap
-    val dir = Files.createTempDirectory("graft-hr").toString
+    val dir = ScratchDir("graft-hr")
     Frontier.hostRank(edges, iterations = 2, stateDir = Some(dir)).collect()
     assert(TableIO.listSnapshots(s"$dir/hostrank") == Seq(0L, 1L, 2L))
     // rerun with a larger budget: picks up at iteration 2, adds only 3..4
