@@ -21,6 +21,34 @@ object Bench {
   final case class Headline(urlsPerSec: Double, extractMBps: Double,
                             scheduleSec: Double, extractSec: Double, nPages: Long)
 
+  /** Wall seconds of one run of `body`: the one clock every timing the
+    * program prints reads. */
+  def seconds(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The middle of an odd number of samples. This VM's run-to-run variance
+    * is up to 3×, so every repeated timing the program prints is the median
+    * of a fixed number of samples: never a best-of, never retried until it
+    * looks right. */
+  def median(samples: Seq[Double]): Double = {
+    require(samples.size % 2 == 1, s"median needs an odd sample count, got ${samples.size}")
+    samples.sorted.apply(samples.size / 2)
+  }
+
+  /** The median of `n` evaluations of `sample`; an even `n` is rejected
+    * before any sample is drawn. */
+  def median(n: Int)(sample: => Double): Double = {
+    require(n % 2 == 1, s"median needs an odd sample count, got $n")
+    median(Seq.fill(n)(sample))
+  }
+
+  /** The golden WARC fixture of the codec micro-bench, `w01_warc_fixture`
+    * and the codec specs. */
+  val FixtureWarc = "/root/reference/testdata/test.warc.gz"
+
   /** One full-size frontier scheduling round (over a 20×-bigger urls-only
     * frontier — scheduling is a metadata problem) + one extraction sweep
     * (over full pages with html bytes). */
@@ -47,26 +75,17 @@ object Bench {
       graft.state.SeenStore.Config(parts = spark.sparkContext.defaultParallelism))
     store.append(canon.filter(pmod(col("url_hash"), lit(10L)) < 3).select("url_hash"), 0L)
 
-    // this VM's run-to-run variance is up to 3×: take the median of 3
-    // timed passes per phase (first pass additionally pays JIT/codegen)
-    def median3(body: => Unit): Double = {
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        body
-        (System.nanoTime() - t0) / 1e9
-      }
-      times.sorted.apply(1)
-    }
-    // evaluate() (not count()) — the same honest basis as the per-query
-    // timings: count() over the rank filter did evaluate the windows, but
-    // the uniform basis evaluates the output columns too (r5 re-base)
-    val schedSec = median3 {
+    // median of 3 timed passes per phase (the first pass additionally pays
+    // JIT/codegen). evaluate() (not count()) — the same honest basis as the
+    // per-query timings: count() over the rank filter did evaluate the
+    // windows, but the uniform basis evaluates the output columns too
+    val schedSec = median(3)(seconds {
       evaluate(Frontier.schedule(store.filterUnseen(canon).result, None, cfg))
-    }
-    val extractSec = median3 {
+    })
+    val extractSec = median(3)(seconds {
       require(pages.select(http_extract_text(col("html")).as("et"))
         .agg(sum(length(col("et")))).head.getLong(0) > 0)
-    }
+    })
     frontier.unpersist(); pages.unpersist()
     // scrub the throwaway store
     LocalFiles.deleteRec(new java.io.File(seenDir))
@@ -75,82 +94,55 @@ object Bench {
     Headline(nUrls / schedSec, bytesTotal / 1e6 / extractSec, schedSec, extractSec, nPages)
   }
 
+  /** MB/s of the four single-thread WARC codec kernels. */
+  final case class CodecRates(readMBps: Double, writeMBps: Double,
+                              writeZstdMBps: Double, writeLargeMBps: Double)
+
   /** Single-thread micro-benches mirroring the reference's defined bench
-    * shapes (BASELINE.md): read = full-stream parse + per-record SHA-1
-    * block-digest recheck of the golden fixture
-    * (/root/reference/read_test.go:334-376); write = serialize + per-record
-    * gzip member of the same records (/root/reference/client_test.go:1807+).
-    * Returns (read MB/s, write MB/s) over the uncompressed record bytes. */
-  def codecMicro(): (Double, Double) = {
-    val gz = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/testdata/test.warc.gz"))
-    def parseOnce(): Vector[graft.codec.WarcRecord] = {
+    * shapes (BASELINE.md), over the records of one gzipped WARC file:
+    *  - read = full-stream parse + per-record SHA-1 block-digest recheck
+    *    (/root/reference/read_test.go:334-376);
+    *  - write = serialize + per-record gzip member of the same records
+    *    (/root/reference/client_test.go:1807+);
+    *  - write zstd = the same records through a ZSTD member writer, and
+    *    write large = a >2 MB payload (3,095,926 B, the reference's jpg
+    *    size — exceeds the 1 MB spool threshold) through gzip
+    *    (/root/reference/client_test.go:1868-1989).
+    * Rates are over the uncompressed record bytes. The file needs a
+    * `response` record (the large write's headers come from it). */
+  def codecMicro(fixturePath: String): CodecRates = {
+    import graft.codec.{Codecs, WarcCodec, WarcRecord}
+    val gz = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixturePath))
+    def parseOnce(): Vector[WarcRecord] = {
       val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(gz), 1 << 16)
-      try graft.codec.WarcCodec.readAll(in) finally in.close()
+      try WarcCodec.readAll(in) finally in.close()
     }
     val recs = parseOnce()
-    val rawBytes = recs.map(_.content.length.toLong).sum
+    val rawMB = recs.map(_.content.length.toLong).sum / 1e6
     // Methodology (r3 lesson: a 74 MB/s "regression" was an under-warmed
     // 70 ms window, not code — fresh-JVM passes 2-3 measure 92-105):
-    // warm until JIT settles, then take the MEDIAN of 3 windows, each long
-    // enough (n=1500 ≈ 0.4 s read) that scheduler jitter can't dominate.
-    def medianOf3(window: () => Double): Double =
-      Seq(window(), window(), window()).sorted.apply(1)
-    // read = parse + per-record digest recheck, like the reference
-    (1 to 200).foreach(_ => parseOnce().foreach(_.computedBlockDigest))
-    val n = 1500
-    val readSec = medianOf3 { () =>
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < n) {
-        parseOnce().foreach(r => require(r.computedBlockDigest == r.blockDigest))
-        i += 1
+    // `warm` passes until JIT settles, then the MEDIAN of 3 windows of `n`
+    // passes, each long enough (read: n=1500 ≈ 0.4 s) that scheduler
+    // jitter can't dominate
+    def mbPerSec(mbPerPass: Double, warm: Int, n: Int)(pass: => Unit): Double = {
+      (1 to warm).foreach(_ => pass)
+      mbPerPass * n / median(3)(seconds((1 to n).foreach(_ => pass)))
+    }
+    val read = mbPerSec(rawMB, 200, 1500) {
+      parseOnce().foreach(r => require(r.computedBlockDigest == r.blockDigest))
+    }
+    // fresh gzip member per record
+    val write = mbPerSec(rawMB, 100, 600) {
+      recs.foreach { r =>
+        val bos = new java.io.ByteArrayOutputStream()
+        val g = new java.util.zip.GZIPOutputStream(bos)
+        g.write(WarcCodec.serialize(r)); g.close()
       }
-      (System.nanoTime() - t0) / 1e9
     }
-    // write = serialize + fresh gzip member per record
-    def writeAll(): Unit = recs.foreach { r =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      g.write(graft.codec.WarcCodec.serialize(r)); g.close()
-    }
-    (1 to 100).foreach(_ => writeAll())
-    val wn = 600
-    val writeSec = medianOf3 { () =>
-      val t1 = System.nanoTime()
-      var i = 0
-      while (i < wn) { writeAll(); i += 1 }
-      (System.nanoTime() - t1) / 1e9
-    }
-    (rawBytes * n / 1e6 / readSec, rawBytes * wn / 1e6 / writeSec)
-  }
-
-  /** The reference's OTHER two defined write benches
-    * (/root/reference/client_test.go:1868-1989): same records through a
-    * ZSTD member writer, and a >2 MB payload (3,095,926 B, the reference's
-    * jpg size — exceeds the 1 MB spool threshold) through gzip. Returns
-    * (zstd small MB/s, gzip large MB/s). */
-  def codecMicroExtra(): (Double, Double) = {
-    val gz = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/testdata/test.warc.gz"))
-    val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(gz), 1 << 16)
-    val recs = try graft.codec.WarcCodec.readAll(in) finally in.close()
-    val rawBytes = recs.map(_.content.length.toLong).sum
-    def medianOf3(window: () => Double): Double =
-      Seq(window(), window(), window()).sorted.apply(1)
-    def writeAllZstd(): Unit = {
-      val bos = new java.io.ByteArrayOutputStream(64 << 10)
-      val w = graft.codec.Codecs.memberWriter(bos, graft.codec.Codecs.ZstdCompression())
-      recs.foreach(r => w.writeMember(graft.codec.WarcCodec.serialize(r)))
+    val writeZstd = mbPerSec(rawMB, 100, 600) {
+      val w = Codecs.memberWriter(new java.io.ByteArrayOutputStream(64 << 10), Codecs.ZstdCompression())
+      recs.foreach(r => w.writeMember(WarcCodec.serialize(r)))
       w.close()
-    }
-    (1 to 100).foreach(_ => writeAllZstd())
-    val zn = 600
-    val zstdSec = medianOf3 { () =>
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < zn) { writeAllZstd(); i += 1 }
-      (System.nanoTime() - t0) / 1e9
     }
     // >2 MB payload: deterministic bytes, moderate compressibility
     val big = new Array[Byte](3095926)
@@ -164,21 +156,12 @@ object Bench {
     val base = recs.find(_.warcType == "response").get
     val bigRec = base.copy(content = big,
       headers = base.headers + ("Content-Length" -> big.length.toString))
-    def writeBig(): Unit = {
-      val bos = new java.io.ByteArrayOutputStream(1 << 20)
-      val w = graft.codec.Codecs.memberWriter(bos, graft.codec.Codecs.GzipCompression)
-      w.writeMember(graft.codec.WarcCodec.serialize(bigRec))
+    val writeLarge = mbPerSec(big.length / 1e6, 10, 25) {
+      val w = Codecs.memberWriter(new java.io.ByteArrayOutputStream(1 << 20), Codecs.GzipCompression)
+      w.writeMember(WarcCodec.serialize(bigRec))
       w.close()
     }
-    (1 to 10).foreach(_ => writeBig())
-    val bn = 25
-    val bigSec = medianOf3 { () =>
-      val t0 = System.nanoTime()
-      var j = 0
-      while (j < bn) { writeBig(); j += 1 }
-      (System.nanoTime() - t0) / 1e9
-    }
-    (rawBytes * zn / 1e6 / zstdSec, big.length.toLong * bn / 1e6 / bigSec)
+    CodecRates(read, write, writeZstd, writeLarge)
   }
 
   /** Fixed-work CPU canary: Mops/s of a 64-bit xorshift step on one thread,
@@ -210,22 +193,11 @@ object Bench {
     // fixed-work canary by >50% between single 0.2 s windows (measured
     // 284 vs 440 Mops minutes apart), so one window reports a moment, not
     // the typical state of the run it rides with
-    def median3(body: => Double): Double =
-      Seq(body, body, body).sorted.apply(1)
-    val single = median3 {
-      val t0 = System.nanoTime()
-      require(mix(N, 43L) != 0L)
-      N / ((System.nanoTime() - t0) / 1e9) / 1e6
-    }
-    val allcore = median3 {
+    def mops(seed: Long): Double = N / seconds(require(mix(N, seed) != 0L)) / 1e6
+    val single = median(3)(mops(43L))
+    val allcore = median(3) {
       val perThread = new Array[Double](cores)
-      val threads = (0 until cores).map { i =>
-        new Thread(() => {
-          val t = System.nanoTime()
-          require(mix(N, 100L + i) != 0L)
-          perThread(i) = N / ((System.nanoTime() - t) / 1e9) / 1e6
-        })
-      }
+      val threads = (0 until cores).map(i => new Thread(() => perThread(i) = mops(100L + i)))
       threads.foreach(_.start())
       threads.foreach(_.join())
       perThread.sum / cores
@@ -248,14 +220,19 @@ object Bench {
                   queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
       : Seq[(String, Double, Option[String])] =
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val err = try { evaluate(fn(spark, sfDir)); None } catch {
-        case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
+      var err: Option[String] = None
+      val sec = seconds {
+        try evaluate(fn(spark, sfDir)) catch {
+          case e: Throwable =>
+            err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
+        }
       }
-      (name, (System.nanoTime() - t0) / 1e9, err)
+      (name, sec, err)
     }
 
+  /** A JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in an error message or the oracle SQL would
+    * otherwise make a reader's json.load fail. */
   def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -266,10 +243,26 @@ object Bench {
     case c => c.toString
   } + "\""
 
+  /** `{"name":seconds,...}` for every timed query. */
+  private def queriesJson(results: Seq[(String, Double, Option[String])]): String =
+    results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+
   /** `{"name":"msg",...}` for the failed queries — empty on a healthy run. */
   def errorsJson(results: Seq[(String, Double, Option[String])]): String =
     results.collect { case (k, _, Some(m)) => s"${jsonStr(k)}:${jsonStr(m)}" }
       .mkString("{", ",", "}")
+
+  /** One untimed pass of `queries` on the smallest tier (touches every
+    * table and codegen path; failures surface in the timed pass, where they
+    * are recorded per query), then the timed pass on `sfDir`. */
+  private def warmThenTime(spark: SparkSession, sfDir: String,
+                           queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
+      : Seq[(String, Double, Option[String])] = {
+    queries.foreach { case (_, fn) =>
+      try evaluate(fn(spark, "/root/testdata/sf0.001")) catch { case _: Throwable => }
+    }
+    timeQueries(spark, sfDir, queries)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -279,67 +272,30 @@ object Bench {
     // micros (their numbers would not be comparable to a full run anyway)
     val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty)
-    // Profiling hook (like SPARK_GRAFT_EVENTLOG): SPARK_GRAFT_STACKDUMP_SEC=N
-    // dumps every thread's stack to stderr every N seconds. local[*] runs
-    // executors in THIS JVM, so this sees task threads directly — the
-    // ground-truth lock finder on a box where jstack cannot attach.
-    sys.env.get("SPARK_GRAFT_STACKDUMP_SEC").map(_.toInt).foreach { sec =>
-      val t = new Thread(() => {
-        while (true) {
-          Thread.sleep(sec * 1000L)
-          val all = Thread.getAllStackTraces
-          System.err.println(s"==== stack dump @${System.currentTimeMillis()} ====")
-          all.forEach { (th, st) =>
-            if (th.getName.contains("Executor task launch")) {
-              System.err.println(s"-- ${th.getName} state=${th.getState}")
-              st.take(12).foreach(f => System.err.println(s"   at $f"))
-            }
-          }
-        }
-      })
-      t.setDaemon(true)
-      t.start()
-    }
     val spark = GraftSession.local(cpus)
 
+    // host-state canary first, on a quiet JVM (before any Spark work):
+    // fixed integer work, so it prices THIS machine, not the engine. It
+    // rides every spot board too: a spot re-run is only comparable to the
+    // full board it is checked against modulo this host's shading
+    val (canSingle, canAll) = cpuCanary(cpus)
+
     if (only.nonEmpty) {
-      // canary rides every spot board too: a spot re-run is only comparable
-      // to the full board it is checked against modulo this host's shading
-      val (spotCanSingle, spotCanAll) = cpuCanary(cpus)
-      val qs = SparkEntry.queries.filter { case (k, _) => only(k) }
-      qs.foreach { case (_, fn) =>
-        try evaluate(fn(spark, "/root/testdata/sf0.001")) catch { case _: Throwable => }
-      }
-      val results = timeQueries(spark, sfDir, qs)
-      val qj = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-      println(f"""{"metric":"graft_spot","queries":$qj,"errors":${errorsJson(results)},"sf":"$sfDir","cores":$cpus,"canary_single_mops":$spotCanSingle%.1f,"canary_allcore_mops":$spotCanAll%.1f}""")
+      val results = warmThenTime(spark, sfDir, SparkEntry.queries.filter { case (k, _) => only(k) })
+      println(f"""{"metric":"graft_spot","queries":${queriesJson(results)},"errors":${errorsJson(results)},"sf":"$sfDir","cores":$cpus,"canary_single_mops":$canSingle%.1f,"canary_allcore_mops":$canAll%.1f}""")
       spark.stop()
       return
     }
 
-    // host-state canary first, on a quiet JVM (before any Spark work):
-    // fixed integer work, so it prices THIS machine, not the engine
-    val (canSingle, canAll) = cpuCanary(cpus)
-
     // single-thread codec micro first: it must not time GC pauses left
     // behind by the multi-GB headline phase
-    val (readMBps, writeMBps) = codecMicro()
-    val (writeZstdMBps, writeLargeMBps) = codecMicroExtra()
-
-    // warmup: touch every table + codegen paths once (failures surface in
-    // the timed pass below, where they are recorded per query)
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try evaluate(fn(spark, "/root/testdata/sf0.001")) catch { case _: Throwable => }
-    }
-
-    val results = timeQueries(spark, sfDir, SparkEntry.queries)
+    val c = codecMicro(FixtureWarc)
+    val results = warmThenTime(spark, sfDir, SparkEntry.queries)
     val h = headline(spark, nPages)
 
-    val qs = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val errs = errorsJson(results)
     val total = results.map(_._2).sum + h.scheduleSec + h.extractSec
     println(
-      f"""{"metric":"graft_round_total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs%s,"sf":"$sfDir","cores":$cpus,"frontier_urls_per_sec":${h.urlsPerSec}%.0f,"extract_mb_per_sec":${h.extractMBps}%.1f,"headline_pages":${h.nPages},"schedule_sec":${h.scheduleSec}%.3f,"extract_sec":${h.extractSec}%.3f,"warc_read_mb_per_sec":$readMBps%.1f,"warc_write_mb_per_sec":$writeMBps%.1f,"warc_write_zstd_mb_per_sec":$writeZstdMBps%.1f,"warc_write_large_mb_per_sec":$writeLargeMBps%.1f,"canary_single_mops":$canSingle%.1f,"canary_allcore_mops":$canAll%.1f,"canary_allcore_ratio":${canAll / canSingle}%.3f}""")
+      f"""{"metric":"graft_round_total","value":$total%.3f,"unit":"sec","queries":${queriesJson(results)},"errors":${errorsJson(results)}%s,"sf":"$sfDir","cores":$cpus,"frontier_urls_per_sec":${h.urlsPerSec}%.0f,"extract_mb_per_sec":${h.extractMBps}%.1f,"headline_pages":${h.nPages},"schedule_sec":${h.scheduleSec}%.3f,"extract_sec":${h.extractSec}%.3f,"warc_read_mb_per_sec":${c.readMBps}%.1f,"warc_write_mb_per_sec":${c.writeMBps}%.1f,"warc_write_zstd_mb_per_sec":${c.writeZstdMBps}%.1f,"warc_write_large_mb_per_sec":${c.writeLargeMBps}%.1f,"canary_single_mops":$canSingle%.1f,"canary_allcore_mops":$canAll%.1f,"canary_allcore_ratio":${canAll / canSingle}%.3f}""")
     spark.stop()
   }
 }

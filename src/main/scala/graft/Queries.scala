@@ -1187,8 +1187,7 @@ object Queries {
     // --- WARC codec + byte-identical extraction ---------------------------
     "w01_warc_fixture" -> ((s, dir) => {
       import s.implicits._
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.FileInputStream("/root/reference/testdata/test.warc.gz"))
+      val in = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(Bench.FixtureWarc))
       val recs = try graft.codec.WarcCodec.readAll(in) finally in.close()
       recs.map(r => (r.warcType, r.contentLength,
           r.blockDigest == r.computedBlockDigest))

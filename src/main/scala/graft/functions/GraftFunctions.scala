@@ -790,13 +790,6 @@ object GraftFunctions {
   private def col(e: Expression): Column = Bridge.column(e)
   private def expr(c: Column): Expression = Bridge.expression(c)
 
-  /** Dynamic-shift variants (the functions API only exposes Int shift
-    * amounts; the catalyst expressions accept any child). */
-  def shiftright_dyn(c: Column, bits: Column): Column =
-    col(org.apache.spark.sql.catalyst.expressions.ShiftRight(expr(c), expr(bits)))
-  def shiftleft_dyn(c: Column, bits: Column): Column =
-    col(org.apache.spark.sql.catalyst.expressions.ShiftLeft(expr(c), expr(bits)))
-
   def url_normalize(c: Column): Column = col(UrlNormalize(expr(c)))
   def url_host(c: Column): Column = col(UrlHost(expr(c)))
   def url_is_valid(c: Column): Column = col(UrlIsValid(expr(c)))

@@ -149,8 +149,6 @@ object Crawl {
       politeness: Option[DataFrame] = None,
       cfg: Frontier.Config = Frontier.Config(),
       stateDir: Option[String] = None,
-      warcDir: Option[String] = None,
-      cdx: Option[DataFrame] = None,
       digestIndex: Option[DigestIndex.Ref] = None): CrawlResult = {
     import spark.implicits._
 
@@ -204,20 +202,15 @@ object Crawl {
         else {
           // cross-round digest dedup: the bucketed index accumulates every
           // prior round's first-captures (the reference's crawl-lifetime
-          // dedupe map); a static CDX (a real remote archive) unions in
-          // with an index configured, round 0 (nothing appended yet) still
-          // runs the SAME dedup-with-cdx plan over an empty frame, so every
-          // round's output schema is identical (the accumulator unions them).
+          // dedupe map); with an index configured, round 0 (nothing appended
+          // yet) still runs the SAME dedup-with-cdx plan over an empty frame,
+          // so every round's output schema is identical (the accumulator
+          // unions them).
           // Only rounds before r: a crash-replayed round must not find its
           // own earlier captures, which its append below has yet to wipe
-          val idxCdx = digestIndex.map(ix =>
+          val cdx = digestIndex.map(ix =>
             DigestIndex.cdx(spark, ix, before = Some(r.toLong)).getOrElse(DigestIndex.emptyCdx(spark)))
-          val roundCdx = (cdx, idxCdx) match {
-            case (Some(c), Some(idx)) => Some(c.unionByName(idx))
-            case (c, idx) => c.orElse(idx)
-          }
-          val out = round(frontier, web, robots, politeness, cfg,
-            seenStore = Some(store), cdx = roundCdx)
+          val out = round(frontier, web, robots, politeness, cfg, seenStore = Some(store), cdx = cdx)
           // Pin this round's rows BEFORE release() so the round cache can be
           // dropped below. Durable (stateDir set): TableIO snapshot keyed by
           // round — survives executor loss and feeds resume; committed FIRST
@@ -239,10 +232,6 @@ object Crawl {
           // holds this round's own captures — every capture would turn into
           // a CDX revisit and its links would never be followed
           val nextFrontier = links(roundFetched).unionByName(out.deferred)
-          // optional archival sink: the round's captures as rotated WARC
-          // (responses + truncated revisit records, K3 semantics)
-          warcDir.foreach(d =>
-            graft.sources.WarcIO.writeFetched(roundFetched, s"$d/round-$r"))
           allFetched = allFetched match {
             case None => Some(roundFetched)
             case Some(prev) =>

@@ -291,13 +291,6 @@ object Dedup {
         i => concat_ws(" ", slice(words, i + 1, lit(k)))),
       s => length(s) > 0)
 
-  /** Word k-shingles of a text column, lowercase (trim first so
-    * tokenization matches the Hashing kernel's empty-token filtering).
-    * Convenience form — for hot paths, materialize `ngramTokens` below
-    * and use [[shinglesFrom]]. */
-  def shingles(c: Column, k: Int): Column =
-    shinglesFrom(split(trim(lower(c)), "\\s+"), k)
-
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
     * and hash each band → (band_id, bucket) candidate keys. */
   def lshBands(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
@@ -752,10 +745,7 @@ object Dedup {
       // the one action of the round: fully materializes the cache (count
       // scans every partition — isEmpty would stop at the first hit and
       // leave the cache partial) AND answers "did anything move?"
-      val t0dbg = System.nanoTime()
       converged = jumped.filter(col("changed")).count() == 0L
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        println(f"CCITER $i ${(System.nanoTime() - t0dbg) / 1e9}%.2f s converged=$converged")
       stepped.unpersist()
       prev.foreach(_.unpersist())
       prev = Some(jumped)

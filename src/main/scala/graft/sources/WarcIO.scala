@@ -27,9 +27,6 @@ import java.time.Instant
   */
 object WarcIO {
 
-  final case class PageWarc(url: String, warc_ts: java.sql.Timestamp,
-                            html: Array[Byte], text: String, lang: String)
-
   /** Serialize one page as a response record with reference-default
     * headers; deterministic given the row. The payload digest is computed
     * over the *decoded* body (chunked-decode → gunzip), matching the

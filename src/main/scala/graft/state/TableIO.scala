@@ -48,11 +48,15 @@ object TableIO {
   def listSnapshots(table: String): Seq[Long] = {
     val dir = manifestDir(table)
     if (!Files.exists(dir)) Seq.empty
-    else Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong)
-      .toSeq.sorted
+    else {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala
+        .map(_.getFileName.toString)
+        .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
+        .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong)
+        .toList.sorted
+      finally ls.close()
+    }
   }
 
   def latestSnapshotId(table: String): Option[Long] = listSnapshots(table).lastOption
@@ -82,7 +86,8 @@ object TableIO {
     val dir = Paths.get(dataDir)
     if (!Files.exists(dir)) return Map.empty
     val conf = new org.apache.hadoop.conf.Configuration()
-    Files.list(dir).iterator().asScala
+    val ls = Files.list(dir)
+    try ls.iterator().asScala
       .map(_.getFileName.toString)
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
       .map { n =>
@@ -91,6 +96,7 @@ object TableIO {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try n -> r.getRecordCount finally r.close()
       }.toMap
+    finally ls.close()
   }
 
   /** Write `df` as the next snapshot of `table`; returns the committed

@@ -48,9 +48,8 @@ object BpeGen {
       val spark = graft.GraftSession.local(
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val t0 = System.nanoTime()
-      val merges = Bpe.trainDistributed(docs, n)
-      val sec = (System.nanoTime() - t0) / 1e9
+      lazy val merges = Bpe.trainDistributed(docs, n)
+      val sec = graft.Bench.seconds(merges)
       val digest = java.security.MessageDigest.getInstance("SHA-256")
         .digest(render(merges).getBytes("UTF-8"))
         .take(8).map("%02x".format(_)).mkString

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{Bench, GraftSession}
 import graft.operators.{Crawl, Frontier}
 import graft.sources.PagesGen
 
@@ -92,25 +92,24 @@ object CrawlTool {
     val stateDir = args.lift(4)
     val spark = GraftSession.local(cores)
     val nHosts = 100
-    val t0 = System.nanoTime()
-    val web = Crawl.asWeb(PagesGen.pages(spark, n, nHosts, 42L).toDF()).cache()
-    web.count() // materialize the web before timing the crawl
-    val t1 = System.nanoTime()
+    // lazy: built inside the timed block; materialized before the crawl is timed
+    lazy val web = Crawl.asWeb(PagesGen.pages(spark, n, nHosts, 42L).toDF()).cache()
+    val webSec = Bench.seconds(web.count())
     val politeness = {
       import spark.implicits._
       (0 until nHosts).map(h => (s"host$h.example", 1 + h % 8)).toDF("host", "budget")
     }
-    val res = Crawl.crawl(spark, web, PagesGen.seeds(n, nSeeds, nHosts, 42L), rounds,
+    // lazy, like `web`: it runs inside the timed block
+    lazy val res = Crawl.crawl(spark, web, PagesGen.seeds(n, nSeeds, nHosts, 42L), rounds,
       robots = None, politeness = Some(politeness),
       cfg = Frontier.Config(defaultBudget = 4, saltBuckets = 16),
       stateDir = stateDir)
-    val t2 = System.nanoTime()
+    val secs = Bench.seconds(res)
     res.rounds.zipWithIndex.foreach { case (c, i) =>
       println(s"round $i: " + c.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" "))
     }
     val scheduled = res.rounds.map(_.getOrElse("fetched", 0L)).sum
-    val secs = (t2 - t1) / 1e9
-    println(f"web_build_sec=${(t1 - t0) / 1e9}%.2f crawl_sec=$secs%.2f urls_fetched=$scheduled urls_per_sec=${scheduled / secs}%.0f")
+    println(f"web_build_sec=$webSec%.2f crawl_sec=$secs%.2f urls_fetched=$scheduled urls_per_sec=${scheduled / secs}%.0f")
     spark.stop()
   }
 }

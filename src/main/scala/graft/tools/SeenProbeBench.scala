@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{Bench, GraftSession}
 import org.apache.spark.sql.functions._
 
 /** Probe-cost-vs-crawl-rounds evidence for SeenStore compaction: two
@@ -26,13 +26,8 @@ object SeenProbeBench {
     cand.count()
 
     def timeProbe(store: graft.state.SeenStore.Store, label: String): Double = {
-      // median of 3 passes (this VM's run-to-run variance is large)
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        store.filterUnseen(cand).result.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val med = times.sorted.apply(1)
+      val times = Seq.fill(3)(Bench.seconds(store.filterUnseen(cand).result.count()))
+      val med = Bench.median(times)
       val banks = store.probeBanks(store.committedIds).length
       println(f"PROBE $label banks=$banks median=$med%.2f s (${nCand / med / 1000}%.0f k urls/s) all=${times.map(t => f"$t%.2f").mkString(",")}")
       med

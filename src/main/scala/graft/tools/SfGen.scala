@@ -213,8 +213,10 @@ object SfGen {
   private def writeOne(df: DataFrame, out: String, name: String): Unit = {
     val tmp = s"$out/.tmp_$name"
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val partFile = Files.list(Paths.get(tmp)).toArray.map(_.toString)
+    val ls = Files.list(Paths.get(tmp))
+    val partFile = try ls.toArray.map(_.toString)
       .find(p => p.endsWith(".parquet") && p.contains("part-")).get
+    finally ls.close()
     Files.move(Paths.get(partFile), Paths.get(s"$out/$name.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     // scrub the Spark part-dir

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ScratchDir
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bench-harness integrity: a query that crashes at bench time must be
@@ -41,7 +42,7 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("table loader floor: single-row-group tables spread across cores, pushdown survives") {
-    val dir = java.nio.file.Files.createTempDirectory("floor").toString
+    val dir = ScratchDir("graft-bench-floor")
     // one coalesced file >= floorMinBytes: the layout that serializes scans
     spark.range(0, 400000).select(col("id").as("doc_id"),
       concat(lit("x" * 64), col("id")).as("text"))
@@ -74,7 +75,7 @@ class BenchSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
 
   test("table loader re-measures a table rewritten at the same path") {
-    val dir = java.nio.file.Files.createTempDirectory("rewrite").toString
+    val dir = ScratchDir("graft-bench-rewrite")
     val rows = spark.range(0, 400000).select(col("id").as("doc_id"),
       concat(lit("x" * 64), col("id")).as("text"))
     rows.coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -90,7 +91,7 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("table loader infers a schema once per table version") {
-    val dir = java.nio.file.Files.createTempDirectory("schema").toString
+    val dir = ScratchDir("graft-bench-schema")
     val path = s"$dir/orders.parquet"
     spark.range(0, 100).select(col("id").as("o_id")).coalesce(1).write.parquet(path)
     assert(Queries.tExch(spark, dir, "orders").columns.toSeq == Seq("o_id"))
@@ -113,10 +114,37 @@ class BenchSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "64MB")
-      val dir = java.nio.file.Files.createTempDirectory("units").toString
+      val dir = ScratchDir("graft-bench-units")
       spark.range(0, 1000).select(col("id").as("doc_id")).coalesce(1)
         .write.parquet(s"$dir/documents.parquet")
       assert(Queries.t(spark, dir, "documents").count() == 1000)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  }
+
+  test("median evaluates its sample exactly n times and returns the middle value") {
+    val draws = Iterator(5.0, 1.0, 4.0, 2.0, 3.0)
+    var calls = 0
+    assert(Bench.median(5) { calls += 1; draws.next() } == 3.0)
+    assert(calls == 5)
+    assert(Bench.median(1)(7.0) == 7.0)
+    assert(Bench.median(Seq(9.0, 8.0, 1.0)) == 8.0)
+  }
+
+  test("median rejects an even sample count") {
+    var calls = 0
+    intercept[IllegalArgumentException](Bench.median(4) { calls += 1; 1.0 })
+    intercept[IllegalArgumentException](Bench.median(Seq.empty[Double]))
+    assert(calls == 0, "an even count must be rejected before any sample is drawn")
+  }
+
+  test("codecMicro times the four WARC codec kernels over a written WARC") {
+    val dir = ScratchDir("graft-bench-codec")
+    graft.sources.WarcIO.writePages(graft.sources.PagesGen.pages(spark, 20, 4, 42L).toDF().coalesce(1), dir)
+    val warc = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".warc.gz"))
+    assert(warc.length == 1)
+    val r = Bench.codecMicro(warc.head.getPath)
+    for ((k, v) <- Seq("read" -> r.readMBps, "write" -> r.writeMBps,
+        "write_zstd" -> r.writeZstdMBps, "write_large" -> r.writeLargeMBps))
+      assert(v > 0 && !v.isInfinite, s"$k: $v MB/s")
   }
 }

@@ -28,7 +28,7 @@ class DigestsSpec extends AnyFunSuite {
 }
 
 class WarcCodecSpec extends AnyFunSuite {
-  private val fixture = "/root/reference/testdata/test.warc.gz"
+  private val fixture = graft.Bench.FixtureWarc
 
   private def readFixture(): Vector[WarcRecord] = {
     val in = new java.util.zip.GZIPInputStream(

@@ -99,7 +99,7 @@ class CodecsSpec extends AnyFunSuite {
 
   test("reference fixture still parses through the sniffing open path") {
     val in = Codecs.sniffStream(new java.io.BufferedInputStream(
-      new java.io.FileInputStream("/root/reference/testdata/test.warc.gz")))
+      new java.io.FileInputStream(graft.Bench.FixtureWarc)))
     val recs = WarcCodec.readAll(in)
     assert(recs.size == 3)
     assert(recs.forall(r => r.blockDigest == r.computedBlockDigest))

@@ -2,6 +2,7 @@ package graft.codec
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.graft.ScratchDir
 
 /** The spooled >heap record path: SpooledPayload spill semantics
   * (reference pkg/spooledtempfile/spooled.go), the spooled record scan
@@ -28,7 +29,7 @@ class SpoolSpec extends AnyFunSuite {
   }
 
   test("payload past the threshold spills to disk; roundtrip exact; close deletes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-spool-test")
+    val dir = java.nio.file.Paths.get(ScratchDir("graft-spool-test"))
     val p = new SpooledPayload(4096, Some(dir))
     val data = bytes(100000)
     // write in odd-sized slices to exercise the spill boundary
@@ -60,7 +61,7 @@ class SpoolSpec extends AnyFunSuite {
 
   test("spooled scan of the golden fixture matches the array scan") {
     def openFixture() = new java.util.zip.GZIPInputStream(
-      new java.io.FileInputStream("/root/reference/testdata/test.warc.gz"), 1 << 16)
+      new java.io.FileInputStream(graft.Bench.FixtureWarc), 1 << 16)
     val in1 = openFixture()
     val arr = try WarcCodec.readAll(in1) finally in1.close()
     val in2 = new java.io.BufferedInputStream(openFixture(), 1 << 16)

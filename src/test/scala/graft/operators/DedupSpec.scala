@@ -3,6 +3,7 @@ package graft.operators
 import graft.GraftSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.graft.ScratchDir
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
@@ -227,7 +228,7 @@ class DedupSpec extends AnyFunSuite {
     val chain = (1 until 12).map(i => (i.toLong, (i + 1).toLong))
     val pairs = (chain ++ Seq((40L, 41L))).toDF("id_a", "id_b")
     val expect = Dedup.duplicateClusters(pairs).as[(Long, Long)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc").toString
+    val dir = ScratchDir("graft-cc")
     // phase 1: one iteration only, committed as durable snapshots
     Dedup.duplicateClusters(pairs, maxIters = 1, stateDir = Some(dir)).collect()
     assert(graft.state.TableIO.listSnapshots(s"$dir/cc_comp") == Seq(0L, 1L))
@@ -246,7 +247,7 @@ class DedupSpec extends AnyFunSuite {
   test("duplicate clusters durable state: fingerprinted resume rejects a stale dir") {
     import spark.implicits._
     val pairs = (1 until 8).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-fp").toString
+    val dir = ScratchDir("graft-cc-fp")
     // callers fingerprint a CHEAP upstream (here: the pairs themselves —
     // in production, the source docs the LSH plan derives from)
     val fp = graft.state.Durable.fingerprint(pairs)

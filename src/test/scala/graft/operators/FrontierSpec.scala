@@ -6,6 +6,7 @@ import graft.sources.{Page, PagesGen}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.graft.ScratchDir
 
 /** Single-threaded reference simulation of the crawl round semantics
   * (FIXTURES.md §2): the distributed pipeline must match its scheduled set,
@@ -193,7 +194,7 @@ class FrontierSpec extends AnyFunSuite {
   }
 
   test("SeenStore.filterUnseen equals exact anti-join (partitioned sketches, P>1)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-seen").toString
+    val dir = ScratchDir("graft-seen")
     val store = graft.state.SeenStore(dir, graft.state.SeenStore.Config(parts = 7))
     val canon = Frontier.canonicalize(pagesDf)
       .select("url_norm", "url_hash").limit(2000).cache()
@@ -258,7 +259,7 @@ class FrontierSpec extends AnyFunSuite {
 
   /** Runs `body` over an empty SeenStore in a temp dir, deleted after. */
   private def withSeenStore(body: graft.state.SeenStore.Store => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-round-seen")
+    val dir = java.nio.file.Paths.get(ScratchDir("graft-round-seen"))
     try body(graft.state.SeenStore(dir.toString, graft.state.SeenStore.Config(cfg.seenParts)))
     finally graft.LocalFiles.deleteRec(dir.toFile)
   }
@@ -364,7 +365,7 @@ class FrontierSpec extends AnyFunSuite {
   }
 
   test("hostRank durable resume: different edges fail loudly, same edges resume") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hr-fp").toString
+    val dir = ScratchDir("graft-hr-fp")
     val edges1 = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src_host", "dst_host")
     val r1 = Frontier.hostRank(edges1, iterations = 2, stateDir = Some(dir))
       .as[(String, Long)].collect().toMap
@@ -438,7 +439,7 @@ class FrontierSpec extends AnyFunSuite {
   }
 
   test("crawl with durable state: flat cache profile + bounded seen-probe chain over 10 rounds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-crawl-mem").toString
+    val dir = ScratchDir("graft-crawl-mem")
     val sc = spark.sparkContext
     web.count() // materialize the suite fixture's cache BEFORE the baseline
     val before = sc.getPersistentRDDs.keySet
@@ -490,12 +491,12 @@ class FrontierSpec extends AnyFunSuite {
     val didxCfg = cfg.copy(sizeThreshold = 100)
     for (stateDir <- Seq(false, true)) {
       def dir(tag: String) =
-        if (stateDir) Some(java.nio.file.Files.createTempDirectory(s"graft-didx-$tag").toString)
+        if (stateDir) Some(ScratchDir(s"graft-didx-$tag"))
         else None
       val plain = Crawl.crawl(spark, distinctWeb, seeds100, 4, None, None, didxCfg,
         stateDir = dir("plain"))
       val ref = graft.state.DigestIndex.Ref(s"graft_test_crawl_didx_$stateDir",
-        java.nio.file.Files.createTempDirectory("graft-didx-table").toString + "/idx")
+        ScratchDir("graft-didx-table") + "/idx")
       graft.state.DigestIndex.drop(spark, ref)
       try {
         val indexed = Crawl.crawl(spark, distinctWeb, seeds100, 4, None, None, didxCfg,
@@ -520,7 +521,7 @@ class FrontierSpec extends AnyFunSuite {
       .cache()
     val seeds100 = PagesGen.seeds(N, 60, 100, 42L)
     val didxCfg = cfg.copy(sizeThreshold = 100)
-    val dir = org.apache.spark.sql.graft.ScratchDir("graft-crash-replay")
+    val dir = ScratchDir("graft-crash-replay")
     val ref = if (!indexed) None
       else Some(graft.state.DigestIndex.Ref("graft_test_crash_replay_didx", s"$dir/idx"))
     ref.foreach(graft.state.DigestIndex.drop(spark, _))
@@ -574,7 +575,7 @@ class FrontierSpec extends AnyFunSuite {
     val compactCfg = cfg.copy(seenCompactEvery = 1)
     val mem = Crawl.crawl(spark, web, seeds, 5, Some(robotsDf), Some(politenessDf), compactCfg)
     assert(seenDirs == before, "a returning crawl must delete its temp seen store")
-    val dir = java.nio.file.Files.createTempDirectory("graft-crawl-vs-mem").toString
+    val dir = ScratchDir("graft-crawl-vs-mem")
     val durable = Crawl.crawl(spark, web, seeds, 5, Some(robotsDf), Some(politenessDf),
       compactCfg, Some(dir))
     assert(mem.rounds.length >= 4, s"web must sustain 4 rounds, got ${mem.rounds.length}")
@@ -661,7 +662,7 @@ class FrontierSpec extends AnyFunSuite {
         timestamp_millis(lit(base) + col("id") * 1000).as("warc_ts"))
     val canon = Frontier.canonicalize(urls)
       .select("url_norm", "host", "url_hash", "depth", "warc_ts")
-    val seenDir = java.nio.file.Files.createTempDirectory("graft-hot-seen").toString
+    val seenDir = ScratchDir("graft-hot-seen")
     val store = graft.state.SeenStore(seenDir, graft.state.SeenStore.Config(parts = 8))
     store.append(canon.filter(pmod(col("url_hash"), lit(3L)) === 0).select("url_hash"), 0L)
     val allowed = store.filterUnseen(canon).result

@@ -5,13 +5,14 @@ import graft.functions.GraftFunctions._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import org.apache.spark.sql.graft.ScratchDir
 
 class WarcIOSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   test("pages → rotated .warc.gz → parse back: byte-identical roundtrip") {
-    val dir = Files.createTempDirectory("graft-warc").toString
+    val dir = ScratchDir("graft-warc")
     val pages = PagesGen.pages(spark, 500, 10, 42L).toDF().repartition(3)
     val nFiles = WarcIO.writePages(pages, dir, recordsPerFile = 100)
     assert(nFiles >= 3, s"expected rotation across tasks, got $nFiles files")
@@ -38,7 +39,7 @@ class WarcIOSpec extends AnyFunSuite {
 
   test("crawl round → WARC: revisits written as truncated refers-to records") {
     import graft.operators.{Crawl, Frontier}
-    val dir = Files.createTempDirectory("graft-warc3").toString
+    val dir = ScratchDir("graft-warc3")
     // low dedupe threshold so the generator's dup-body clusters revisit
     val cfg = Frontier.Config(defaultBudget = 1000, sizeThreshold = 100)
     val pages = PagesGen.pages(spark, 2000, 10, 42L).toDF()
@@ -103,7 +104,7 @@ class WarcIOSpec extends AnyFunSuite {
   test("zstd compression: end-to-end write + sniffing read, ± dictionary") {
     import graft.codec.Codecs
     for (dict <- Seq(None, Some(("payload doc example " * 300).getBytes("UTF-8")))) {
-      val dir = Files.createTempDirectory("graft-zstd").toString
+      val dir = ScratchDir("graft-zstd")
       val pages = PagesGen.pages(spark, 200, 10, 42L).toDF().repartition(2)
       val n = WarcIO.writePages(pages, dir, recordsPerFile = 60,
         compression = Codecs.ZstdCompression(dict))
@@ -116,7 +117,7 @@ class WarcIOSpec extends AnyFunSuite {
   }
 
   test("size-based rotation caps compressed file size") {
-    val dir = Files.createTempDirectory("graft-rot").toString
+    val dir = ScratchDir("graft-rot")
     val pages = PagesGen.pages(spark, 400, 10, 42L).toDF().coalesce(1)
     WarcIO.writePages(pages, dir, recordsPerFile = Int.MaxValue, maxFileBytes = 64 * 1024)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".warc.gz"))
@@ -127,7 +128,7 @@ class WarcIOSpec extends AnyFunSuite {
   }
 
   test("WARC archives feed the engine: recordsToPages round-trips the pages table") {
-    val dir = Files.createTempDirectory("graft-ingest").toString
+    val dir = ScratchDir("graft-ingest")
     val pages = PagesGen.pages(spark, 300, 10, 42L).toDF()
     WarcIO.writePages(pages, dir, recordsPerFile = 100)
     val back = WarcIO.recordsToPages(WarcIO.readRecords(spark, dir)).cache()
@@ -145,7 +146,7 @@ class WarcIOSpec extends AnyFunSuite {
 
   test("CDX crawl: remote hits become revisits without WARC-Refers-To") {
     import graft.operators.{Crawl, Frontier}
-    val dir = Files.createTempDirectory("graft-cdxwarc").toString
+    val dir = ScratchDir("graft-cdxwarc")
     val cfg = Frontier.Config(defaultBudget = 1000, sizeThreshold = 100)
     val pages = PagesGen.pages(spark, 500, 10, 42L).toDF()
     val web = Crawl.asWeb(pages).cache()
@@ -181,7 +182,7 @@ class WarcIOSpec extends AnyFunSuite {
   }
 
   test("warcinfo + filename discipline matches reference shape") {
-    val dir = Files.createTempDirectory("graft-warc2").toString
+    val dir = ScratchDir("graft-warc2")
     WarcIO.writePages(PagesGen.pages(spark, 20, 5, 42L).toDF().coalesce(1), dir)
     val f = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".warc.gz")).head
     assert(f.getName.matches("GRAFT-\\d{14}-\\d{5}-\\d{5}\\.warc\\.gz"))
@@ -213,7 +214,7 @@ class WarcIOSpec extends AnyFunSuite {
 
   test("readRecords lists the files binaryFile lists with the *.warc* glob") {
     import graft.codec.Codecs
-    val dir = Files.createTempDirectory("graft-list").toFile
+    val dir = new java.io.File(ScratchDir("graft-list"))
     writeWarc(new java.io.File(dir, "a.warc.gz"), 3, 1L, Codecs.GzipCompression)
     writeWarc(new java.io.File(dir, "b.warc.zst"), 4, 2L, Codecs.ZstdCompression())
     writeWarc(new java.io.File(dir, "c.warc"), 5, 3L, Codecs.NoCompression)
@@ -241,9 +242,9 @@ class WarcIOSpec extends AnyFunSuite {
 
   test("an empty directory reads as an empty frame with the same schema") {
     import graft.codec.Codecs
-    val empty = Files.createTempDirectory("graft-empty").toFile
+    val empty = new java.io.File(ScratchDir("graft-empty"))
     new java.io.File(empty, "sub").mkdirs()
-    val full = Files.createTempDirectory("graft-full").toFile
+    val full = new java.io.File(ScratchDir("graft-full"))
     writeWarc(new java.io.File(full, "a.warc.gz"), 2, 1L, Codecs.GzipCompression)
     val none = WarcIO.readRecords(spark, empty.getPath)
     assert(none.count() == 0L)
@@ -274,7 +275,7 @@ class WarcIOSpec extends AnyFunSuite {
     assert(loads(WarcIO.planReadTasks(files, 4, 1L << 30)).toSeq == Seq(110L, 100L, 100L, 100L))
 
     import graft.codec.Codecs
-    val dir = Files.createTempDirectory("graft-tasks").toFile
+    val dir = new java.io.File(ScratchDir("graft-tasks"))
     (0 until 6).foreach(i =>
       writeWarc(new java.io.File(dir, s"w$i.warc.gz"), 2 + i, i.toLong, Codecs.GzipCompression))
     val par = spark.sparkContext.defaultParallelism
@@ -288,7 +289,7 @@ class WarcIOSpec extends AnyFunSuite {
 
   test("read tasks open files through the session's Hadoop configuration") {
     import graft.codec.Codecs
-    val dir = Files.createTempDirectory("graft-scheme").toFile
+    val dir = new java.io.File(ScratchDir("graft-scheme"))
     writeWarc(new java.io.File(dir, "a.warc.gz"), 7, 1L, Codecs.GzipCompression)
     writeWarc(new java.io.File(dir, "b.warc.zst"), 5, 2L, Codecs.ZstdCompression())
     val hc = spark.sparkContext.hadoopConfiguration

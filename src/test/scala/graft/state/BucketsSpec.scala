@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import org.apache.spark.sql.graft.ScratchDir
 
 class BucketsSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
@@ -18,7 +18,7 @@ class BucketsSpec extends AnyFunSuite {
     // AQE wraps plans in AdaptiveSparkPlanExec (childless until executed),
     // which would make every exchange count vacuously 0 — plan statically
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val dir = Files.createTempDirectory("graft-buckets").toString
+    val dir = ScratchDir("graft-buckets")
     val docs = (0L until 500L).map(i => (i, s"digest-${i % 97}", s"text-$i"))
       .toDF("doc_id", "digest", "text")
     val cdx = (0L until 97L).map(i => (s"digest-$i", i * 10L))

@@ -91,4 +91,17 @@ class TableIOSpec extends AnyFunSuite {
     assert(resumed == expect, "durable-resumed ranks must equal the in-memory run")
     assert(TableIO.listSnapshots(s"$dir/hostrank") == Seq(0L, 1L, 2L, 3L, 4L))
   }
+
+  test("listing snapshots and committing leave no directory stream open") {
+    val t = s"${ScratchDir("graft-fds")}/t"
+    def openFds(): Int = new java.io.File("/proc/self/fd").list().length
+    // the first commit loads classes and jars, which hold fds for good
+    TableIO.commitAs(Seq((0L, "a")).toDF("k", "v"), t, 0L)
+    val before = openFds()
+    (1 to 200).foreach(_ => TableIO.listSnapshots(t))
+    (1L to 3L).foreach(id => TableIO.commitAs(Seq((id, "b")).toDF("k", "v"), t, id))
+    assert(TableIO.listSnapshots(t) == Seq(0L, 1L, 2L, 3L))
+    val after = openFds()
+    assert(after - before < 32, s"open fds went $before -> $after")
+  }
 }

@@ -5,6 +5,7 @@ import graft.sources.{Page, PagesGen}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.graft.ScratchDir
 
 class FrontierStreamSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
@@ -66,9 +67,9 @@ class FrontierStreamSpec extends AnyFunSuite {
   test("streaming frontier over the persistent SeenStore: cross-batch dedupe, exactly-once increments, restart") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Int, java.sql.Timestamp)]
-    val storeDir = java.nio.file.Files.createTempDirectory("graft-sstream-store").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sstream-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sstream-ckpt").toString
+    val storeDir = ScratchDir("graft-sstream-store")
+    val outDir = ScratchDir("graft-sstream-out")
+    val ckpt = ScratchDir("graft-sstream-ckpt")
     val cfg = graft.operators.Frontier.Config(defaultBudget = 100, saltBuckets = 4, seenParts = 8)
     val ts = java.sql.Timestamp.valueOf("2022-03-20 03:55:45")
     def urls(r: Range) = r.map(i => (s"https://host${i % 5}.example/p/$i", 0, ts))
@@ -110,7 +111,7 @@ class FrontierStreamSpec extends AnyFunSuite {
     import FrontierStream._
     import org.apache.spark.sql.streaming.Trigger
     val input = MemoryStream[CacheEvent]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ttl").toString
+    val ckpt = ScratchDir("graft-ttl")
     val collected = new scala.collection.mutable.ArrayBuffer[CacheOut]()
     def runOnce(): Unit = {
       val q = ttlCache(spark, input.toDS(), ttlMs = 600000L)

@@ -4,6 +4,7 @@ import graft.codec.{Codecs, Digests, HttpCodec, WarcCodec}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import org.apache.spark.sql.graft.ScratchDir
 
 /** Extract-sink filename fidelity (/root/reference/cmd/extract.go:116-268)
   * and the payload-digest verify path (/root/reference/cmd/verify.go:167-252). */
@@ -37,8 +38,8 @@ class WarcToolSpec extends AnyFunSuite {
   }
 
   test("extract --hash-suffix: same-name different-content gets a digest suffix") {
-    val dir = Files.createTempDirectory("wt-extract").toString
-    val warc = Files.createTempDirectory("wt-warc").resolve("t.warc.gz").toString
+    val dir = ScratchDir("graft-wt-extract")
+    val warc = java.nio.file.Paths.get(ScratchDir("graft-wt-warc")).resolve("t.warc.gz").toString
     def response(url: String, body: String): graft.codec.WarcRecord = {
       val html = HttpCodec.buildResponse(200, "OK",
         Seq("Content-Type" -> "text/plain",
@@ -67,8 +68,8 @@ class WarcToolSpec extends AnyFunSuite {
     // digest compare of every later record must run against a COMPLETE
     // prior file (per-path latch + temp-file atomic rename), so the final
     // state is exactly one file per distinct payload, each intact
-    val dir = Files.createTempDirectory("wt-race").toString
-    val warc = Files.createTempDirectory("wt-warc").resolve("race.warc.gz").toString
+    val dir = ScratchDir("graft-wt-race")
+    val warc = java.nio.file.Paths.get(ScratchDir("graft-wt-warc")).resolve("race.warc.gz").toString
     def response(url: String, body: String): graft.codec.WarcRecord = {
       val html = HttpCodec.buildResponse(200, "OK",
         Seq("Content-Type" -> "text/plain",
@@ -110,8 +111,8 @@ class WarcToolSpec extends AnyFunSuite {
   }
 
   test("extract: multiple input files under --threads, reference argv semantics") {
-    val dir = Files.createTempDirectory("wt-multi").toString
-    val warcDir = Files.createTempDirectory("wt-multi-warc")
+    val dir = ScratchDir("graft-wt-multi")
+    val warcDir = java.nio.file.Paths.get(ScratchDir("graft-wt-multi-warc"))
     def writeWarc(path: String, urls: Seq[(String, String)]): Unit = {
       val out = new java.io.FileOutputStream(path)
       val w = Codecs.memberWriter(out, Codecs.GzipCompression)
@@ -137,7 +138,7 @@ class WarcToolSpec extends AnyFunSuite {
   }
 
   test("extract skips existing files by default; --allow-overwrite restores overwrite") {
-    val warcDir = Files.createTempDirectory("wt-ow-warc")
+    val warcDir = java.nio.file.Paths.get(ScratchDir("graft-wt-ow-warc"))
     def writeWarc(path: String, body: String): Unit = {
       val out = new java.io.FileOutputStream(path)
       val w = Codecs.memberWriter(out, Codecs.GzipCompression)
@@ -156,13 +157,13 @@ class WarcToolSpec extends AnyFunSuite {
     writeWarc(f2, "replacement")
     // default: second extraction must NOT clobber the existing file
     // (/root/reference/cmd/extract.go:232-235)
-    val dir1 = Files.createTempDirectory("wt-ow1").toString
+    val dir1 = ScratchDir("graft-wt-ow1")
     WarcTool.main(Array("extract", f1, dir1))
     WarcTool.main(Array("extract", f2, dir1))
     assert(new String(Files.readAllBytes(
       new java.io.File(dir1, "f.txt").toPath), UTF_8) == "original")
     // --allow-overwrite: it may
-    val dir2 = Files.createTempDirectory("wt-ow2").toString
+    val dir2 = ScratchDir("graft-wt-ow2")
     WarcTool.main(Array("extract", f1, dir2))
     WarcTool.main(Array("extract", f2, dir2, "--allow-overwrite"))
     assert(new String(Files.readAllBytes(
@@ -170,7 +171,7 @@ class WarcToolSpec extends AnyFunSuite {
   }
 
   test("verify --threads and per-file reports") {
-    val dir = Files.createTempDirectory("wt-vthreads")
+    val dir = java.nio.file.Paths.get(ScratchDir("graft-wt-vthreads"))
     val f = dir.resolve("multi.warc.gz").toString
     val out = new java.io.FileOutputStream(f)
     val w = Codecs.memberWriter(out, Codecs.GzipCompression)
@@ -193,7 +194,7 @@ class WarcToolSpec extends AnyFunSuite {
   }
 
   test("verify rejects WARC versions outside {1.0, 1.1}") {
-    val dir = Files.createTempDirectory("wt-version")
+    val dir = java.nio.file.Paths.get(ScratchDir("graft-wt-version"))
     val page = graft.sources.PagesGen.genPage(7L, 100L, 10, 42L)
     val rec = graft.sources.WarcIO.pageToRecord(page.url, page.warc_ts, page.html)
     def writeOne(path: String, r: graft.codec.WarcRecord): Unit = {
@@ -239,7 +240,7 @@ class WarcToolSpec extends AnyFunSuite {
   }
 
   test("verify: payload-digest recheck passes graft archives, catches tampering") {
-    val dir = Files.createTempDirectory("wt-verify")
+    val dir = java.nio.file.Paths.get(ScratchDir("graft-wt-verify"))
     val good = dir.resolve("good.warc.gz").toString
     val page = graft.sources.PagesGen.genPage(5L, 100L, 10, 42L)
     val rec = graft.sources.WarcIO.pageToRecord(page.url, page.warc_ts, page.html)
