@@ -1,6 +1,6 @@
 package graft.codec
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, InputStream, OutputStream, PushbackInputStream}
+import java.io.{ByteArrayInputStream, EOFException, InputStream, OutputStream, PushbackInputStream}
 import java.util.zip.{CRC32, Deflater, GZIPInputStream}
 
 /** Compression codecs for WARC members, mirroring the reference's
@@ -58,11 +58,9 @@ object Codecs {
     in.unread(head, 0, n)
     if (n >= 2 && head(0) == 0x1f.toByte && head(1) == 0x8b.toByte)
       new GZIPInputStream(in, 1 << 16)
-    else if (n >= 4 && le32(head, 0) == 0xfd2fb528L) { // zstd frame magic
-      val z = new com.github.luben.zstd.ZstdInputStream(in)
-      z.setContinuous(true)
-      z
-    } else if (n >= 4 && le32(head, 0) == DictSkippableMagic) {
+    else if (n >= 4 && le32(head, 0) == 0xfd2fb528L) // zstd frame magic
+      new ZstdFrames(in, None)
+    else if (n >= 4 && le32(head, 0) == DictSkippableMagic) {
       // skippable frame: magic(4) + frameSize(4 LE) + zstd-compressed dict
       val hdr = new Array[Byte](8)
       if (readAtMost(in, hdr, 8) != 8) throw new EOFException("truncated dict frame header")
@@ -71,10 +69,7 @@ object Codecs {
       if (readAtMost(in, compressedDict, frameSize) != frameSize)
         throw new EOFException("truncated dict frame")
       val dict = zstdDecompressAll(compressedDict)
-      val z = new com.github.luben.zstd.ZstdInputStream(in)
-      z.setContinuous(true)
-      z.setDict(dict)
-      z
+      new ZstdFrames(in, Some(dict))
     } else if (n >= 3 && head(0) == 'B' && head(1) == 'Z' && head(2) == 'h')
       new org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream(in, true)
     else if (n >= 6 && head(0) == 0xfd.toByte && head(1) == '7' && head(2) == 'z' &&
@@ -83,16 +78,56 @@ object Codecs {
     else in
   }
 
+  /** Consecutive zstd frames, decoded through a ZstdDecompressCtx that
+    * reports where each frame ends, so a source that ends inside a frame
+    * raises an EOFException as gzip does. ZstdInputStream cannot tell:
+    * in continuous mode it returns end of stream on a cut frame, and
+    * otherwise still does when the cut frame's bytes arrived in the same
+    * source read as the end of the frame before it. Either way a file cut
+    * inside its last member read one record short, without an error. */
+  private final class ZstdFrames(in: InputStream, dict: Option[Array[Byte]]) extends InputStream {
+    private val ctx = new com.github.luben.zstd.ZstdDecompressCtx()
+    dict.foreach(d => ctx.loadDict(d))
+    private val chunk = new Array[Byte](1 << 17)
+    private val src = java.nio.ByteBuffer.allocateDirect(1 << 17).flip()
+    private val dst = java.nio.ByteBuffer.allocateDirect(1 << 17).flip()
+    private var frameDone = true // no frame begun, or the last one ended and flushed
+    private var dstFilled = false // the last call filled dst: an unfinished frame may hold more output
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      if (len == 0) return 0
+      while (!dst.hasRemaining) {
+        if (!src.hasRemaining && (frameDone || !dstFilled)) {
+          val n = in.read(chunk)
+          if (n == -1) {
+            if (frameDone) return -1
+            throw new EOFException("zstd source ends inside a frame")
+          }
+          src.clear()
+          src.put(chunk, 0, n).flip()
+        }
+        dst.clear()
+        frameDone = ctx.decompressDirectByteBufferStream(dst, src)
+        dstFilled = !dst.hasRemaining
+        dst.flip()
+      }
+      val n = math.min(len, dst.remaining)
+      dst.get(b, off, n)
+      n
+    }
+
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) == -1) -1 else one(0) & 0xff
+    }
+
+    override def close(): Unit = try in.close() finally ctx.close()
+  }
+
   /** Decompress a whole zstd payload of unknown decompressed size. */
   def zstdDecompressAll(bytes: Array[Byte]): Array[Byte] = {
-    val in = new com.github.luben.zstd.ZstdInputStream(new ByteArrayInputStream(bytes))
-    in.setContinuous(true)
-    val out = new ByteArrayOutputStream(bytes.length * 4)
-    val buf = new Array[Byte](1 << 16)
-    var r = in.read(buf)
-    while (r != -1) { out.write(buf, 0, r); r = in.read(buf) }
-    in.close()
-    out.toByteArray
+    val in = new ZstdFrames(new ByteArrayInputStream(bytes), None)
+    try in.readAllBytes() finally in.close()
   }
 
   // --- per-member writers ---------------------------------------------------

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.GraftFunctions._
-import graft.state.{DigestIndex, Durable, SeenStore, TableIO}
+import graft.state.{DigestIndex, SeenStore, TableIO}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -130,6 +130,18 @@ object Crawl {
         (col("depth") + 1).as("depth"),
         col("page_ts").as("warc_ts"))
 
+  /** Pin one round's rows. With a table: a TableIO commit at snapshot id
+    * `id`, read back, so downstream lineage is a file scan that survives
+    * executor loss and feeds resume. Without: an eager localCheckpoint,
+    * which truncates the plan but is lost with its executor. */
+  private def pin(df: DataFrame, table: Option[String], id: Long,
+                  counters: Map[String, Long] = Map.empty): DataFrame = table match {
+    case Some(t) =>
+      TableIO.commitAs(df, t, id, counters)
+      TableIO.read(df.sparkSession, t, Some(id)).get
+    case None => df.localCheckpoint(eager = true)
+  }
+
   /** Run `maxRounds` rounds from a seed list (depth 0, discovered at
     * `PagesGen.BaseEpochSec`). The seen set grows by O(|new|) append-only
     * increments in one SeenStore: `stateDir + "/seen"`, or without
@@ -212,7 +224,7 @@ object Crawl {
             DigestIndex.cdx(spark, ix, before = Some(r.toLong)).getOrElse(DigestIndex.emptyCdx(spark)))
           val out = round(frontier, web, robots, politeness, cfg, seenStore = Some(store), cdx = cdx)
           // Pin this round's rows BEFORE release() so the round cache can be
-          // dropped below. Durable (stateDir set): TableIO snapshot keyed by
+          // dropped below. With stateDir set: a TableIO snapshot keyed by
           // round — survives executor loss and feeds resume; committed FIRST
           // so a crash before the frontier/seen commits leaves only an
           // orphan that the replayed round idempotently overwrites.
@@ -222,7 +234,7 @@ object Crawl {
           // A3 counters ride this SAME materialization via observe (the old
           // separate aggregation job per round is gone).
           val obs = org.apache.spark.sql.Observation()
-          val roundFetched = Durable.pin(out.fetched.withColumn("round", lit(r))
+          val roundFetched = pin(out.fetched.withColumn("round", lit(r))
             .observe(obs, counterAggs.head, counterAggs.tail: _*), fetchedTable, r.toLong)
           val counters = countersFromObs(obs.get)
           allCounters :+= counters
@@ -258,7 +270,7 @@ object Crawl {
             // resume reads, or a localCheckpoint that truncates the round's
             // lineage before release()); its row count rides the same job
             val nfObs = org.apache.spark.sql.Observation()
-            frontier = Durable.pin(nextFrontier.observe(nfObs, count(lit(1)).as("rows")),
+            frontier = pin(nextFrontier.observe(nfObs, count(lit(1)).as("rows")),
               frontierTable, r.toLong, Map("round" -> r.toLong))
             frontierCount = nfObs.get("rows").asInstanceOf[Long]
             store.append(out.newSeen, r.toLong, counters)

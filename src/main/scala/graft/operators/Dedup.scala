@@ -665,60 +665,34 @@ object Dedup {
     * two shuffles on bounded keys and ONE driver action: the convergence
     * flag rides the jumped rows (`changed = rep != old_rep`) and is read
     * off the just-materialized result — no separate re-join-and-count job.
-    * Both the edge set and each round's result are eagerly
-    * locally-checkpointed, not merely persisted: persist caches DATA but
-    * leaves the LOGICAL plan intact, so every iteration would re-analyze
-    * the full upstream candidate-generation tree (the LSH pipeline) plus
-    * a lineage that triples per round — checkpointing replaces both with
-    * leaf scans, keeping per-round driver planning O(1).
+    * Both the edge set (eagerly) and each round's result (lazily, its
+    * convergence count materializes it) are locally checkpointed, not
+    * merely persisted: persist caches DATA but leaves the LOGICAL plan
+    * intact, so every iteration would re-analyze the full upstream
+    * candidate-generation tree (the LSH pipeline) plus a lineage that
+    * triples per round — checkpointing replaces both with leaf scans,
+    * keeping per-round driver planning O(1).
     */
-  def duplicateClusters(pairs: DataFrame, maxIters: Int = 25, ckptEvery: Int = 1,
-                        stateDir: Option[String] = None,
-                        inputFingerprint: Option[Long] = None): DataFrame = {
+  def duplicateClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val spark = pairs.sparkSession
-    val edgeTable = stateDir.map(_ + "/cc_edges")
-    val compTable = stateDir.map(_ + "/cc_comp")
-    // durable resume: the committed edge set + the last committed labels.
-    // Skips re-running the (expensive) candidate-generation plan entirely;
-    // the first resumed iteration re-derives convergence, so a run that
-    // had already converged terminates after one no-op round.
-    // `inputFingerprint` (when the caller supplies one — fingerprint a
-    // CHEAP upstream, e.g. the source docs, never the LSH pair plan this
-    // resume exists to skip) is recorded at iteration 0 and validated
-    // here, so resuming a dir written for different pairs fails loudly.
-    val resumed = graft.state.Durable.resume(
-      spark, compTable, maxIters.toLong, inputFingerprint)
-    val edges = resumed match {
-      case Some(_) =>
-        graft.state.TableIO.read(spark, edgeTable.get, Some(0L)).get
-      case None =>
-        // the symmetric-edge union references `pairs` twice; materialize
-        // the (small) pair list once so an expensive candidate-generation
-        // plan (LSH + verify joins) is never evaluated per branch
-        val p0 = pairs.select(col("id_a"), col("id_b")).persist(lvl)
-        p0.count()
-        val e = graft.state.Durable.pin(
-          p0.select(col("id_a").as("src"), col("id_b").as("dst"))
-            .unionByName(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
-            .distinct(),
-          edgeTable, 0L)
-        p0.unpersist()
-        e
-    }
-    var comp = resumed.map(_._2).getOrElse(
-      // lazy: iteration 1's convergence count is the immediate single
-      // consumer (edges above stays EAGER — it must materialize while the
-      // pair list is still persisted, or the union's two branches would
-      // re-run the LSH plan)
-      graft.state.Durable.pin(
-        edges.select(col("src").as("id")).distinct().withColumn("rep", col("id")),
-        compTable, 0L,
-        graft.state.Durable.fingerprintCounters(inputFingerprint),
-        eager = false))
-    var prev: Option[DataFrame] = None
+    // the symmetric-edge union references `pairs` twice; materialize the
+    // (small) pair list once so an expensive candidate-generation plan
+    // (LSH + verify joins) is never evaluated per branch
+    val p0 = pairs.select(col("id_a"), col("id_b")).persist(lvl)
+    p0.count()
+    val edges = p0.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .distinct()
+      .localCheckpoint(true)
+    p0.unpersist()
+    // lazy: iteration 1's convergence count is the immediate single
+    // consumer (edges above stays EAGER — it must materialize while the
+    // pair list is still persisted, or the union's two branches would
+    // re-run the LSH plan)
+    var comp = edges.select(col("src").as("id")).distinct().withColumn("rep", col("id"))
+      .localCheckpoint(false)
     var converged = false
-    var i = resumed.map(_._1.toInt).getOrElse(0)
+    var i = 0
     while (!converged && i < maxIters) {
       // neighbor-min: the smallest rep among self and direct neighbors
       val nbrMin = edges.join(comp, edges("src") === comp("id"))
@@ -730,31 +704,22 @@ object Dedup {
           least(col("rep"), coalesce(col("nbr_rep"), col("rep"))).as("rep"))
         .persist(lvl)
       // pointer jump: rep := rep(rep) — halves remaining path lengths; the
-      // convergence flag is computed in the SAME pass
+      // convergence flag is computed in the SAME pass. Lazy checkpoint: the
+      // convergence count below is the immediate single consumer and
+      // materializes every partition — one fewer job per round than an
+      // eager pin
       val parents = stepped.select(col("id").as("pid"), col("rep").as("prep"))
-      val jumped0 = stepped.join(parents, stepped("rep") === parents("pid"), "left")
+      val jumped = stepped.join(parents, stepped("rep") === parents("pid"), "left")
         .select(stepped("id"),
           coalesce(col("prep"), stepped("rep")).as("rep"),
           (coalesce(col("prep"), stepped("rep")) =!= col("old_rep")).as("changed"))
-      val jumped =
-        // lazy checkpoint: the convergence count below is the immediate
-        // single consumer and materializes every partition — same cache
-        // coverage as the former eager form, one fewer job per round
-        if (stateDir.isEmpty && (i + 1) % ckptEvery == 0) jumped0.localCheckpoint(false)
-        else jumped0.persist(lvl)
-      // the one action of the round: fully materializes the cache (count
-      // scans every partition — isEmpty would stop at the first hit and
-      // leave the cache partial) AND answers "did anything move?"
+        .localCheckpoint(false)
+      // the one action of the round: fully materializes the checkpoint
+      // (count scans every partition — isEmpty would stop at the first hit
+      // and leave it partial) AND answers "did anything move?"
       converged = jumped.filter(col("changed")).count() == 0L
       stepped.unpersist()
-      prev.foreach(_.unpersist())
-      prev = Some(jumped)
       comp = jumped.drop("changed")
-      // durable mode: labels after iteration i+1 become snapshot i+1 (the
-      // persisted `jumped` backs the write, so nothing recomputes), and
-      // downstream lineage is the committed file scan
-      if (stateDir.isDefined)
-        comp = graft.state.Durable.pin(comp, compTable, i + 1L)
       i += 1
     }
     comp.select(col("id"), col("rep").as("cluster_rep"))

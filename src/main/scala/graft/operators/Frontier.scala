@@ -241,15 +241,10 @@ object Frontier {
     * codegen apply to the hook exactly as to built-in filters.
     *
     * Kept and rejected are two plans over the same input, which therefore
-    * EVALUATES TWICE: fine for deterministic sources (parquet scans, pure
-    * projections — every source in this repo), but a nondeterministic
-    * upstream (sampling, a re-fetch) could emit rows to neither/both
-    * sides. For those, pass `pin = true`: the marked frame is eagerly
-    * materialized once (localCheckpoint) before splitting, making the
-    * partition exact at the cost of one materialization. */
-  def applyDiscard(df: DataFrame, reason: Column, pin: Boolean = false): Discarded = {
-    val marked0 = df.withColumn("__reason", reason)
-    val marked = if (pin) marked0.localCheckpoint(true) else marked0
+    * evaluates twice: the split is exact for a deterministic upstream
+    * (every source in this repo), not for a sampling or re-fetching one. */
+  def applyDiscard(df: DataFrame, reason: Column): Discarded = {
+    val marked = df.withColumn("__reason", reason)
     Discarded(
       kept = marked.filter(col("__reason").isNull).drop("__reason")
         .observe("discard_kept", count(lit(1)).as("rows")),
@@ -278,9 +273,7 @@ object Frontier {
     * leaf-sized (iterative-persist lesson: persist caches data, not
     * plans). Returns (host, rank) with rank summing to ≈ scale. */
   def hostRank(edges: DataFrame, iterations: Int = 3,
-               scale: Long = 1000000000000L,
-               stateDir: Option[String] = None): DataFrame = {
-    val rankTable = stateDir.map(_ + "/hostrank")
+               scale: Long = 1000000000000L): DataFrame = {
     val e = edges.select(col("src_host"), col("dst_host"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // lazy checkpoints: plan truncation is identical, but materialization
@@ -298,22 +291,8 @@ object Frontier {
     val outdeg = e.groupBy(col("src_host")).agg(count(lit(1)).as("od"))
       .localCheckpoint(false)
     val base = (15L * (scale / n)) / 100L
-    // durable mode: iteration i's ranks are a TableIO snapshot (id = i), so
-    // a rerun over the same edges continues from the last committed
-    // iteration instead of restarting (and survives executor loss — the
-    // localCheckpoint path does not; see graft.state.Durable). The edge
-    // set's content fingerprint rides iteration 0's manifest and is
-    // re-derived on resume (one aggregate over the persisted edges):
-    // resuming a dir written for different edges fails loudly instead of
-    // silently returning the other graph's ranks.
-    val fp = rankTable.map(_ => graft.state.Durable.fingerprint(e))
-    val resumed = graft.state.Durable.resume(
-      edges.sparkSession, rankTable, iterations.toLong, fp)
-    var rank = resumed.map(_._2).getOrElse(
-      graft.state.Durable.pin(hosts.withColumn("rank", lit(scale / n)), rankTable, 0L,
-        graft.state.Durable.fingerprintCounters(fp), eager = false))
-    var i = resumed.map(_._1.toInt).getOrElse(0)
-    while (i < iterations) {
+    var rank = hosts.withColumn("rank", lit(scale / n)).localCheckpoint(false)
+    for (i <- 0 until iterations) {
       val contrib = e
         .join(rank.withColumnRenamed("host", "src_host"), "src_host")
         .join(outdeg, "src_host")
@@ -324,12 +303,11 @@ object Frontier {
       // the whole chain materializes while `e` is still persisted — a lazy
       // final pin would let the e.unpersist() below force every deferred
       // iteration to re-derive the edge frame from its source
-      rank = graft.state.Durable.pin(hosts
+      rank = hosts
         .join(contrib, Seq("host"), "left")
         .select(col("host"),
-          (lit(base) + expr(s"(85 * coalesce(in_sum, 0L)) div 100")).as("rank")),
-        rankTable, i + 1L, eager = i + 1 >= iterations)
-      i += 1
+          (lit(base) + expr(s"(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
+        .localCheckpoint(eager = i + 1 == iterations)
     }
     e.unpersist()
     rank

@@ -99,8 +99,7 @@ object Similarity {
     * the same driver footprint ivfAssign's broadcast already pays. */
   def refineCentroids(corpus: DataFrame, centroids: DataFrame, iterations: Int = 3,
                       idCol: String = "vec_id", vecCol: String = "embedding",
-                      scaleBits: Int = 20,
-                      stateDir: Option[String] = None): DataFrame = {
+                      scaleBits: Int = 20): DataFrame = {
     val scale = (1L << scaleBits).toDouble
     // EXECUTOR-SIDE codebook rebuild: the per-(cell, dim) fixed-point sums
     // stay distributed — grouped back into arrays and joined against the
@@ -109,20 +108,12 @@ object Similarity {
     // codebook the old collect() path shipped ~50M aggregate rows per
     // iteration through the driver; now the driver touches the codebook
     // only where it must — ivfAssign's broadcast of the (codebook-sized)
-    // centroid table. Each iteration is pinned (Durable: TableIO snapshot
-    // when stateDir is set — fault-tolerant, resumable by iteration id —
-    // else an eager localCheckpoint), so plans stay leaf-sized and the
-    // integer arithmetic ((s div n) truncating, like the sequential
-    // replay) keeps the result bitwise reproducible at any parallelism.
-    val table = stateDir.map(_ + "/ivf_codebook")
-    val resumed = graft.state.Durable.resume(
-      corpus.sparkSession, table, iterations.toLong)
-    var cents = resumed.map(_._2).getOrElse(
-      graft.state.Durable.pin(
-        centroids.select(col("cell_id"), col("centroid")), table, 0L,
-        eager = false))
-    var it = resumed.map(_._1.toInt).getOrElse(0)
-    while (it < iterations) {
+    // centroid table. Each iteration is pinned with a localCheckpoint, so
+    // plans stay leaf-sized, and the integer arithmetic ((s div n)
+    // truncating, like the sequential replay) keeps the result bitwise
+    // reproducible at any parallelism.
+    var cents = centroids.select(col("cell_id"), col("centroid")).localCheckpoint(false)
+    for (_ <- 0 until iterations) {
       val assigned = ivfAssign(corpus, cents, idCol, vecCol)
       val means = assigned
         .select(col("cell_id"), posexplode(col(vecCol)).as(Seq("pos", "v")))
@@ -139,12 +130,9 @@ object Similarity {
       // lazy pin: ivfAssign's codebook collect (the very next statement of
       // the next iteration, or the caller's broadcast) materializes it —
       // saves one blocking job per Lloyd iteration
-      cents = graft.state.Durable.pin(
-        cents.join(rebuilt, Seq("cell_id"), "left")
-          .select(col("cell_id"),
-            coalesce(col("__new"), col("centroid")).as("centroid")),
-        table, it + 1L, eager = false)
-      it += 1
+      cents = cents.join(rebuilt, Seq("cell_id"), "left")
+        .select(col("cell_id"), coalesce(col("__new"), col("centroid")).as("centroid"))
+        .localCheckpoint(false)
     }
     cents
   }

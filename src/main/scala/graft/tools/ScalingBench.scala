@@ -28,9 +28,7 @@ object ScalingBench {
   private val Samples = 3
 
   def runAt(cores: Int, nPages: Long): (Double, Double) = {
-    val spark = GraftSession.builder(s"local[$cores]", cores)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cores]", cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.registerAll(spark)
     try {

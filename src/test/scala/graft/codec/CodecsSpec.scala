@@ -47,6 +47,19 @@ class CodecsSpec extends AnyFunSuite {
   test("zstd members roundtrip through sniffing reader")(
     assertRoundtrip(Codecs.ZstdCompression(None)))
 
+  test("zstd frames that end where the reader's output buffer fills still end cleanly") {
+    // 128 KiB and 256 KiB members: every frame ends exactly at a full
+    // 128 KiB output buffer, the last one with the source used up
+    val payloads = Seq(1 << 17, 1 << 18, 1 << 17).zipWithIndex
+      .map { case (n, i) => Array.fill(n)(('a' + i).toByte) }
+    val bos = new ByteArrayOutputStream()
+    val w = Codecs.memberWriter(bos, Codecs.ZstdCompression(None))
+    payloads.foreach(w.writeMember)
+    w.close()
+    val back = Codecs.sniffStream(new java.io.ByteArrayInputStream(bos.toByteArray)).readAllBytes()
+    assert(java.util.Arrays.equals(back, payloads.flatten.toArray))
+  }
+
   test("zstd + embedded dictionary: skippable frame with the reference magic") {
     // a dictionary biased toward the payload vocabulary
     val dict = ("payload WARC-Type resource example.com " * 200).getBytes(UTF_8)

@@ -3,7 +3,6 @@ package graft.operators
 import graft.GraftSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.graft.ScratchDir
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
@@ -223,63 +222,22 @@ class DedupSpec extends AnyFunSuite {
     assert(comp.size == 18, "only ids that appear in pairs are assigned")
   }
 
-  test("duplicate clusters durable state: resume provably skips candidate generation") {
-    import spark.implicits._
-    val chain = (1 until 12).map(i => (i.toLong, (i + 1).toLong))
-    val pairs = (chain ++ Seq((40L, 41L))).toDF("id_a", "id_b")
-    val expect = Dedup.duplicateClusters(pairs).as[(Long, Long)].collect().toMap
-    val dir = ScratchDir("graft-cc")
-    // phase 1: one iteration only, committed as durable snapshots
-    Dedup.duplicateClusters(pairs, maxIters = 1, stateDir = Some(dir)).collect()
-    assert(graft.state.TableIO.listSnapshots(s"$dir/cc_comp") == Seq(0L, 1L))
-    // phase 2 resumes with a POISONED pair plan — evaluating it throws, so
-    // completing correctly proves the resume read only durable state (the
-    // committed edge set + labels), never the candidate-generation plan
-    val boom = org.apache.spark.sql.functions.udf { l: Long =>
-      sys.error("poisoned: resume must not evaluate pairs"); l
+  test("hostRank, duplicateClusters and refineCentroids release every frame they persist") {
+    val cache = spark.sharedState.cacheManager
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")).toDF("src_host", "dst_host")
+    val chain = (1 until 12).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
+    val corpus = (0 until 40).map(i => (i.toLong, Array(i % 5, i / 5, 1).map(_.toFloat)))
+      .toDF("vec_id", "embedding")
+    val runs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "hostRank" -> (() => Frontier.hostRank(edges, iterations = 3)),
+      "duplicateClusters" -> (() => Dedup.duplicateClusters(chain)),
+      "refineCentroids" -> (() => Similarity.refineCentroids(corpus,
+        Similarity.initCentroids(corpus, nCells = 4, "vec_id", "embedding"), iterations = 2)))
+    for ((name, run) <- runs) {
+      spark.catalog.clearCache()
+      assert(run().collect().nonEmpty, name)
+      assert(cache.isEmpty, s"$name left a cached frame behind")
     }
-    val poisoned = pairs.withColumn("id_a", boom(col("id_a")))
-    val resumed = Dedup.duplicateClusters(poisoned, stateDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(resumed == expect, "durable-resumed labels must equal the in-memory run")
-  }
-
-  test("duplicate clusters durable state: fingerprinted resume rejects a stale dir") {
-    import spark.implicits._
-    val pairs = (1 until 8).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
-    val dir = ScratchDir("graft-cc-fp")
-    // callers fingerprint a CHEAP upstream (here: the pairs themselves —
-    // in production, the source docs the LSH plan derives from)
-    val fp = graft.state.Durable.fingerprint(pairs)
-    Dedup.duplicateClusters(pairs, maxIters = 1, stateDir = Some(dir),
-      inputFingerprint = Some(fp)).collect()
-    // matching fingerprint: resumes fine
-    Dedup.duplicateClusters(pairs, stateDir = Some(dir),
-      inputFingerprint = Some(fp)).collect()
-    // different input → different fingerprint → loud failure, never stale labels
-    val e = intercept[IllegalArgumentException] {
-      Dedup.duplicateClusters(pairs, stateDir = Some(dir),
-        inputFingerprint = Some(fp + 1L))
-    }
-    assert(e.getMessage.contains("DIFFERENT input"))
-  }
-
-  test("fingerprint: even-multiplicity rows never cancel; order still irrelevant") {
-    import spark.implicits._
-    // xor-only fingerprints collapse any row appearing an even number of
-    // times: {A→B, A→B, C→D} and {E→F, E→F, C→D} would both reduce to
-    // h(C→D) with equal counts — a silent stale-resume acceptance. The
-    // sum term must separate them.
-    val a = Seq(("A", "B"), ("A", "B"), ("C", "D")).toDF("src", "dst")
-    val b = Seq(("E", "F"), ("E", "F"), ("C", "D")).toDF("src", "dst")
-    assert(graft.state.Durable.fingerprint(a) != graft.state.Durable.fingerprint(b),
-      "duplicate-row cancellation: structurally different inputs collided")
-    // order-independence and empty-frame stability are retained
-    val a2 = Seq(("C", "D"), ("A", "B"), ("A", "B")).toDF("src", "dst")
-    assert(graft.state.Durable.fingerprint(a) == graft.state.Durable.fingerprint(a2))
-    val empty = a.filter(lit(false))
-    assert(graft.state.Durable.fingerprint(empty) ==
-      graft.state.Durable.fingerprint(empty.orderBy("src")))
   }
 
   test("embedding near-dup via banded hyperplane LSH: recall ≥ 0.9 on noisy pairs") {

@@ -364,23 +364,6 @@ class FrontierSpec extends AnyFunSuite {
     assert(got2 == got, "integer ranks must be partition-layout independent")
   }
 
-  test("hostRank durable resume: different edges fail loudly, same edges resume") {
-    val dir = ScratchDir("graft-hr-fp")
-    val edges1 = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src_host", "dst_host")
-    val r1 = Frontier.hostRank(edges1, iterations = 2, stateDir = Some(dir))
-      .as[(String, Long)].collect().toMap
-    // same edges: resumes (and returns the committed iteration-2 ranks)
-    val r2 = Frontier.hostRank(edges1, iterations = 2, stateDir = Some(dir))
-      .as[(String, Long)].collect().toMap
-    assert(r1 == r2)
-    // DIFFERENT edges against the same dir: must refuse, not return stale ranks
-    val edges2 = Seq(("x", "y"), ("y", "x")).toDF("src_host", "dst_host")
-    val e = intercept[IllegalArgumentException] {
-      Frontier.hostRank(edges2, iterations = 2, stateDir = Some(dir))
-    }
-    assert(e.getMessage.contains("DIFFERENT input"))
-  }
-
   test("scheduleByAuthority: broadcast authority dim + TakeOrderedAndProject top-k") {
     import spark.implicits._
     val frontier = PagesGen.urls(spark, 3000, 50, 42L)

@@ -116,6 +116,28 @@ class WarcIOSpec extends AnyFunSuite {
     }
   }
 
+  test("a WARC cut inside its last compression member fails the read with an EOFException") {
+    import graft.codec.Codecs
+    val gzipMagic = Array(0x1f, 0x8b, 0x08).map(_.toByte)
+    val zstdMagic = Array(0x28, 0xb5, 0x2f, 0xfd).map(_.toByte)
+    val dict = Some(("payload doc example " * 300).getBytes("UTF-8"))
+    for ((compression, magic) <- Seq(Codecs.GzipCompression -> gzipMagic,
+        Codecs.ZstdCompression() -> zstdMagic, Codecs.ZstdCompression(dict) -> zstdMagic)) {
+      val dir = ScratchDir("graft-cut")
+      val pages = PagesGen.pages(spark, 20, 4, 42L).toDF().coalesce(1)
+      assert(WarcIO.writePages(pages, dir, compression = compression) == 1L)
+      val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(compression.fileExt)).head
+      val bytes = Files.readAllBytes(file.toPath)
+      // one member per record: the last magic starts the last record's
+      // member (or lies inside it), so the cut lands inside that member
+      val last = bytes.indices.lastIndexWhere(i => bytes.startsWith(magic, i))
+      Files.write(file.toPath, java.util.Arrays.copyOf(bytes, last + (bytes.length - last) / 2))
+      val e = intercept[Exception](WarcIO.readRecords(spark, dir).count())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.EOFException]), s"$compression: $e")
+    }
+  }
+
   test("size-based rotation caps compressed file size") {
     val dir = ScratchDir("graft-rot")
     val pages = PagesGen.pages(spark, 400, 10, 42L).toDF().coalesce(1)

@@ -76,22 +76,6 @@ class TableIOSpec extends AnyFunSuite {
     assert(TableIO.listSnapshots(s"$dir/fetched") == Seq(0L, 1L, 2L))
   }
 
-  test("hostRank durable state: iterations are snapshots, rerun resumes not restarts") {
-    import graft.operators.Frontier
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"))
-      .toDF("src_host", "dst_host")
-    val expect = Frontier.hostRank(edges, iterations = 4)
-      .as[(String, Long)].collect().toMap
-    val dir = ScratchDir("graft-hr")
-    Frontier.hostRank(edges, iterations = 2, stateDir = Some(dir)).collect()
-    assert(TableIO.listSnapshots(s"$dir/hostrank") == Seq(0L, 1L, 2L))
-    // rerun with a larger budget: picks up at iteration 2, adds only 3..4
-    val resumed = Frontier.hostRank(edges, iterations = 4, stateDir = Some(dir))
-      .as[(String, Long)].collect().toMap
-    assert(resumed == expect, "durable-resumed ranks must equal the in-memory run")
-    assert(TableIO.listSnapshots(s"$dir/hostrank") == Seq(0L, 1L, 2L, 3L, 4L))
-  }
-
   test("listing snapshots and committing leave no directory stream open") {
     val t = s"${ScratchDir("graft-fds")}/t"
     def openFds(): Int = new java.io.File("/proc/self/fd").list().length
